@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -23,16 +25,19 @@ case class ArrayDotProduct(left: Expression, right: Expression)
   override def nullable: Boolean = true // ragged inputs yield null
   override def prettyName: String = "graft_dot"
 
+  override def checkInputDataTypes(): TypeCheckResult =
+    Seq(left, right).map(_.dataType).find {
+      case ArrayType(FloatType | DoubleType, _) => false
+      case _ => true
+    }.fold[TypeCheckResult](TypeCheckSuccess)(t =>
+      TypeCheckFailure(s"graft_dot expects array<float|double>, got ${t.catalogString}"))
+
   // element accessors per side: float arrays and double arrays are both
   // common (Spark float arithmetic promotes transform() outputs to
   // double) — reading a double array with getFloat returns garbage, so
   // the width must follow the analyzed element type
-  private def elemIsDouble(e: Expression): Boolean = e.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case ArrayType(FloatType, _) => false
-    case other => throw new IllegalArgumentException(
-      s"graft_dot expects array<float|double>, got $other")
-  }
+  private def elemIsDouble(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == DoubleType
   private lazy val leftDouble = elemIsDouble(left)
   private lazy val rightDouble = elemIsDouble(right)
 

@@ -4,6 +4,8 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import java.util.Arrays
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -38,13 +40,12 @@ case class ArrayJaccard(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_jaccard"
 
-  Seq(left, right).foreach { e =>
-    e.dataType match {
-      case ArrayType(LongType, _) => ()
-      case other => throw new IllegalArgumentException(
-        s"graft_jaccard expects array<bigint>, got $other")
-    }
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    Seq(left, right).map(_.dataType).find {
+      case ArrayType(LongType, _) => false
+      case _ => true
+    }.fold[TypeCheckResult](TypeCheckSuccess)(t =>
+      TypeCheckFailure(s"graft_jaccard expects array<bigint>, got ${t.catalogString}"))
 
   override def nullSafeEval(a: Any, b: Any): Any =
     ArrayJaccard.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])

@@ -74,8 +74,8 @@ final class ValidationEngine(
   private val trackedCheckpoints =
     scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
 
-  /** Register the checkpoint RDD backing `df` (df must be the result of an
-    * eager .localCheckpoint()) so close() can unpersist it. */
+  /** Register the checkpoint RDD backing `df` (df must be the result of a
+    * .localCheckpoint(), eager or lazy) so close() can unpersist it. */
   private def trackCp(df: DataFrame): DataFrame = {
     df.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
@@ -394,9 +394,7 @@ final class ValidationEngine(
     val key = s"${shape.id.key}@${stack.length}"
     // memoize sub-shape evaluations only: top-level (stack-empty) plans
     // stay lazy so run() still collects everything in one job.
-    // GRAFT_DISABLE_MEMO exists for A/B wall-time measurement.
-    val cacheable = stack.nonEmpty && !cyclicShapeKeys.contains(shape.id.key) &&
-      !sys.env.contains("GRAFT_DISABLE_MEMO")
+    val cacheable = stack.nonEmpty && !cyclicShapeKeys.contains(shape.id.key)
     if (cacheable) {
       val plan = focus.queryExecution.analyzed
       vioCache.synchronized {
@@ -919,15 +917,19 @@ final class ValidationEngine(
 
   /** At-scale entry point: the union of every shape's violations as a
     * DataFrame — nothing is collected to the driver. Columns: f, v, path,
-    * comp, shape, orig, constraint, msgs (term structs / keys). Callers
-    * aggregate counts, take bounded samples, or write report triples
-    * distributed; see Validator.validateFrameAtScale. */
+    * comp, shape, orig, constraint, msgs, rid, prid (term structs / keys).
+    * The frame carries a lazy tracked localCheckpoint: the first action on
+    * it evaluates the plan once and stores the rows, later actions (counts,
+    * samples, report triples) read the stored blocks, and close() frees
+    * them. Callers aggregate counts, take bounded samples, or write report
+    * triples distributed; see Validator.validateFrameAtScale. */
   def violationsFrame(): DataFrame = {
     val parts = selectedShapes.flatMap { shape =>
       if (shape.deactivated) None
       else targetsDF(shape).map(t => violations(shape, focusFilter(t)))
     }
-    if (parts.isEmpty) emptyViol else parts.reduce(_ unionByName _)
+    if (parts.isEmpty) emptyViol
+    else trackCp(parts.reduce(_ unionByName _).localCheckpoint(eager = false))
   }
 
   /** Severity of a shape key (driver-side metadata for at-scale counts). */

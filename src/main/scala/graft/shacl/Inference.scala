@@ -153,6 +153,15 @@ object OwlRlInference {
     * distributed (ConnectedComponents) instead of a driver BFS. */
   val DriverSameAsLimit = 100000
 
+  /** Round cap of the prp-trp and classification fixpoints. Both converge
+    * long before it on real ontologies; hitting it means the closure is
+    * incomplete, which must not pass silently as a conformance verdict. */
+  val MaxRounds = 50
+
+  private def capExceeded(what: String): Nothing =
+    throw new ReportableError(
+      s"$what did not converge within $MaxRounds rounds; the closure would be incomplete.")
+
   /** Unpersist the checkpoint RDD backing a superseded frame (no-op for
     * non-checkpoint frames). */
   private def freeCp(df: DataFrame): Unit =
@@ -212,13 +221,14 @@ object OwlRlInference {
     out = out.distinct().localCheckpoint()
 
     // prp-trp: per transitive property, frontier fixpoint (bounded like the
-    // engine's kleene kernel; transitive chains are shallow in practice)
+    // engine's kleene kernel). The frontier joins the closure so far, not
+    // the base edges, so the reached distance doubles per round.
     for (tp <- trans) {
       var edges = out.filter($"p" === tp).select($"s", $"o").distinct().localCheckpoint()
       var frontier = edges
       var n = 1L
       var iter = 0
-      while (n > 0 && iter < 50) {
+      while (n > 0 && iter < MaxRounds) {
         val e2 = frontier.select($"s".as("_fs"), $"o".as("_fo"))
         val next = e2.join(edges.select($"s".as("_es"), $"o".as("_eo")), $"_fo" === $"_es")
           .select($"_fs".as("s"), $"_eo".as("o")).distinct()
@@ -228,6 +238,7 @@ object OwlRlInference {
         frontier = next
         iter += 1
       }
+      if (n > 0) capExceeded(s"owl:TransitiveProperty closure of <$tp>")
       out = out.unionByName(edges.select($"s", lit(tp).as("p"), $"o")).distinct()
     }
 
@@ -312,9 +323,7 @@ object OwlRlInference {
     def classifyFixpoint(): Unit = if (hasRules) {
       var grew = true
       var round = 0
-      val maxRounds = 50 // same bound as prp-trp; deep chain/classification
-      // closures converge long before this on real ontologies
-      while (grew && round < maxRounds) {
+      while (grew && round < MaxRounds) {
         round += 1
         val typeC = lit(RDF.ty.value).as("p")
         val derived = scala.collection.mutable.ListBuffer.empty[DataFrame]
@@ -412,6 +421,7 @@ object OwlRlInference {
           grew = n > 0
         }
       }
+      if (grew) capExceeded("OWL-RL classification fixpoint")
     }
 
     // eq-rep: owl:sameAs symmetric-transitive closure, then replicate every

@@ -2,6 +2,7 @@ package graft.shacl
 
 import graft.rdf._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.ArrayType
 
 /** High-level validation entry point — the analogue of pyshacl.validate()
   * (/root/reference/pyshacl/entrypoints.py:33-256 +
@@ -84,8 +85,9 @@ object Validator {
   }
 
   /** At-scale validation outcome: nothing driver-bound except bounded
-    * aggregates. `violations` is the full distributed frame — write it to
-    * parquet / a TripleStore, or derive report triples from it. */
+    * aggregates. `violations` is the full distributed frame, already
+    * materialized by the counts job — write it to parquet / a TripleStore,
+    * or derive report triples from it, without re-running validation. */
   final case class ScaleOutcome(
     conforms: Boolean,
     totalViolations: Long,
@@ -94,8 +96,9 @@ object Validator {
     sample: Seq[ResultRow],
     sampleText: String,
     violations: DataFrame,
-    /** frees the engine's checkpointed RDDs; call AFTER `violations` has
-      * been written/collected — the frame is lazy and unusable afterwards */
+    /** frees the engine's checkpointed RDDs, the stored violations
+      * included; call AFTER `violations` (and anything derived from it) has
+      * been written/collected — the frame is unusable afterwards */
     release: () => Unit = () => ())
 
   /** Validate an arbitrarily large triples DataFrame without collecting
@@ -118,7 +121,8 @@ object Validator {
     import org.apache.spark.sql.functions._
     // detail rows are report decoration, not top-level results
     val viol = engine.violationsFrame().filter(col("prid").isNull)
-    // one distributed aggregation: (component, shape) cardinality is tiny
+    // one distributed aggregation: (component, shape) cardinality is tiny;
+    // it also fills the violations checkpoint the sample and callers read
     val counts = viol.groupBy(col("comp"), col("shape")).count().collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val total = counts.map(_._3).sum
@@ -174,25 +178,20 @@ object Validator {
         col("shape"), col("orig"), col("constraint"), col("msgs"))
         .cast("string"), 10, 16)).as("v"),
       lit(1.toByte).as("k"), lit("").as("dt"), lit("").as("lang"))
-    val base = viol.filter(col("prid").isNull).select(
-      rn.as("_rn"), col("f"), col("v"), col("path"), col("comp"), col("shape"), col("msgs"))
-    val parts = Seq(
-      base.select(col("_rn").as("s"), lit(graft.rdf.RDF.ty.value).as("p"),
-        iriT(lit(SH.ValidationResult.value)).as("o")),
-      base.select(col("_rn").as("s"), lit(SH.focusNode.value).as("p"), col("f").as("o")),
-      base.select(col("_rn").as("s"), lit(SH.resultSeverity.value).as("p"), iriT(sevCol).as("o")),
-      base.select(col("_rn").as("s"), lit(SH.sourceShape.value).as("p"),
-        keyT(col("shape")).as("o")),
-      base.select(col("_rn").as("s"), lit(SH.sourceConstraintComponent.value).as("p"),
-        iriT(col("comp")).as("o")),
-      base.filter(col("v").isNotNull)
-        .select(col("_rn").as("s"), lit(SH.value.value).as("p"), col("v").as("o")),
-      base.filter(col("path").isNotNull)
-        .select(col("_rn").as("s"), lit(SH.resultPath.value).as("p"), keyT(col("path")).as("o")),
-      base.filter(col("msgs").isNotNull)
-        .select(col("_rn").as("s"), lit(SH.resultMessage.value).as("p"),
-          explode(col("msgs")).as("o")))
-    parts.reduce(_ unionByName _)
+    // one projection and one explode, not a union of per-predicate
+    // projections: each result yields its (p, o) pairs, the optional ones
+    // null when absent and dropped after the explode
+    def po(p: Iri, o: Column) = struct(lit(p.value).as("p"), o.as("o"))
+    val pairs = concat(
+      array(po(RDF.ty, iriT(lit(SH.ValidationResult.value))), po(SH.focusNode, col("f")),
+        po(SH.resultSeverity, iriT(sevCol)), po(SH.sourceShape, keyT(col("shape"))),
+        po(SH.sourceConstraintComponent, iriT(col("comp"))),
+        when(col("v").isNotNull, po(SH.value, col("v"))),
+        when(col("path").isNotNull, po(SH.resultPath, keyT(col("path"))))),
+      transform(coalesce(col("msgs"), array().cast(ArrayType(termType))),
+        m => po(SH.resultMessage, m)))
+    viol.filter(col("prid").isNull).select(rn.as("s"), explode(pairs).as("po"))
+      .filter(col("po").isNotNull).select(col("s"), col("po.p").as("p"), col("po.o").as("o"))
   }
 
   /** Pre-validation inference (run_type.py:21-85): 'rdfs', 'owlrl', or

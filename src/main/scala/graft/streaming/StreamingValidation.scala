@@ -50,8 +50,10 @@ object StreamingValidation {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val out = Validator.validateFrameAtScale(batch.sparkSession, batch, shapesGraph, opts)
-        onBatch(BatchReport(id, out.conforms, out.totalViolations, out.countsByComponent))
-        ()
+        // free the batch's engine checkpoints and stored violations, or
+        // every micro-batch pins its blocks for the life of the stream
+        try onBatch(BatchReport(id, out.conforms, out.totalViolations, out.countsByComponent))
+        finally out.release()
       }
       .start()
 }

@@ -975,4 +975,20 @@ class OpsSpec extends AnyFunSuite {
     assert(ArrayDotProduct(lit3(Array(1f, 2f)), lit3(Array(1f, 2f, 3f))).eval(null) == null)
     assert(ArrayDotProduct(lit3(Array(1f, 2f)), lit3(Array(3f, 4f))).eval(null) == 11.0d)
   }
+
+  test("graft_jaccard / graft_dot reject wrong argument types at analysis") {
+    ArrayJaccard.ensure(spark)
+    ArrayDotProduct.ensure(spark)
+    for (q <- Seq(
+        "SELECT graft_jaccard(array(1.5D), array(2.5D))",
+        "SELECT graft_jaccard(array(1L), 'x')",
+        "SELECT graft_dot(array(1L), array(2L))")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(q).collect())
+      assert(e.getMessage.contains("expects array<"), q)
+    }
+    // accepted types still analyze
+    assert(spark.sql("SELECT graft_jaccard(array(1L, 2L), array(2L))").head().getDouble(0) == 0.5)
+    assert(spark.sql("SELECT graft_dot(array(1.0D, 2.0D), array(CAST(3 AS FLOAT), CAST(4 AS FLOAT)))")
+      .head().getDouble(0) == 11.0)
+  }
 }

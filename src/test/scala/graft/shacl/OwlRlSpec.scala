@@ -194,6 +194,32 @@ class OwlRlSpec extends AnyFunSuite {
     assert(g.contains(I("bob"), I("age"), Lit("44")))
   }
 
+  private def chainTtl(links: Int): String =
+    (0 until links).map(i => s"ex:n$i ex:next ex:n${i + 1} .").mkString("\n")
+
+  test("transitive chains close completely (the frontier joins the closure so far)") {
+    // rounds grow with log2(depth), so a 60-link chain converges in 7 of
+    // the 50 allowed rounds rather than hitting the cap
+    for ((links, pairs) <- Seq(40 -> 820, 60 -> 1830)) {
+      val g = expandTtl(prefixes + "ex:next a owl:TransitiveProperty .\n" +
+        chainTtl(links))
+      assert(g.triples(p = Some(Iri("http://ex.org/next"))).size == pairs, s"$links links")
+    }
+  }
+
+  test("a classification fixpoint past its round cap throws instead of stopping early") {
+    // ex:R = someValuesFrom ex:R on ex:next: typing moves one link back per
+    // round, so an n-link chain needs n rounds
+    def ttl(links: Int) = prefixes +
+      s"""ex:R owl:onProperty ex:next ; owl:someValuesFrom ex:R .
+         |ex:n$links a ex:R .
+         |""".stripMargin + chainTtl(links)
+    val typed = expandTtl(ttl(40)).subjectsOfType(Iri("http://ex.org/R")).size
+    assert(typed == 41)
+    val ex = intercept[ReportableError](expandTtl(ttl(60)))
+    assert(ex.getMessage.contains(s"${OwlRlInference.MaxRounds} rounds"))
+  }
+
   test("property chains: hasParent∘hasParent -> hasGrandparent") {
     val g = expandTtl(prefixes +
       """ex:hasGrandparent owl:propertyChainAxiom ( ex:hasParent ex:hasParent ) .

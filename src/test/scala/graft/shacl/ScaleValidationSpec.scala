@@ -83,6 +83,71 @@ class ScaleValidationSpec extends AnyFunSuite {
     assert(store.scanPredicate(SH.focusNode.value).count() == n)
   }
 
+  test("one-pass report triples equal triples built from the collected results") {
+    val ex = "http://ex.org/"
+    val g = TurtleParser.parseGraph(
+      s"""@prefix sh: <http://www.w3.org/ns/shacl#> .
+         |@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .
+         |@prefix ex: <$ex> .
+         |ex:a a ex:Person ; ex:age "x" ; ex:address ex:addrA .
+         |ex:b a ex:Person, ex:Agent ; ex:name "B" ; ex:age 120 ; ex:address ex:addrB .
+         |ex:c a ex:Person ; ex:name "C" ; ex:age 7 .
+         |ex:addrA ex:city "Oslo" .
+         |ex:home a ex:Home .
+         |ex:PersonShape a sh:NodeShape ; sh:targetClass ex:Person ;
+         |  sh:class ex:Agent ;
+         |  sh:property [ sh:path ex:name ; sh:minCount 1 ] ;
+         |  sh:property [ sh:path ex:age ; sh:datatype xsd:integer ; sh:severity sh:Warning ] ;
+         |  sh:property [ sh:path ex:address ; sh:node ex:AddressShape ] ;
+         |  sh:sparql [
+         |    sh:message "too old" , "far too old" ;
+         |    sh:select "SELECT $$this WHERE { $$this <${ex}age> ?a . FILTER (?a > 100) }" ;
+         |  ] .
+         |ex:HomeShape a sh:NodeShape ; sh:targetClass ex:Home ; sh:node ex:AddressShape .
+         |ex:AddressShape a sh:NodeShape ;
+         |  sh:property [ sh:path ex:city ; sh:minCount 1 ] .
+         |""".stripMargin, "http://test/")
+    val df = TriplesDF.fromMemGraph(spark, g)
+    val collected = Validator.validateFrame(spark, df, g, n => g.cbd(n))
+    val results = collected.results.filterNot(_.isDetail)
+    // the fixture covers every shape of result the report distinguishes
+    assert(results.exists(_.value.isDefined) && results.exists(_.value.isEmpty))
+    assert(results.exists(_.pathKey.isDefined) && results.exists(_.pathKey.isEmpty))
+    assert(results.exists(_.messages.size == 2))
+    assert(collected.results.exists(_.isDetail))
+
+    def key(p: Iri, o: String) = (p.value, o)
+    val expected = results.map { r =>
+      (Seq(
+        key(RDF.ty, SH.ValidationResult.key),
+        key(SH.focusNode, r.focus.key),
+        key(SH.resultSeverity, collected.sevByShape(r.shapeKey).key),
+        key(SH.sourceShape, r.shapeKey),
+        key(SH.sourceConstraintComponent, r.component.key)) ++
+        r.value.map(v => key(SH.value, v.key)) ++
+        r.pathKey.map(key(SH.resultPath, _)) ++
+        r.messages.map(m => key(SH.resultMessage, m.key))).sorted
+    }.sortBy(_.toString)
+
+    val shapes = new ShapeCompiler(g).compile()
+    val engine = new ValidationEngine(spark, df, shapes, g)
+    val viol = engine.violationsFrame()
+    assert(viol.filter($"prid".isNotNull).count() > 0) // detail rows are present
+    val triples = Validator.reportTriplesFrame(viol, shapes).collect().toSeq.map(r =>
+      (TriplesDF.nodeOf(r.getStruct(0)), r.getString(1), TriplesDF.nodeOf(r.getStruct(2)).key))
+    engine.close()
+    assert(triples.forall(_._1.isInstanceOf[BNode]))
+    // result nodes are hashed ids: compare the (s, p, o) multisets up to
+    // renaming, i.e. the multiset of per-result (p, o) multisets
+    val got = triples.groupBy(_._1).values.map(_.map(t => (t._2, t._3)).sorted).toSeq
+      .sortBy(_.toString)
+    assert(got == expected)
+
+    val atScale = Validator.validateFrameAtScale(spark, df, g)
+    assert(triples.count(_._2 == RDF.ty.value) == atScale.totalViolations)
+    atScale.release()
+  }
+
   test("at-scale outcome agrees with the collected path on a small graph") {
     val g = TurtleParser.parseGraph(
       """@prefix sh: <http://www.w3.org/ns/shacl#> .

@@ -131,8 +131,11 @@ class StreamingSpec extends AnyFunSuite {
         |  sh:property [ sh:path ex:score ; sh:datatype xsd:integer ] .
         |""".stripMargin, "http://test/")
     val reports = new java.util.concurrent.ConcurrentLinkedQueue[StreamingValidation.BatchReport]()
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.size
     val q = StreamingValidation.validateParquetStream(spark, dir.toString, shapes)(reports.add(_))
     q.awaitTermination(120000)
+    // each micro-batch frees its engine checkpoints and stored violations
+    assert(spark.sparkContext.getPersistentRDDs.size <= pinnedBefore)
     import scala.jdk.CollectionConverters._
     val rs = reports.asScala.toList
     assert(rs.size == 3, s"expected 3 micro-batches, got ${rs.size}")
@@ -143,5 +146,6 @@ class StreamingSpec extends AnyFunSuite {
       spark.read.parquet(dir.toString), shapes)
     assert(streamTotal == batchOut.totalViolations)
     assert(streamTotal == 30)
+    batchOut.release()
   }
 }
