@@ -114,43 +114,20 @@ object Queries {
 
   /** sh:zeroOrMorePath — iterative frontier-join transitive closure over a
     * derived parent edge (p_partkey -> p_partkey/2), seeded at node 1
-    * (§2.4; the engine's kleene kernel on real data). */
+    * (§2.4; the engine's closure kernel on real data). */
   val qClosure: Q = (s, d) => {
     import s.implicits._
     // edge table materialized ONCE: the fixpoint joins against in-memory
     // blocks instead of re-scanning the parquet every round (~15 rounds at
     // sf0.1 — guide §2.4, remove repeated passes)
     val edges = t(s, d, "part")
-      .select((col("p_partkey") / 2).cast("bigint").as("parent"), col("p_partkey").as("child"))
-      .filter(col("parent") >= 1)
+      .select((col("p_partkey") / 2).cast("bigint").as("node"), col("p_partkey").as("child"))
+      .filter(col("node") >= 1)
       .localCheckpoint()
-    var all = Seq(1L).toDF("node").localCheckpoint()
-    var frontier = all
-    var n = 1L
-    // UNROLLED semi-naive fixpoint: each materialization advances the
-    // frontier `unroll` edge-steps lazily (the inner steps are plain
-    // chained joins, deduped and subtracted only at the batch boundary),
-    // so the driver pays one sync + one lazy checkpoint + one count per
-    // BATCH instead of per step — the per-round job latency, not the data,
-    // dominates an iterative driver loop at any scale. The batch frontier
-    // is a superset of the deepest frontier, so re-expansion work is
-    // bounded by `unroll` and the computed SET is the identical closure
-    // (cycles still terminate: an empty batch after the anti-join ends
-    // the loop). `all` needs no checkpoint: it is a union of
-    // already-checkpointed batches, so its lineage stays shallow.
-    val unroll = 4
-    def step(f: org.apache.spark.sql.DataFrame) =
-      f.join(edges.withColumnRenamed("parent", "node"), "node")
-        .select(col("child").as("node"))
-    while (n > 0) {
-      val gs = Iterator.iterate(frontier)(step).slice(1, unroll + 1).toSeq
-      val batch = gs.reduce(_ unionByName _).distinct()
-        .join(all, Seq("node"), "left_anti").localCheckpoint(false)
-      n = batch.count()
-      if (n > 0) all = all.unionByName(batch)
-      frontier = batch
+    // the halving tree is log2(parts) deep: 64 steps bound any key range
+    graft.shacl.Closure(Seq(1L).toDF("node"), 64, "q_closure") { (f, _) =>
+      f.join(edges, "node").select(col("child").as("node"))
     }
-    all
   }
 
   /** Connected components (canonicalization kernel) over a deterministic

@@ -31,6 +31,21 @@ object ConnectedComponents {
     members.unionByName(roots)
   }
 
+  /** Largest slot count of [[contractLocal]]'s map: the biggest power of
+    * two a JVM array can hold. */
+  private[kg] val MaxSlots = 1 << 30
+
+  /** Slots the map needs to hold `keys` keys at a load of at most 3/4:
+    * `cap`, or `cap` doubled once it is full. Long arithmetic, so no count
+    * near the array limit overflows; past [[MaxSlots]] it throws. */
+  private[kg] def slotsFor(keys: Int, cap: Int): Int =
+    if (keys * 4L <= cap * 3L) cap
+    else if (cap >= MaxSlots)
+      throw new IllegalStateException(
+        s"contractLocal: $keys distinct node ids in one partition exceed the " +
+          s"$MaxSlots-slot map limit; repartition the edges into more partitions")
+    else cap << 1
+
   /** Partition-local union-find contraction: replaces each partition's
     * edge set by the star edges (local-min root, member) of its LOCAL
     * components — exactly connectivity-preserving (a spanning star per
@@ -64,8 +79,7 @@ object ConnectedComponents {
         while (u(i) && ks(i) != k) i = (i + 1) & (c - 1)
         i
       }
-      def grow(): Unit = {
-        val nc = cap << 1
+      def grow(nc: Int): Unit = {
         val nk = new Array[Long](nc); val nv = new Array[Long](nc)
         val nu = new Array[Boolean](nc)
         var i = 0
@@ -78,7 +92,11 @@ object ConnectedComponents {
       def get(k: Long): Long = { val i = idx(k, cap, used, keys); if (used(i)) vals(i) else k }
       def put(k: Long, v: Long): Unit = {
         val i = idx(k, cap, used, keys)
-        if (!used(i)) { if ((n + 1) * 4 > cap * 3) { grow(); put(k, v); return }; keys(i) = k; used(i) = true; n += 1 }
+        if (!used(i)) {
+          val nc = slotsFor(n + 1, cap)
+          if (nc != cap) { grow(nc); put(k, v); return }
+          keys(i) = k; used(i) = true; n += 1
+        }
         vals(i) = v
       }
       def find(x0: Long): Long = {

@@ -1,0 +1,73 @@
+package graft.shacl
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+
+/** The one semi-naive closure kernel behind every recursive operator:
+  * property-path closures ([[PathEval]]), OWL-RL `owl:TransitiveProperty`
+  * (prp-trp) and the registry's `q_closure`.
+  *
+  * Each batch chains [[Unroll]] applications of `step` lazily from the
+  * frontier, subtracts everything reached so far once, at the batch
+  * boundary, and stores the new rows behind a lazy `localCheckpoint`: the
+  * count that ends the batch is its only action. The next frontier is the
+  * whole batch, a superset of the deepest step's rows, so after k full
+  * batches exactly the rows within k * Unroll steps of the seed are reached.
+  * `reached` is a union of checkpointed batches and needs no checkpoint of
+  * its own. */
+object Closure {
+
+  /** Steps chained per batch: the per-batch job latency, not the data,
+    * dominates a driver-orchestrated fixpoint. */
+  private val Unroll = 4
+
+  /** Everything reachable from `seed` by repeated `step(frontier, reached)`,
+    * seed included. `reached` stays fixed within a batch (the rows reached
+    * before it); a step that joins its frontier with `reached` instead of a
+    * base relation grows its reach geometrically: each step adds the reach
+    * of the batch start, so one batch multiplies it by Unroll + 1. Returns
+    * the complete closure when it takes at most `cap` steps and throws
+    * [[ReportableError]] naming `label` otherwise. `track` sees every
+    * checkpoint minted, so an owner can free them later. */
+  def apply(seed: DataFrame, cap: Int, label: String,
+            track: DataFrame => DataFrame = identity)(
+      step: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val cols = seed.columns.toSeq
+    var reached = track(seed.localCheckpoint(false))
+    var frontier = reached
+    var depth = 0
+    var grew = true
+    while (grew) {
+      // at the cap, a single further step only checks that nothing is left
+      val steps = math.min(Unroll, math.max(cap - depth, 1))
+      val before = reached
+      val batch = track(Iterator.iterate(frontier)(step(_, before)).slice(1, steps + 1)
+        .reduce(_ unionByName _).distinct().join(before, cols, "left_anti").localCheckpoint(false))
+      grew = batch.count() > 0
+      if (grew) {
+        depth += steps
+        if (depth > cap)
+          throw new ReportableError(
+            s"$label did not close within $cap steps; the closure would be incomplete.")
+        reached = reached.unionByName(batch)
+      }
+      frontier = batch
+    }
+    reached
+  }
+
+  /** The driver-side closure for small in-memory graphs (schema
+    * hierarchies, sameAs clusters): every node reachable from `starts`,
+    * the starts included. */
+  def reach[A](starts: Iterable[A], succ: A => Iterable[A]): Set[A] = {
+    val seen = scala.collection.mutable.Set.empty[A]
+    var frontier = starts.filter(seen.add).toList
+    while (frontier.nonEmpty) frontier = frontier.flatMap(succ).filter(seen.add)
+    seen.toSet
+  }
+
+  /** Unpersist the checkpoint RDD behind `df`; a no-op for other frames. */
+  def free(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }
+      .foreach(r => try r.unpersist(blocking = false) catch { case _: Throwable => () })
+}

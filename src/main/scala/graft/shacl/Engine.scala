@@ -71,15 +71,12 @@ final class ValidationEngine(
     * value-node frames, path-closure frontiers) pins RDD blocks until the
     * JVM exits; a long session validating many graphs accumulates them.
     * close() frees all of them once the outputs are materialized. */
-  private val trackedCheckpoints =
-    scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
+  private val trackedCheckpoints = scala.collection.mutable.ListBuffer.empty[DataFrame]
 
-  /** Register the checkpoint RDD backing `df` (df must be the result of a
-    * .localCheckpoint(), eager or lazy) so close() can unpersist it. */
+  /** Register `df` (the result of a .localCheckpoint(), eager or lazy) so
+    * close() can unpersist it. */
   private def trackCp(df: DataFrame): DataFrame = {
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(r => trackedCheckpoints.synchronized { trackedCheckpoints += r })
+    trackedCheckpoints.synchronized { trackedCheckpoints += df }
     df
   }
 
@@ -89,9 +86,7 @@ final class ValidationEngine(
     * before closing — do not run further queries on them afterwards. */
   def close(): Unit = {
     trackedCheckpoints.synchronized {
-      trackedCheckpoints.foreach { r =>
-        try r.unpersist(blocking = false) catch { case _: Throwable => () }
-      }
+      trackedCheckpoints.foreach(Closure.free)
       trackedCheckpoints.clear()
     }
     vioCache.synchronized(vioCache.clear())
@@ -167,22 +162,13 @@ final class ValidationEngine(
       .select(termKey($"s"), termKey($"o")).collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
 
-  private lazy val upAdj: Map[String, Seq[String]] =
-    subClassPairs.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
   private lazy val downAdj: Map[String, Seq[String]] =
     subClassPairs.groupBy(_._2).map { case (k, vs) => k -> vs.map(_._1) }
 
-  private def closure(start: String, adj: Map[String, Seq[String]]): Set[String] = {
-    val seen = scala.collection.mutable.Set(start)
-    var frontier = List(start)
-    while (frontier.nonEmpty)
-      frontier = frontier.flatMap(adj.getOrElse(_, Nil)).filter(seen.add)
-    seen.toSet
-  }
-
   /** class key -> {itself + all transitive subclasses} (data-graph walk,
     * shape.py:342-354). */
-  def downClosure(classKey: String): Set[String] = closure(classKey, downAdj)
+  def downClosure(classKey: String): Set[String] =
+    Closure.reach(Seq(classKey), downAdj.getOrElse(_: String, Nil))
 
   // ---------------------------------------------------------------------
   // Targets (shape.py:321-391)
@@ -229,54 +215,10 @@ final class ValidationEngine(
     res.df.select(col("this").as("f")).filter($"f".isNotNull).distinct()
   }
 
-  // ---------------------------------------------------------------------
-  // Property paths (expression_helper.py:31-155): frontier has cols (f, v);
-  // each step joins v against the triples frame.
-  // ---------------------------------------------------------------------
-  def step(frontier: DataFrame, path: PathIR): DataFrame = path match {
-    case PPred(p) =>
-      val t = T.filter($"p" === p).select($"s".as("_s"), $"o".as("_o"))
-      frontier.join(t, frontier("v") === t("_s")).select(frontier("f"), t("_o").as("v"))
-    case PInv(PPred(p)) =>
-      val t = T.filter($"p" === p).select($"s".as("_s"), $"o".as("_o"))
-      frontier.join(t, frontier("v") === t("_o")).select(frontier("f"), t("_s").as("v"))
-    case PInv(inner) =>
-      // evaluate the INVERSE of inner: invert(PInv(inner)) would reduce
-      // back to inner (double inversion) and walk it FORWARD
-      step(frontier, PathIR.invert(inner))
-    case PSeq(parts) => parts.foldLeft(frontier)(step)
-    case PAlt(alts) => alts.map(step(frontier, _)).reduce(_ unionByName _).distinct()
-    case PZeroOrOne(inner) => frontier.unionByName(step(frontier, inner)).distinct()
-    case PZeroOrMore(inner) => kleene(frontier, inner)
-    case POneOrMore(inner) => kleene(step(frontier, inner).distinct(), inner)
-    case p: PNegSet =>
-      // negated property set (SPARQL 1.1 §9.1): one shared implementation
-      // with the standalone stepper — the frontier/triples frame shapes
-      // are identical, and split copies of the same semantics drift
-      PathEval.step(T, frontier, p)
-  }
-
-  /** Reflexive-transitive closure from `seed`: iterative frontier joins with
-    * lineage truncation — the GraphFrames-style fixpoint (SURVEY §4.2). */
-  private def kleene(seed: DataFrame, inner: PathIR): DataFrame = {
-    var all = trackCp(seed.distinct().localCheckpoint())
-    var frontier = all
-    var n = all.count()
-    var iter = 0
-    while (n > 0 && iter < opts.maxPathDepth) {
-      val next = trackCp(step(frontier, inner).distinct().except(all).localCheckpoint())
-      n = next.count()
-      if (n > 0) all = trackCp(all.unionByName(next).localCheckpoint())
-      frontier = next
-      iter += 1
-    }
-    // an incomplete closure must not silently pass as complete
-    if (n > 0)
-      throw new ReportableError(
-        s"SHACL path closure exceeded ${opts.maxPathDepth} iterations; " +
-          "raise ValidationOptions.maxPathDepth for deeper graphs.")
-    all
-  }
+  /** Property paths: [[PathEval.step]] over this engine's triples, its
+    * closures capped at maxPathDepth and their checkpoints tracked. */
+  def step(frontier: DataFrame, path: PathIR): DataFrame =
+    PathEval.step(T, frontier, path, opts.maxPathDepth, trackCp)
 
   def valueNodes(shape: ShapeIR, focus: DataFrame): DataFrame =
     shape.path match {

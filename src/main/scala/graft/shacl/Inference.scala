@@ -24,18 +24,9 @@ import org.apache.spark.sql.functions._
 object RdfsInference {
 
   private def transitive(pairs: Seq[(String, String)]): Seq[(String, String)] = {
-    val adj = pairs.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
-    val out = scala.collection.mutable.Set.empty[(String, String)]
-    for (start <- adj.keys) {
-      val seen = scala.collection.mutable.Set.empty[String]
-      var frontier = adj(start).toList
-      while (frontier.nonEmpty) {
-        val next = frontier.filter(seen.add)
-        next.foreach(n => out += ((start, n)))
-        frontier = next.flatMap(n => adj.getOrElse(n, Set.empty))
-      }
-    }
-    out.toSeq
+    val adj = pairs.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
+    def succ(n: String): Seq[String] = adj.getOrElse(n, Nil)
+    adj.keys.toSeq.flatMap(start => Closure.reach(succ(start), succ).map(start -> _))
   }
 
   private def keyNode(k: String): Node =
@@ -153,21 +144,20 @@ object OwlRlInference {
     * distributed (ConnectedComponents) instead of a driver BFS. */
   val DriverSameAsLimit = 100000
 
-  /** Round cap of the prp-trp and classification fixpoints. Both converge
-    * long before it on real ontologies; hitting it means the closure is
-    * incomplete, which must not pass silently as a conformance verdict. */
+  /** Cap of the prp-trp closure (in steps) and of the classification
+    * fixpoint (in rounds). Both converge long before it on real
+    * ontologies; hitting it means the closure is incomplete, which must
+    * not pass silently as a conformance verdict. */
   val MaxRounds = 50
 
-  private def capExceeded(what: String): Nothing =
-    throw new ReportableError(
-      s"$what did not converge within $MaxRounds rounds; the closure would be incomplete.")
+  /** Cap of the outer {classify → eq-rep} fixpoint, in rounds after the
+    * first pass; each round costs a classification fixpoint and a sameAs
+    * replication of the whole graph. */
+  val MaxOuterRounds = 10
 
-  /** Unpersist the checkpoint RDD backing a superseded frame (no-op for
-    * non-checkpoint frames). */
-  private def freeCp(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(r => try r.unpersist(blocking = false) catch { case _: Throwable => () })
+  private def capExceeded(what: String, cap: Int): Nothing =
+    throw new ReportableError(
+      s"$what did not converge within $cap rounds; the closure would be incomplete.")
 
   def expand(spark: SparkSession, df0: DataFrame): DataFrame = {
     import spark.implicits._
@@ -220,26 +210,19 @@ object OwlRlInference {
         out.filter($"p".isin(sym: _*)).select($"o".as("s"), $"p", $"s".as("o")))
     out = out.distinct().localCheckpoint()
 
-    // prp-trp: per transitive property, frontier fixpoint (bounded like the
-    // engine's kleene kernel). The frontier joins the closure so far, not
-    // the base edges, so the reached distance doubles per round.
+    // prp-trp: per transitive property, the closure kernel over (s, o)
+    // pairs. A step joins the frontier with the closure reached so far, not
+    // with the base edges, so the reached distance grows geometrically (a
+    // 60-link chain closes in 12 steps of the 50 allowed).
     for (tp <- trans) {
-      var edges = out.filter($"p" === tp).select($"s", $"o").distinct().localCheckpoint()
-      var frontier = edges
-      var n = 1L
-      var iter = 0
-      while (n > 0 && iter < MaxRounds) {
-        val e2 = frontier.select($"s".as("_fs"), $"o".as("_fo"))
-        val next = e2.join(edges.select($"s".as("_es"), $"o".as("_eo")), $"_fo" === $"_es")
-          .select($"_fs".as("s"), $"_eo".as("o")).distinct()
-          .except(edges).localCheckpoint()
-        n = next.count()
-        if (n > 0) edges = edges.unionByName(next).localCheckpoint()
-        frontier = next
-        iter += 1
+      val edges = out.filter($"p" === tp).select($"s", $"o").distinct()
+      val closed = Closure(edges, MaxRounds, s"owl:TransitiveProperty closure of <$tp>") {
+        (frontier, reached) =>
+          frontier.select($"s".as("_fs"), $"o".as("_fo"))
+            .join(reached.select($"s".as("_rs"), $"o".as("_ro")), $"_fo" === $"_rs")
+            .select($"_fs".as("s"), $"_ro".as("o")).distinct()
       }
-      if (n > 0) capExceeded(s"owl:TransitiveProperty closure of <$tp>")
-      out = out.unionByName(edges.select($"s", lit(tp).as("p"), $"o")).distinct()
+      out = out.unionByName(closed.select($"s", lit(tp).as("p"), $"o")).distinct()
     }
 
     // ---- restriction / chain / functional-property schema (driver-scale)
@@ -415,13 +398,13 @@ object OwlRlInference {
           if (n > 0) {
             val superseded = out
             out = out.unionByName(fresh).distinct().localCheckpoint()
-            freeCp(superseded) // new checkpoint materialized; old blocks dead
+            Closure.free(superseded) // new checkpoint materialized; old blocks dead
           }
-          freeCp(fresh)
+          Closure.free(fresh)
           grew = n > 0
         }
       }
-      if (grew) capExceeded("OWL-RL classification fixpoint")
+      if (grew) capExceeded("OWL-RL classification fixpoint", MaxRounds)
     }
 
     // eq-rep: owl:sameAs symmetric-transitive closure, then replicate every
@@ -446,11 +429,7 @@ object OwlRlInference {
           val adj = undirected.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
           val comp = scala.collection.mutable.Map.empty[String, Set[String]]
           for (start <- adj.keys if !comp.contains(start)) {
-            val seen = scala.collection.mutable.Set(start)
-            var frontier = List(start)
-            while (frontier.nonEmpty)
-              frontier = frontier.flatMap(adj.getOrElse(_, Nil)).filter(seen.add)
-            val cluster = seen.toSet
+            val cluster = Closure.reach(Seq(start), adj.getOrElse(_: String, Nil))
             cluster.foreach(m => comp(m) = cluster)
           }
           broadcast(comp.toSeq.flatMap { case (m, cl) => cl.map(a => (m, a)) }
@@ -497,7 +476,7 @@ object OwlRlInference {
       var prev = -1L
       var cur = out.count()
       var outer = 0
-      while (cur != prev && outer < 10) {
+      while (cur != prev) {
         outer += 1
         prev = cur
         classifyFixpoint()
@@ -507,8 +486,11 @@ object OwlRlInference {
         out = cp
         // each outer round pinned a full graph copy until JVM exit
         // otherwise (review finding, round 4)
-        freeCp(superseded)
+        Closure.free(superseded)
         cur = out.count()
+        // the round after the cap only checks that nothing is left
+        if (cur != prev && outer > MaxOuterRounds)
+          capExceeded("OWL-RL {classify → eq-rep} fixpoint", MaxOuterRounds)
       }
     }
     // RDFS closure over the enriched graph (covers rdfs2/3/5/7/9/11 with

@@ -102,136 +102,3 @@ object QueryTestCases {
       })
     }
 }
-
-/** Standalone property-path stepping over a triples frame (SparqlFrame
-  * needs one outside a ValidationEngine, e.g. for query test cases). */
-object PathEval {
-  import org.apache.spark.sql.{Column, DataFrame}
-  import org.apache.spark.sql.functions._
-  import PathIR._
-
-  def step(T: DataFrame, frontier: DataFrame, path: PathIR,
-           maxDepth: Int = 100): DataFrame = path match {
-    case PPred(p) =>
-      val t = T.filter(col("p") === p).select(col("s").as("_s"), col("o").as("_o"))
-      frontier.join(t, frontier("v") === t("_s")).select(frontier("f"), t("_o").as("v"))
-    case PInv(PPred(p)) =>
-      val t = T.filter(col("p") === p).select(col("s").as("_s"), col("o").as("_o"))
-      frontier.join(t, frontier("v") === t("_o")).select(frontier("f"), t("_s").as("v"))
-    case PInv(inner) =>
-      // evaluate the INVERSE of inner (invert(PInv(x)) would reduce back to
-      // x for non-normalized composites — silently forward)
-      step(T, frontier, PathIR.invert(inner), maxDepth)
-    case PSeq(parts) => parts.foldLeft(frontier)(step(T, _, _, maxDepth))
-    case PAlt(alts) => alts.map(step(T, frontier, _, maxDepth)).reduce(_ unionByName _).distinct()
-    case PZeroOrOne(inner) => frontier.unionByName(step(T, frontier, inner, maxDepth)).distinct()
-    case PZeroOrMore(inner) => kleene(T, frontier, inner, maxDepth)
-    case POneOrMore(inner) => kleene(T, step(T, frontier, inner, maxDepth).distinct(), inner, maxDepth)
-    case PNegSet(fwd, inv) =>
-      // negated property set (SPARQL §9.1): forward edges excluding the
-      // non-^ members, inverse edges excluding the ^ members
-      def notIn(ex: List[String]) =
-        if (ex.isEmpty) T else T.filter(!col("p").isin(ex: _*))
-      val legs = fwd.map { ex =>
-        val t = notIn(ex).select(col("s").as("_s"), col("o").as("_o"))
-        frontier.join(t, frontier("v") === t("_s")).select(frontier("f"), t("_o").as("v"))
-      }.toSeq ++ inv.map { ex =>
-        val t = notIn(ex).select(col("s").as("_s"), col("o").as("_o"))
-        frontier.join(t, frontier("v") === t("_o")).select(frontier("f"), t("_s").as("v"))
-      }.toSeq
-      if (legs.isEmpty) frontier.limit(0) else legs.reduce(_ unionByName _).distinct()
-  }
-
-  private def kleene(T: DataFrame, seed: DataFrame, inner: PathIR,
-                     maxDepth: Int): DataFrame = {
-    var all = seed.distinct().localCheckpoint()
-    var frontier = all
-    var n = all.count()
-    var iter = 0
-    while (n > 0 && iter < maxDepth) {
-      val next = step(T, frontier, inner, maxDepth).distinct().except(all).localCheckpoint()
-      n = next.count()
-      if (n > 0) all = all.unionByName(next).localCheckpoint()
-      frontier = next
-      iter += 1
-    }
-    // an incomplete closure must not silently pass as complete (the Engine
-    // kleene throws the same way; a silent cap returns wrong path answers
-    // for >maxDepth-hop chains with no signal)
-    if (n > 0)
-      throw new ReportableError(
-        s"SPARQL path closure exceeded $maxDepth iterations with a non-empty " +
-          "frontier; pass a larger maxDepth (ValidationOptions.maxPathDepth) " +
-          "for deeper graphs.")
-    all
-  }
-}
-
-/** [[PathEval]] over a QUADS frame: the frontier carries (f, v, g) and
-  * every step joins on the graph column too, so one evaluation — including
-  * the closure fixpoint — walks every named graph simultaneously, scoped
-  * per graph. This is what lets GRAPH ?g { ?s ex:p+ ?o } compile to a
-  * single fixed-size plan instead of a per-graph driver loop (SparqlFrame
-  * evalQuadGroup): at a million per-document graphs the fixpoint is still
-  * one distributed join per round. */
-object PathEvalQuads {
-  import org.apache.spark.sql.DataFrame
-  import org.apache.spark.sql.functions._
-  import PathIR._
-
-  /** Q: quads (s,p,o,g); frontier: (f, v, g). */
-  def step(Q: DataFrame, frontier: DataFrame, path: PathIR,
-           maxDepth: Int = 100): DataFrame = path match {
-    case PPred(p) =>
-      val t = Q.filter(col("p") === p)
-        .select(col("s").as("_s"), col("o").as("_o"), col("g").as("_g"))
-      frontier.join(t, frontier("v") === t("_s") && frontier("g") === t("_g"))
-        .select(frontier("f"), t("_o").as("v"), frontier("g"))
-    case PInv(PPred(p)) =>
-      val t = Q.filter(col("p") === p)
-        .select(col("s").as("_s"), col("o").as("_o"), col("g").as("_g"))
-      frontier.join(t, frontier("v") === t("_o") && frontier("g") === t("_g"))
-        .select(frontier("f"), t("_s").as("v"), frontier("g"))
-    case PInv(inner) =>
-      step(Q, frontier, PathIR.invert(inner), maxDepth)
-    case PSeq(parts) => parts.foldLeft(frontier)(step(Q, _, _, maxDepth))
-    case PAlt(alts) => alts.map(step(Q, frontier, _, maxDepth)).reduce(_ unionByName _).distinct()
-    case PZeroOrOne(inner) => frontier.unionByName(step(Q, frontier, inner, maxDepth)).distinct()
-    case PZeroOrMore(inner) => kleene(Q, frontier, inner, maxDepth)
-    case POneOrMore(inner) => kleene(Q, step(Q, frontier, inner, maxDepth).distinct(), inner, maxDepth)
-    case PNegSet(fwd, inv) =>
-      def notIn(ex: List[String]) =
-        if (ex.isEmpty) Q else Q.filter(!col("p").isin(ex: _*))
-      val legs = fwd.map { ex =>
-        val t = notIn(ex).select(col("s").as("_s"), col("o").as("_o"), col("g").as("_g"))
-        frontier.join(t, frontier("v") === t("_s") && frontier("g") === t("_g"))
-          .select(frontier("f"), t("_o").as("v"), frontier("g"))
-      }.toSeq ++ inv.map { ex =>
-        val t = notIn(ex).select(col("s").as("_s"), col("o").as("_o"), col("g").as("_g"))
-        frontier.join(t, frontier("v") === t("_o") && frontier("g") === t("_g"))
-          .select(frontier("f"), t("_s").as("v"), frontier("g"))
-      }.toSeq
-      if (legs.isEmpty) frontier.limit(0) else legs.reduce(_ unionByName _).distinct()
-  }
-
-  private def kleene(Q: DataFrame, seed: DataFrame, inner: PathIR,
-                     maxDepth: Int): DataFrame = {
-    var all = seed.distinct().localCheckpoint()
-    var frontier = all
-    var n = all.count()
-    var iter = 0
-    while (n > 0 && iter < maxDepth) {
-      val next = step(Q, frontier, inner, maxDepth).distinct().except(all).localCheckpoint()
-      n = next.count()
-      if (n > 0) all = all.unionByName(next).localCheckpoint()
-      frontier = next
-      iter += 1
-    }
-    if (n > 0)
-      throw new ReportableError(
-        s"SPARQL path closure (GRAPH ?g) exceeded $maxDepth iterations with " +
-          "a non-empty frontier; pass a larger maxDepth " +
-          "(ValidationOptions.maxPathDepth) for deeper graphs.")
-    all
-  }
-}

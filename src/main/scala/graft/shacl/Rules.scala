@@ -228,12 +228,12 @@ object RulesEngine {
                 // eager); the superseded frame's blocks pin memory for
                 // nothing — the only reader left is the stale engine,
                 // which rebuilds before any further use (engineStale)
-                freeCp(superseded)
+                Closure.free(superseded)
                 added += n
                 engineStale = true
               }
               // fresh's delta is folded into the union (or empty): free it
-              freeCp(fresh)
+              Closure.free(fresh)
           }
         }
         keepGoing = added > 0 && iterateRules
@@ -244,13 +244,6 @@ object RulesEngine {
     engine.close()
     triples
   }
-
-  /** Unpersist the checkpoint RDD backing `df` (no-op when the frame is
-    * not a localCheckpoint product). */
-  private def freeCp(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(r => try r.unpersist(blocking = false) catch { case _: Throwable => () })
 
   /** SPARQLRule CONSTRUCT evaluation: the WHERE clause runs once for all
     * focus nodes ($this pre-bound as a bindings column), then each template

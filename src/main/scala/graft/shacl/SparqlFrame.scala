@@ -664,7 +664,7 @@ final class SparqlFrame(
 
   /** Shapes a GRAPH ?g block can take and still compile to the single-pass
     * quad-join plan: triple patterns (IRI/var/property-path predicate —
-    * paths walk [[PathEvalQuads]], whose frontier carries the graph
+    * paths walk [[PathEval]] with a frontier that carries the graph
     * column), row-local FILTER/BIND, OPTIONAL / UNION whose branches are
     * themselves quad-compatible, nested GRAPH ?y over a quad-compatible
     * body (re-scoping is just another quad evaluation on a fresh graph
@@ -784,7 +784,7 @@ final class SparqlFrame(
   private def evalQuadGroup(g: SqGroup, x: String, base: DataFrame, start: Sol): Sol = {
     val withPats = g.elems.foldLeft(start) {
       case (acc, t: SqTriple) => t.p match {
-        case PredPath(p) => quadPathPattern(t, x, base, acc, p)
+        case PredPath(p) => pathPattern(t, acc, p, Some((x, base)))
         case _ => joinSols(acc, quadPattern(t, x, base))
       }
       case (acc, SqOptional(g2)) =>
@@ -965,106 +965,73 @@ final class SparqlFrame(
     } else Sol(base.select(out: _*), vars, Set.empty)
   }
 
-  /** Closure-free path → full (f, v) pairs frame straight off the triples
-    * scan (no anchor needed). */
-  private def pathPairs(p: PathIR): Option[DataFrame] = p match {
-    case PathIR.PPred(pred) =>
-      Some(activeT.filter(col("p") === pred).select(col("s").as("f"), col("o").as("v")))
-    case PathIR.PInv(inner) =>
-      pathPairs(inner).map(_.select(col("v").as("f"), col("f").as("v")))
-    case PathIR.PSeq(parts) =>
-      parts.map(pathPairs).reduce { (ao, bo) =>
-        for (a <- ao; b <- bo) yield {
-          val bb = b.select(col("f").as("_bf"), col("v").as("_bv"))
-          a.join(bb, a("v") === bb("_bf")).select(a("f"), col("_bv").as("v"))
+  /** Closure-free path → full (f, v) pairs frame straight off a triples
+    * scan (no anchor needed); over a quads frame every pair keeps its
+    * graph g and sequence joins stay within one graph. */
+  private def pathPairs(p: PathIR, base: DataFrame): Option[DataFrame] = {
+    val g = if (base.columns.contains("g")) Seq(col("g")) else Nil
+    def pairs(d: DataFrame, f: String, v: String) =
+      d.select(col(f).as("f") +: col(v).as("v") +: g: _*)
+    p match {
+      case PathIR.PPred(pred) => Some(pairs(base.filter(col("p") === pred), "s", "o"))
+      case PathIR.PInv(inner) => pathPairs(inner, base).map(pairs(_, "v", "f"))
+      case PathIR.PSeq(parts) =>
+        parts.map(pathPairs(_, base)).reduce { (ao, bo) =>
+          for (a <- ao; b <- bo) yield {
+            val bb = b.select(col("f").as("_bf") +: col("v").as("_bv") +: g.map(_.as("_bg")): _*)
+            val on = a("v") === bb("_bf")
+            a.join(bb, if (g.isEmpty) on else on && a("g") === bb("_bg"))
+              .select(a("f") +: col("_bv").as("v") +: g.map(_ => a("g")): _*)
+          }
         }
-      }
-    case PathIR.PAlt(alts) =>
-      val ps = alts.map(pathPairs)
-      if (ps.forall(_.isDefined)) Some(ps.flatten.reduce(_ unionByName _).distinct())
-      else None
-    case PathIR.PNegSet(fwd, inv) =>
-      // negated property set: every triple whose predicate is NOT excluded,
-      // forward for non-^ members and inverted for ^ members (SPARQL §9.1)
-      def notIn(ex: List[String]) =
-        if (ex.isEmpty) activeT else activeT.filter(!col("p").isin(ex: _*))
-      val legs = fwd.map(ex =>
-        notIn(ex).select(col("s").as("f"), col("o").as("v"))).toSeq ++
-        inv.map(ex =>
-          notIn(ex).select(col("o").as("f"), col("s").as("v"))).toSeq
-      legs.reduceOption(_ unionByName _).map(_.distinct())
-    case PathIR.POneOrMore(inner) =>
-      // unanchored p+ (rdflib supports it): seed the kleene with the inner
-      // path's own (f, v) pairs — kleene returns seed ∪ further steps,
-      // exactly the >=1-application closure (same trick as pathPairsQuads)
-      pathPairs(inner).map(seed =>
-        PathEval.step(activeT, seed, PathIR.PZeroOrMore(inner), maxPathDepth))
-    case _ => None // zero-length closures need an anchor
+      case PathIR.PAlt(alts) =>
+        val ps = alts.map(pathPairs(_, base))
+        if (ps.forall(_.isDefined)) Some(ps.flatten.reduce(_ unionByName _).distinct())
+        else None
+      case PathIR.PNegSet(fwd, inv) =>
+        // negated property set: every triple whose predicate is NOT excluded,
+        // forward for non-^ members and inverted for ^ members (SPARQL §9.1)
+        def notIn(ex: List[String]) =
+          if (ex.isEmpty) base else base.filter(!col("p").isin(ex: _*))
+        val legs = fwd.map(ex => pairs(notIn(ex), "s", "o")).toSeq ++
+          inv.map(ex => pairs(notIn(ex), "o", "s")).toSeq
+        legs.reduceOption(_ unionByName _).map(_.distinct())
+      case PathIR.POneOrMore(inner) =>
+        // unanchored p+ (rdflib supports it): seed the closure with the inner
+        // path's own pairs — it returns seed ∪ further steps, exactly the
+        // >=1-application closure (one fixpoint for ALL graphs over quads)
+        pathPairs(inner, base).map(seed =>
+          PathEval.step(base, seed, PathIR.PZeroOrMore(inner), maxPathDepth))
+      case _ => None // zero-length closures need an anchor
+    }
   }
 
   /** `?s <path> ?o` — a property path evaluated from whichever side is
     * already bound (pySHACL lets rdflib walk it per focus; here the
     * engine's own path stepper runs from the bound anchor, which keeps
     * closure paths seeded and scale-safe). Unanchored closure-free paths
-    * fall back to a full pairs scan. */
-  private def pathPattern(t: SqTriple, cur: Sol, path: PathIR): Sol = {
+    * fall back to a full pairs scan. Inside a quad-compatible GRAPH ?g
+    * block (`graph` = (?g, quads)) the frontier carries the graph column,
+    * so a closure runs for every named graph in one distributed pass, and
+    * ?g binds from the g column of the result — per-graph scoping falls
+    * out of the shared-variable join, same as quadPattern. */
+  private def pathPattern(t: SqTriple, cur: Sol, path: PathIR,
+                          graph: Option[(String, DataFrame)] = None): Sol = {
+    val base = graph.fold(activeT)(_._2)
+    val gOut = graph.map { case (gVar, _) => iriT(col("g")).as(gVar) }.toSeq
+    val gVars = graph.map(_._1).toSet
     def boundSide(term: SqTerm): Boolean = term match {
       case TVar(x) => cur.vars.contains(x)
       case TConst(_) => true
     }
     val forward = boundSide(t.s)
     if (!forward && !boundSide(t.o)) {
-      val pairs = pathPairs(path).getOrElse(throw new ReportableError(
+      val pairs = pathPairs(path, base).getOrElse(throw new ReportableError(
         "a closure property path with neither side bound is not supported"))
       val sol = (t.s, t.o) match {
         case (TVar(a), TVar(b)) =>
-          Sol(pairs.select(col("f").as(a), col("v").as(b)), Set(a, b), Set.empty)
-        case _ => throw new ReportableError("unreachable: unanchored ground path")
-      }
-      return joinSols(cur, sol)
-    }
-    val (anchor, other, p) =
-      if (forward) (t.s, t.o, path) else (t.o, t.s, PathIR.invert(path))
-    val anchorDf = anchor match {
-      case TVar(x) => cur.df.select(col(x).as("f")).filter(col("f").isNotNull).distinct()
-      case TConst(n) => spark.range(1).select(termLit(n).as("f"))
-    }
-    // inside a GRAPH block, paths walk the active (shapes) frame
-    val res =
-      (if (activeT eq T) pathStep(anchorDf.select(col("f"), col("f").as("v")), p)
-       else PathEval.step(activeT, anchorDf.select(col("f"), col("f").as("v")), p, maxPathDepth)).distinct()
-    val (df, vars) = (anchor, other) match {
-      case (TVar(a), TVar(o)) => (res.select(col("f").as(a), col("v").as(o)), Set(a, o))
-      case (TVar(a), TConst(n)) =>
-        (res.filter(col("v") === termLit(n)).select(col("f").as(a)), Set(a))
-      case (TConst(_), TVar(o)) => (res.select(col("v").as(o)), Set(o))
-      case (TConst(_), TConst(n)) =>
-        (res.filter(col("v") === termLit(n)).limit(1).select(lit(1).as("__unit")),
-          Set("__unit"))
-    }
-    joinSols(cur, Sol(df, vars, Set.empty))
-  }
-
-  /** `?s <path> ?o` inside a quad-compatible GRAPH ?g block: the path
-    * walks [[PathEvalQuads]] (frontier carries the graph column, so the
-    * closure fixpoint runs for every named graph in one distributed pass)
-    * and `gVar` binds from the g column of the result — per-graph scoping
-    * falls out of the shared-variable join, same as quadPattern. */
-  private def quadPathPattern(t: SqTriple, gVar: String, base: DataFrame,
-                              cur: Sol, path: PathIR): Sol = {
-    def gT(c: Column) = iriT(c)
-    def boundSide(term: SqTerm): Boolean = term match {
-      case TVar(x) => cur.vars.contains(x)
-      case TConst(_) => true
-    }
-    val forward = boundSide(t.s)
-    if (!forward && !boundSide(t.o)) {
-      val pairs = pathPairsQuads(path, base).getOrElse(throw new ReportableError(
-        "a closure property path with neither side bound is not supported"))
-      val sol = (t.s, t.o) match {
-        case (TVar(a), TVar(b)) =>
-          Sol(pairs.select(col("f").as(a), col("v").as(b), gT(col("g")).as(gVar)),
-            Set(a, b, gVar), Set.empty)
+          Sol(pairs.select(col("f").as(a) +: col("v").as(b) +: gOut: _*), Set(a, b) ++ gVars,
+            Set.empty)
         case _ => throw new ReportableError("unreachable: unanchored ground path")
       }
       return joinSols(cur, sol)
@@ -1075,76 +1042,44 @@ final class SparqlFrame(
       case TVar(x) => cur.df.select(col(x).as("f")).filter(col("f").isNotNull).distinct()
       case TConst(n) => spark.range(1).select(termLit(n).as("f"))
     }
-    // frontier graph column: from the bound ?g when available (anchor and
-    // graph stay paired), else every named graph via a distributed cross
-    // join against the distinct-graph catalog — correct for any element
-    // order; queries that bind ?g with a plain pattern first take the
-    // cheap paired branch
-    val frontier = anchor match {
-      case TVar(a) if cur.vars.contains(gVar) =>
-        cur.df.filter(col(gVar).isNotNull && col(a).isNotNull)
-          .select(col(a).as("f"), col(gVar)("v").as("g")).distinct()
-          .select(col("f"), col("f").as("v"), col("g"))
-      case _ if cur.vars.contains(gVar) =>
-        cur.df.filter(col(gVar).isNotNull).select(col(gVar)("v").as("g")).distinct()
-          .crossJoin(anchorVals).select(col("f"), col("f").as("v"), col("g"))
-      case _ =>
-        anchorVals.crossJoin(base.select(col("g")).distinct())
-          .select(col("f"), col("f").as("v"), col("g"))
-    }
-    val res = PathEvalQuads.step(base, frontier, p, maxPathDepth).distinct()
-      .select(col("f"), col("v"), gT(col("g")).as("__g_term"))
+    val res = (graph match {
+      case None if activeT eq T => pathStep(anchorVals.select(col("f"), col("f").as("v")), p)
+      // inside a GRAPH block, paths walk the active (shapes / named) frame
+      case None =>
+        PathEval.step(activeT, anchorVals.select(col("f"), col("f").as("v")), p, maxPathDepth)
+      case Some((gVar, _)) =>
+        // frontier graph column: from the bound ?g when available (anchor
+        // and graph stay paired), else every named graph via a distributed
+        // cross join against the distinct-graph catalog — correct for any
+        // element order; queries that bind ?g with a plain pattern first
+        // take the cheap paired branch
+        val frontier = anchor match {
+          case TVar(a) if cur.vars.contains(gVar) =>
+            cur.df.filter(col(gVar).isNotNull && col(a).isNotNull)
+              .select(col(a).as("f"), col(gVar)("v").as("g")).distinct()
+              .select(col("f"), col("f").as("v"), col("g"))
+          case _ if cur.vars.contains(gVar) =>
+            cur.df.filter(col(gVar).isNotNull).select(col(gVar)("v").as("g")).distinct()
+              .crossJoin(anchorVals).select(col("f"), col("f").as("v"), col("g"))
+          case _ =>
+            anchorVals.crossJoin(base.select(col("g")).distinct())
+              .select(col("f"), col("f").as("v"), col("g"))
+        }
+        PathEval.step(base, frontier, p, maxPathDepth)
+    }).distinct()
     val (df, vars) = (anchor, other) match {
       case (TVar(a), TVar(o)) =>
-        (res.select(col("f").as(a), col("v").as(o), col("__g_term").as(gVar)),
-          Set(a, o, gVar))
+        (res.select(col("f").as(a) +: col("v").as(o) +: gOut: _*), Set(a, o) ++ gVars)
       case (TVar(a), TConst(n)) =>
-        (res.filter(col("v") === termLit(n))
-          .select(col("f").as(a), col("__g_term").as(gVar)), Set(a, gVar))
-      case (TConst(_), TVar(o)) =>
-        (res.select(col("v").as(o), col("__g_term").as(gVar)), Set(o, gVar))
+        (res.filter(col("v") === termLit(n)).select(col("f").as(a) +: gOut: _*), Set(a) ++ gVars)
+      case (TConst(_), TVar(o)) => (res.select(col("v").as(o) +: gOut: _*), Set(o) ++ gVars)
+      case (TConst(_), TConst(n)) if graph.isEmpty =>
+        (res.filter(col("v") === termLit(n)).limit(1).select(lit(1).as("__unit")),
+          Set("__unit"))
       case (TConst(_), TConst(n)) =>
-        (res.filter(col("v") === termLit(n))
-          .select(col("__g_term").as(gVar)).distinct(), Set(gVar))
+        (res.filter(col("v") === termLit(n)).select(gOut: _*).distinct(), gVars)
     }
     joinSols(cur, Sol(df, vars, Set.empty))
-  }
-
-  /** [[pathPairs]] over the quads frame: (f, v, g) pairs per named graph,
-    * for closure-free paths with neither side bound. */
-  private def pathPairsQuads(p: PathIR, base: DataFrame): Option[DataFrame] = p match {
-    case PathIR.PPred(pred) =>
-      Some(base.filter(col("p") === pred)
-        .select(col("s").as("f"), col("o").as("v"), col("g")))
-    case PathIR.PInv(inner) =>
-      pathPairsQuads(inner, base).map(_.select(col("v").as("f"), col("f").as("v"), col("g")))
-    case PathIR.PSeq(parts) =>
-      parts.map(pathPairsQuads(_, base)).reduce { (ao, bo) =>
-        for (a <- ao; b <- bo) yield {
-          val bb = b.select(col("f").as("_bf"), col("v").as("_bv"), col("g").as("_bg"))
-          a.join(bb, a("v") === bb("_bf") && a("g") === bb("_bg"))
-            .select(a("f"), col("_bv").as("v"), a("g"))
-        }
-      }
-    case PathIR.PAlt(alts) =>
-      val ps = alts.map(pathPairsQuads(_, base))
-      if (ps.forall(_.isDefined)) Some(ps.flatten.reduce(_ unionByName _).distinct())
-      else None
-    case PathIR.PNegSet(fwd, inv) =>
-      def notIn(ex: List[String]) =
-        if (ex.isEmpty) base else base.filter(!col("p").isin(ex: _*))
-      val legs = fwd.map(ex =>
-        notIn(ex).select(col("s").as("f"), col("o").as("v"), col("g"))).toSeq ++
-        inv.map(ex =>
-          notIn(ex).select(col("o").as("f"), col("s").as("v"), col("g"))).toSeq
-      legs.reduceOption(_ unionByName _).map(_.distinct())
-    case PathIR.POneOrMore(inner) =>
-      // unanchored p+ : seed the graph-keyed kleene with the inner path's
-      // own (f, v, g) pairs — kleene returns seed ∪ further steps, i.e.
-      // exactly the >=1-application closure, one fixpoint for ALL graphs
-      pathPairsQuads(inner, base).map(seed =>
-        PathEvalQuads.step(base, seed, PathIR.PZeroOrMore(inner), maxPathDepth))
-    case _ => None // zero-length closures need an anchor
   }
 
   private def joinSols(a: Sol, b: Sol): Sol = {

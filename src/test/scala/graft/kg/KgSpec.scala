@@ -8,6 +8,17 @@ class KgSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  test("CC local-contraction map grows at 3/4 load and stops loudly at its slot limit") {
+    import ConnectedComponents.{MaxSlots, slotsFor}
+    assert(slotsFor(3072, 4096) == 4096) // exactly 3/4 full stays
+    assert(slotsFor(3073, 4096) == 8192)
+    // counts whose Int products overflowed (4 * 2^29) still double correctly
+    assert(slotsFor((1 << 29) + 1, 1 << 29) == MaxSlots)
+    assert(slotsFor(3 * (1 << 28), MaxSlots) == MaxSlots)
+    val e = intercept[IllegalStateException](slotsFor(3 * (1 << 28) + 1, MaxSlots))
+    assert(e.getMessage.contains("slot map limit"))
+  }
+
   test("connected components match a union-find oracle") {
     // deterministic random graph
     val rnd = new scala.util.Random(7)

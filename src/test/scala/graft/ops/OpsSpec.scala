@@ -10,6 +10,19 @@ class OpsSpec extends AnyFunSuite {
   import spark.implicits._
   val sf = "/root/testdata/sf0.001"
 
+  test("q_closure equals a driver BFS over the part keys' halving tree") {
+    val keys = spark.read.parquet(s"$sf/part.parquet")
+      .select($"p_partkey".cast("long")).as[Long].collect()
+    val children = keys.filter(_ / 2 >= 1).groupBy(_ / 2)
+    val seen = scala.collection.mutable.Set(1L)
+    var frontier = Seq(1L)
+    while (frontier.nonEmpty)
+      frontier = frontier.flatMap(n => children.getOrElse(n, Array.empty[Long])).filter(seen.add)
+    val got = graft.Queries.qClosure(spark, sf).as[Long].collect()
+    assert(got.length == got.distinct.length, "closure rows form a set")
+    assert(got.toSet == seen.toSet && seen.size > 100)
+  }
+
   test("exact dedup finds planted duplicates") {
     val docs = Seq((1L, "The Cat sat."), (2L, "the cat sat"), (3L, "unique text here"))
       .toDF("doc_id", "text")

@@ -220,6 +220,23 @@ class OwlRlSpec extends AnyFunSuite {
     assert(ex.getMessage.contains(s"${OwlRlInference.MaxRounds} rounds"))
   }
 
+  test("the outer {classify → eq-rep} fixpoint throws one round past its cap") {
+    // functional ex:f: rung i's two values become sameAs only after the
+    // eq-rep of rung i-1 merged their subjects, so n rungs need n outer
+    // rounds after the first pass
+    def ladder(rungs: Int) = prefixes + "ex:f a owl:FunctionalProperty .\n" +
+      "ex:s ex:f ex:a0 , ex:b0 .\n" +
+      (0 until rungs).map(i => s"ex:a$i ex:f ex:a${i + 1} . ex:b$i ex:f ex:b${i + 1} .")
+        .mkString("\n")
+    def I(l: String) = Iri("http://ex.org/" + l)
+    val cap = OwlRlInference.MaxOuterRounds
+    val g = expandTtl(ladder(cap))
+    for (i <- 0 to cap)
+      assert(g.contains(I(s"a$i"), Iri("http://www.w3.org/2002/07/owl#sameAs"), I(s"b$i")), s"rung $i")
+    val ex = intercept[ReportableError](expandTtl(ladder(cap + 1)))
+    assert(ex.getMessage.contains(s"within $cap rounds"))
+  }
+
   test("property chains: hasParent∘hasParent -> hasGrandparent") {
     val g = expandTtl(prefixes +
       """ex:hasGrandparent owl:propertyChainAxiom ( ex:hasParent ex:hasParent ) .
