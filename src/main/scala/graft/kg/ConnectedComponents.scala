@@ -232,15 +232,10 @@ object ConnectedComponents {
     edges
   }
 
-  /** run + withSingletons fused for the common case where `vertices`
-    * covers every edge endpoint (both in-repo callers construct vertices
-    * as exactly the id universe the edges come from): the converged star
-    * forest's roots and the edge-free singletons are together just
-    * "vertices that are nobody's member", so ONE anti-join replaces the
-    * separate roots distinct + anti-join + singleton anti-join (three
-    * stage-jobs of the finale). Same output rows as
-    * `withSingletons(run(...), vertices)` whenever the coverage
-    * precondition holds. */
+  /** [[run]] plus a singleton row (id, id) per vertex in no edge, for the
+    * case where `vertices` covers every edge endpoint: the star forest's
+    * roots and the edge-free singletons are together just "vertices that
+    * are nobody's member", so ONE anti-join adds both. */
   def runWithVertices(spark: SparkSession, edges0: DataFrame,
                       vertices: DataFrame, maxIter: Int = 50): DataFrame = {
     import spark.implicits._
@@ -250,13 +245,5 @@ object ConnectedComponents {
       .join(members.select($"id"), Seq("id"), "left_anti")
       .withColumn("component", col("id"))
       .unionByName(members)
-  }
-
-  /** Convenience for vertices that may not appear in any edge. */
-  def withSingletons(cc: DataFrame, vertices: DataFrame): DataFrame = {
-    val missing = vertices.select(col("id"))
-      .join(cc.select(col("id")), Seq("id"), "left_anti")
-      .withColumn("component", col("id"))
-    cc.unionByName(missing)
   }
 }

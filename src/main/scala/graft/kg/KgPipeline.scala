@@ -1,8 +1,8 @@
 package graft.kg
 
-import graft.rdf.{Iri, MemGraph, TurtleParser}
+import graft.rdf.TurtleParser
 import graft.shacl.{ValidationOptions, Validator}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The north-rule KG-construction pipeline:
@@ -19,7 +19,6 @@ import org.apache.spark.sql.functions._
 object KgPipeline {
   val KG = "http://graft.dev/kg#"
 
-  final case class Mention(doc_id: String, span_idx: Int, surface: String, offset: Int)
   final case class Link(doc_id: String, span_idx: Int, surface: String,
                         entity_id: Long, score: Double)
 
@@ -99,18 +98,11 @@ object KgPipeline {
     * duplicates because the store commit is lineage-gated (the "store"
     * marker below), not anti-joined per row.
     *
-    * The r1-r7 versions attached the component to EVERY link row with a
-    * salted links ⋈ components join (Zipf-head entity ids) and took four
-    * distincts over the concatenated IRI strings. But every output branch
-    * depends only on the DISTINCT (doc, entity) pairs or on the
-    * (entity -> component) table — never on the per-link payload — so the
-    * decisions happen on narrow proxies instead (guide §2.3/§8: shuffle
-    * keys, not payloads): one distinct over (doc_id, entity_id), one over
-    * entity_id, and entity-scale broadcast joins against the components
-    * table. The hot-key histogram job and the salted shuffle of the full
-    * link table (span_idx + score never used here) disappear; the skew the
-    * salt handled cannot occur because no join side carries per-link
-    * multiplicity any more. Output triple set is identical. */
+    * Every output branch depends only on the DISTINCT (doc, entity) pairs
+    * or on the (entity -> component) table, never on the per-link payload,
+    * so the decisions happen on those narrow proxies (guide §2.3/§8:
+    * shuffle keys, not payloads) and no join side carries per-link
+    * multiplicity, which leaves Zipf-head entity ids no skew to cause. */
   def materializeTriples(links: DataFrame, components: DataFrame,
                          nLinksHint: Option[Long] = None): DataFrame = {
     val docIri = concat(lit("http://graft.dev/doc/"), regexp_replace(col("doc_id"), "^doc:", ""))
@@ -120,16 +112,10 @@ object KgPipeline {
     // semantics of the old per-branch distincts for any caller input.
     // The shared proxies are localCheckpoint'd: Spark does not share a
     // subplan across union branches, so without a materialization the
-    // pairs distinct would recompute once PER BRANCH (measured 4x at
-    // bench scale); the checkpointed frames are narrow (pairs) or
-    // vocab-bounded (comp, present), so the blocks are small. The
-    // checkpoints are LAZY (r8): eager ones ran three sequential driver
-    // jobs (comp, then pairs, then present) before any output branch
-    // started; lazily, the consuming action computes all three inside one
-    // job with their stages overlapped (guide §2.6's overlap, without
-    // threads), and the cached RDDs still stop the per-branch recompute.
-    // Measured: materializeTriples 4.6 -> 3.6-4.1 s in the 150k-fat-doc
-    // scaling workload, ~1.3 -> ~1.0 s at the 40k headline.
+    // pairs distinct would recompute once PER BRANCH; the checkpointed
+    // frames are narrow (pairs) or vocab-bounded (comp, present). They are
+    // LAZY, so the consuming action computes all three inside one job with
+    // their stages overlapped (guide §2.6), not in three sequential jobs.
     val comp = components.select(col("id").as("entity_id"), col("component"))
       .distinct().localCheckpoint(false)
     val compIds = comp.select(col("entity_id")).distinct()
@@ -189,6 +175,17 @@ object KgPipeline {
       |                sh:in ( "image" "audio" "video" ) ] .
       |""".stripMargin
 
+  /** Lift plain (s, p, o) strings into the engine's term-struct frame. The
+    * object's kind follows from the predicate: kg:label and kg:mediaType
+    * objects are literals, every other object an IRI. */
+  def termFrame(triples: DataFrame): DataFrame = {
+    def term(c: Column, kind: Column) =
+      struct(c.as("v"), kind.as("k"), lit("").as("dt"), lit("").as("lang"))
+    val oKind = when(col("p").isin(KG + "label", KG + "mediaType"), lit(2.toByte))
+      .otherwise(lit(0.toByte))
+    triples.select(term(col("s"), lit(0.toByte)).as("s"), col("p"), term(col("o"), oKind).as("o"))
+  }
+
   final case class Counts(docs: Long, spans: Long, mentions: Long, links: Long,
                           entities: Long, components: Long, triples: Long,
                           conforms: Boolean)
@@ -204,10 +201,17 @@ object KgPipeline {
     val spans = lin.stage("spans", ck)(tagSpans(docs))
     val ments = lin.stage("mentions", ck)(mentions(spans))
     val links = lin.stage("links", ck)(linkEntities(spark, ments).toDF())
-    val comps = lin.stage("components", ck)(canonicalize(spark, links))
+    // one row per link entity, one root (id == component) per component:
+    // the roots are counted in the write job; only a resume recounts them
+    var roots: Option[Observation] = None
+    val isRoot = col("id") === col("component")
+    val comps = lin.stage("components", ck) {
+      roots = Some(Observation())
+      canonicalize(spark, links).observe(roots.get, count(when(isRoot, 1)).as("n"))
+    }
     val triples = lin.stage("triples", ck) {
       // predicate-partitioned store: filters on p prune whole directories
-      materializeTriples(links, comps, nLinksHint = lin.rowsOf("links"))
+      materializeTriples(links, comps)
         .unionByName(mediaTriples(spark, spans))
     }
     // Iceberg-shaped store: the run's predicates are OVERWRITTEN (not
@@ -219,37 +223,31 @@ object KgPipeline {
     lin.marker("store", ck) {
       val preds = triples.select(col("p")).distinct().collect().map(_.getString(0))
       store.overwritePartitions(triples, preds.toSeq)
-      lin.rowsOf("triples").getOrElse(0L)
+      lin.rowsOf("triples").get // every predicate is overwritten: all rows
     }
 
     // Validate the emitted graph AT SCALE: the (s,p,o) strings lift into
     // the engine's term-struct frame; no driver collect of the data.
     val conforms = if (!validate) true else {
-      def iriOrLit(c: org.apache.spark.sql.Column) = struct(
-        c.as("v"),
-        when(c.startsWith("http") || c.startsWith("media:"), lit(0.toByte))
-          .otherwise(lit(2.toByte)).as("k"),
-        lit("").as("dt"), lit("").as("lang"))
-      val tdf = triples.select(
-        struct(col("s").as("v"), lit(0.toByte).as("k"), lit("").as("dt"), lit("").as("lang")).as("s"),
-        col("p"), iriOrLit(col("o")).as("o"))
       val shapes = TurtleParser.parseGraph(shapesTtl, "http://graft.dev/shapes")
       // at-scale path: conformance from a distributed count aggregation,
       // no driver collect of violations; release the engine's checkpoint
       // blocks once the verdict is read
-      val out = Validator.validateFrameAtScale(spark, tdf, shapes, ValidationOptions())
+      val out = Validator.validateFrameAtScale(spark, termFrame(triples), shapes, ValidationOptions())
       val c = out.conforms
       out.release()
       c
     }
 
+    // counts the stages already paid for; the store's live rows take one read
+    def rows(stage: String): Long = lin.rowsOf(stage).get
     Counts(
       docs = nDocs,
-      spans = spark.read.parquet(s"$outRoot/spans").count(),
-      mentions = spark.read.parquet(s"$outRoot/mentions").count(),
-      links = spark.read.parquet(s"$outRoot/links").count(),
-      entities = spark.read.parquet(s"$outRoot/links").select(col("entity_id")).distinct().count(),
-      components = spark.read.parquet(s"$outRoot/components").select(col("component")).distinct().count(),
+      spans = rows("spans"),
+      mentions = rows("mentions"),
+      links = rows("links"),
+      entities = rows("components"),
+      components = roots.fold(comps.filter(isRoot).count())(_.get("n").asInstanceOf[Long]),
       triples = store.read().count(),
       conforms = conforms)
   }

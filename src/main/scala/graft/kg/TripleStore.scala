@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iceberg-shaped partitioned triple store over parquet (no Iceberg jars
@@ -107,18 +107,21 @@ final class TripleStore(spark: SparkSession, root: String) {
     ensureFormatMarker() // verified adoption: existing names all agree
   }
 
-  /** Snapshot log. ONLY a missing log reads as empty — any other failure
-    * (throttling, transient IO) must surface, because treating it as "no
-    * snapshots" would reuse snapshot id 1 and corrupt history. */
-  private def log(): Seq[(Long, String, Long, Long)] =
+  private type LogRow = (Long, String, Long, Long)
+
+  /** Snapshot log, sorted by id. ONLY a missing log reads as empty — any
+    * other failure (throttling, transient IO) must surface, because "no
+    * snapshots" would reuse snapshot id 1 and corrupt history. Read once per
+    * call, never cached, so each call sees other writers' commits. */
+  private def log(): Seq[LogRow] =
     if (!snapLogExists()) Nil
-    else spark.read.parquet(snapPath).as[(Long, String, Long, Long)].collect().toSeq.sortBy(_._1)
+    else spark.read.schema("snapshot_id BIGINT, op STRING, committed_at BIGINT, rows BIGINT")
+      .parquet(snapPath).as[LogRow].collect().toSeq.sortBy(_._1)
+
+  private def latest(l: Seq[LogRow]): Long = l.lastOption.fold(0L)(_._1)
 
   def snapshots(): Seq[Long] = log().map(_._1)
-  def currentSnapshot(): Option[Long] = {
-    val l = log()
-    if (l.isEmpty) None else Some(l.map(_._1).max)
-  }
+  def currentSnapshot(): Option[Long] = log().lastOption.map(_._1)
 
   private def appendLog(id: Long, op: String, rows: Long): Unit =
     Seq((id, op, System.currentTimeMillis(), rows))
@@ -131,11 +134,6 @@ final class TripleStore(spark: SparkSession, root: String) {
     * under another (silently unreadable data). */
   private def withPart(df: DataFrame): DataFrame =
     df.withColumn("p_part", regexp_extract(col("p"), "([^#/]+)[#/]*$", 1))
-
-  /** Rows actually landed in snapshot `id` (partition-pruned scan of the
-    * fresh files — re-counting the input would re-run its whole plan). */
-  private def writtenRows(id: Long): Long =
-    spark.read.parquet(dataPath).filter(col("snap") === id).count()
 
   /** Remove data directories for snapshot ids at/above the next id — the
     * leftovers of a write that crashed before its log append (the log
@@ -154,13 +152,16 @@ final class TripleStore(spark: SparkSession, root: String) {
     }
   }
 
-  private def commitSnapshot(df: DataFrame, op: String): Long = {
+  /** The logged row count is observed inside the write job (re-counting
+    * the input would re-run its plan; scanning the new files, one more job). */
+  private def commitSnapshot(df: DataFrame, op: String, l: Seq[LogRow] = log()): Long = {
     checkFormat(); ensureFormatMarker()
-    val id = currentSnapshot().getOrElse(0L) + 1L
+    val id = latest(l) + 1L
     cleanUncommitted(id)
-    val out = withPart(df).withColumn("snap", lit(id))
-    out.write.mode(SaveMode.Append).partitionBy("p_part", "snap").parquet(dataPath)
-    appendLog(id, op, writtenRows(id))
+    val written = Observation()
+    withPart(df).withColumn("snap", lit(id)).observe(written, count(lit(1)).as("rows"))
+      .write.mode(SaveMode.Append).partitionBy("p_part", "snap").parquet(dataPath)
+    appendLog(id, op, written.get("rows").asInstanceOf[Long])
     id
   }
 
@@ -174,8 +175,9 @@ final class TripleStore(spark: SparkSession, root: String) {
     * recovery would duplicate its rows). Returns the snapshot id, or None
     * when the batch was already committed. */
   def appendBatch(df: DataFrame, batchId: Long): Option[Long] = {
-    if (log().exists(_._2 == s"stream:$batchId")) None
-    else Some(commitSnapshot(df, s"stream:$batchId"))
+    val l = log()
+    if (l.exists(_._2 == s"stream:$batchId")) None
+    else Some(commitSnapshot(df, s"stream:$batchId", l))
   }
 
   /** Overwrite the given predicate partitions with `df` (other partitions
@@ -224,7 +226,7 @@ final class TripleStore(spark: SparkSession, root: String) {
     val snap = currentSnapshot().getOrElse(return None)
     val parts = liveFileCounts().filter(_._2 >= minFiles).keys.toSeq.sorted
     if (parts.isEmpty) return None
-    val live = liveAt(snap)
+    val live = liveAt(Some(snap))
     val counts = live.filter(col("p_part").isin(parts: _*))
       .groupBy($"p_part").agg(count(lit(1)).as("n"))
       .as[(String, Long)].collect()
@@ -238,20 +240,22 @@ final class TripleStore(spark: SparkSession, root: String) {
 
   /** Latest overwrite snapshot per partition at or before `atId`:
     * rows of that partition from earlier snapshots are dead. */
-  private def overwrittenAt(atId: Long): Map[String, Long] =
-    log().filter(_._1 <= atId).flatMap { case (id, op, _, _) =>
+  private def overwrittenAt(atId: Long, l: Seq[LogRow] = log()): Map[String, Long] =
+    l.filter(_._1 <= atId).flatMap { case (id, op, _, _) =>
       if (op.startsWith("overwrite:"))
         op.stripPrefix("overwrite:").split(",").filter(_.nonEmpty).map(_ -> id)
       else Nil
     }.groupBy(_._1).map { case (pp, xs) => pp -> xs.map(_._2).max }
 
-  private def liveAt(atId: Long): DataFrame = {
+  /** Live rows at `atId`, or at the latest snapshot when it is None. */
+  private def liveAt(atId: Option[Long], l: Seq[LogRow] = log()): DataFrame = {
     checkFormat()
-    if (log().isEmpty)
+    if (l.isEmpty)
       throw new IllegalStateException(
         s"TripleStore at $root has no committed snapshots (probe with currentSnapshot())")
-    val base = spark.read.parquet(dataPath).filter(col("snap") <= atId)
-    overwrittenAt(atId).map { case (pp, oid) =>
+    val at = atId.getOrElse(latest(l))
+    val base = spark.read.parquet(dataPath).filter(col("snap") <= at)
+    overwrittenAt(at, l).map { case (pp, oid) =>
       col("p_part") === pp && col("snap") < oid
     }.reduceOption(_ || _) match {
       case Some(dead) => base.filter(!dead)
@@ -261,18 +265,17 @@ final class TripleStore(spark: SparkSession, root: String) {
 
   /** Read the current table (only live rows: superseded partition
     * snapshots are masked by the log, not physically deleted). */
-  def read(): DataFrame =
-    liveAt(currentSnapshot().getOrElse(0L)).drop("snap", "p_part")
+  def read(): DataFrame = liveAt(None).drop("snap", "p_part")
 
   /** Snapshot read (time travel): the table exactly as of snapshot `id`. */
-  def readAt(id: Long): DataFrame = liveAt(id).drop("snap", "p_part")
+  def readAt(id: Long): DataFrame = liveAt(Some(id)).drop("snap", "p_part")
 
   /** Predicate-pruned scan — the hot path for SHACL targets/paths: the
     * filter lands on the partition column, so only matching directories
     * are listed/read. */
   def scanPredicate(pred: String): DataFrame = {
     val pp = partName(pred)
-    liveAt(currentSnapshot().getOrElse(0L))
+    liveAt(None)
       .filter(col("p_part") === pp && col("p") === pred)
       .drop("snap", "p_part")
   }

@@ -69,7 +69,7 @@ object CleanPipeline {
         .select(col("id").as(idCol)),
       Seq(idCol), "left_anti")
 
-  /** Per-stage row counts of a completed run (read back from lineage). */
+  /** Per-stage row counts of a completed run (lineage row counts). */
   final case class Counts(docsIn: Long, afterStrip: Long, afterUrlDedup: Long,
                           afterQuality: Long, afterClean: Long,
                           afterDecontaminate: Long, sampled: Long,
@@ -89,26 +89,21 @@ object CleanPipeline {
           defaultRate: Double = 0.1,
           minWords: Int = 50): Counts = {
     val lin = new Lineage(spark, outRoot, runId)
-    var prevRows = -1L // rows_in of the first computed stage: counted lazily
+    // rows_out of the previous stage; strip keeps every row, so the first
+    // stage's rows_in is its own observed rows_out (no leading input count)
+    var prevRows = -1L
 
-    def staged(name: String, reason: String, in: => DataFrame)
+    def staged(name: String, reason: String, in: DataFrame)
               (f: DataFrame => DataFrame): DataFrame = {
-      val fresh = !lin.isDone(name, checksum)
-      val out = lin.stage(name, checksum)(f(in))
-      val rows = lin.rowsOf(name).getOrElse(out.count())
-      if (fresh) {
-        if (prevRows >= 0) {
-          lin.metric(name, "rowsIn", prevRows.toDouble)
-          lin.metric(name, s"dropped_$reason", (prevRows - rows).toDouble)
-        }
-        lin.metric(name, "rowsOut", rows.toDouble)
-      }
-      prevRows = rows
+      val out = lin.stage(name, checksum, rows => {
+        val rowsIn = if (prevRows >= 0) prevRows else rows
+        Seq("rowsIn" -> rowsIn.toDouble, s"dropped_$reason" -> (rowsIn - rows).toDouble,
+          "rowsOut" -> rows.toDouble)
+      })(f(in))
+      prevRows = lin.rowsOf(name).get
       out
     }
 
-    val nIn = docs.count()
-    prevRows = nIn
     val stripped = staged("strip", "none", docs)(strip(_, textCol))
     val urld = staged("url_dedup", "url_dup", stripped)(urlDedup(_, idCol, urlCol))
     val qual = staged("quality", "quality_fail", urld)(
@@ -125,7 +120,7 @@ object CleanPipeline {
       Sampling.sampleStratified(_, idCol, strataCol, rates, defaultRate))
 
     Counts(
-      docsIn = nIn,
+      docsIn = lin.rowsOf("strip").getOrElse(-1L),
       afterStrip = lin.rowsOf("strip").getOrElse(-1L),
       afterUrlDedup = lin.rowsOf("url_dedup").getOrElse(-1L),
       afterQuality = lin.rowsOf("quality").getOrElse(-1L),

@@ -584,12 +584,16 @@ final class ValidationEngine(
           // a value shared by several foci yields duplicate results, like the
           // reference's per-pair recursion (shape_based_constraints.py:128-135;
           // see SHT core/property/property-001 which expects the duplicates).
+          // sh:detail rows (nested focus as `orig`) pass through once, unchanged.
           val nodes = V.select($"v".as("f")).distinct()
           val childViol = violations(cs, nodes, edge :: stack)
           val parents = V.select($"f".as("_pf"), $"v".as("_pv"))
-          childViol.join(parents, childViol("orig") === $"_pv")
+          val top = childViol("prid").isNull
+          childViol.join(parents, top && childViol("orig") === $"_pv", "left")
+            .filter(!top || $"_pf".isNotNull)
             .select(childViol("f"), childViol("v"), childViol("path"),
-              childViol("comp"), childViol("shape"), $"_pf".as("orig"),
+              childViol("comp"), childViol("shape"),
+              when(top, $"_pf").otherwise(childViol("orig")).as("orig"),
               childViol("constraint"), childViol("msgs"),
               childViol("rid"), childViol("prid"))
         }

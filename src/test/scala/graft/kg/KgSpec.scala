@@ -122,6 +122,23 @@ class KgSpec extends AnyFunSuite {
     assert(c3.docs == 301)
   }
 
+  test("termFrame decides the object kind from the predicate, not the text") {
+    val KG = KgPipeline.KG
+    val triples = Seq(
+      (s"${KG}entity/1", KG + "label", "http://x"),
+      ("media:7", KG + "mediaType", "http://image"),
+      ("http://graft.dev/doc/1", KG + "mentions", s"${KG}entity/1"),
+      ("http://graft.dev/doc/1", KG + "hasMedia", "media:7"),
+      (s"${KG}entity/2", KG + "canonical", "entity-2-without-scheme")).toDF("s", "p", "o")
+    val kinds = KgPipeline.termFrame(triples)
+      .select($"p", $"o.v", $"o.k".cast("int"), $"s.k".cast("int"))
+      .as[(String, String, Int, Int)].collect().map(r => r._1 -> (r._2, r._3, r._4)).toMap
+    assert(kinds(KG + "label") == (("http://x", 2, 0)), "an IRI-looking label must stay a literal")
+    assert(kinds(KG + "mediaType") == (("http://image", 2, 0)))
+    assert(kinds(KG + "mentions")._2 == 0 && kinds(KG + "hasMedia")._2 == 0)
+    assert(kinds(KG + "canonical")._2 == 0)
+  }
+
   test("emitted triples match an independently-computed oracle with P/R = 1") {
     val out = java.nio.file.Files.createTempDirectory("kgpr").toString
     KgPipeline.run(spark, out, 400, partitions = 4, validate = false, runId = "pr")

@@ -11,6 +11,25 @@ class TripleStoreSpec extends AnyFunSuite {
   def mkStore(): TripleStore =
     new TripleStore(spark, java.nio.file.Files.createTempDirectory("tstore").toString)
 
+  test("the snapshot log records the rows each commit wrote") {
+    val base = java.nio.file.Files.createTempDirectory("tstore").toString
+    val st = new TripleStore(spark, base)
+    val df = spark.range(0, 300, 1, 3).select(
+      concat(lit("e:"), $"id".cast("string")).as("s"),
+      when($"id" % 3 === 0, lit("http://kg#a")).otherwise(lit("http://kg#b")).as("p"),
+      $"id".cast("string").as("o"))
+    val s1 = st.append(df)
+    val s2 = st.overwritePartitions(df.filter($"p" === "http://kg#a").limit(40), Seq("http://kg#a"))
+    val s3 = st.append(df.filter(lit(false)))
+    val logged = spark.read.parquet(s"$base/_snapshots").select($"snapshot_id", $"rows")
+      .as[(Long, Long)].collect().toMap
+    val landed = spark.read.parquet(s"$base/data").groupBy($"snap").count()
+      .as[(Long, Long)].collect().toMap
+    assert(logged == Map(s1 -> 300L, s2 -> 40L, s3 -> 0L))
+    assert(landed == logged.filter(_._2 > 0))
+    assert(st.read().count() == 200 + 40)
+  }
+
   test("append snapshots + time-travel reads") {
     val st = mkStore()
     val s1 = st.append(Seq(("e:a", "http://kg#label", "A")).toDF("s", "p", "o"))
