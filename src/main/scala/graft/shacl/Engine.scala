@@ -30,11 +30,7 @@ final case class ValidationOptions(
   focusNodes: Option[Set[String]] = None,
   // use_shapes shape selection (validator.py:237-255): validate only the
   // named shapes (their sub-shapes still evaluate through references)
-  useShapes: Option[Set[String]] = None,
-  /** bound on SparqlFrame's per-graph driver loop for GRAPH ?g blocks that
-    * cannot ride the single-pass quad join (nested GRAPH, subselects);
-    * defaults to the GRAFT_MAX_GRAPH_LOOP env var or 1000 */
-  maxGraphLoop: Int = SparqlFrame.MaxGraphLoop
+  useShapes: Option[Set[String]] = None
 )
 
 /** Catalyst-native SHACL validation engine.
@@ -195,7 +191,7 @@ final class ValidationEngine(
     * vars) and its ?this column is the focus set. */
   private def sparqlTargetDF(st: SparqlTargetIR): DataFrame = {
     val frame = new SparqlFrame(spark, T, step, fnsByIri, None,
-      maxPathDepth = opts.maxPathDepth, maxGraphLoop = opts.maxGraphLoop)
+      maxPathDepth = opts.maxPathDepth)
     val q = Sparql.parseQuery(st.select, st.prefixes) match {
       case s: Sparql.SqSelect => s
       case _ => throw new ReportableError("SPARQLTarget sh:select must be a SELECT query")
@@ -690,7 +686,7 @@ final class ValidationEngine(
 
   private def sparqlFrame(shape: ShapeIR): SparqlFrame =
     new SparqlFrame(spark, T, step, fnsByIri, shape.path, Some(shapesTriplesDF),
-      maxPathDepth = opts.maxPathDepth, maxGraphLoop = opts.maxGraphLoop)
+      maxPathDepth = opts.maxPathDepth)
 
   /** One sh:sparql SELECT constraint over the focus set
     * (sparql_based_constraints.py:96-193): violations are the query's
@@ -835,30 +831,24 @@ final class ValidationEngine(
   }
 
   /** Top-level run: every shape in the cache validates against its own
-    * targets (validator.py:332-337). Returns the collected result rows. */
+    * targets (validator.py:332-337). Returns the collected result rows:
+    * the whole violationsFrame(), or with abortOnFirst the first
+    * violation only. */
   def run(): Seq[ResultRow] = {
-    if (opts.abortOnFirst) {
-      // short-circuit: evaluate shape by shape, stop at the first
-      // violation — a LIMIT-1 existence probe, not a full evaluation
-      // (validator.py:336-337 abort_on_first)
-      val buf = scala.collection.mutable.ListBuffer.empty[Row]
-      val it = selectedShapes.iterator
-      while (it.hasNext && buf.isEmpty) {
-        val shape = it.next()
-        if (!shape.deactivated)
-          targetsDF(shape).map(focusFilter).foreach { t =>
-            buf ++= violations(shape, trackCp(t.localCheckpoint())).limit(1).collect()
-          }
-      }
-      return buf.toSeq.map(rowToResult)
+    if (!opts.abortOnFirst) return violationsFrame().collect().toSeq.map(rowToResult)
+    // short-circuit: evaluate shape by shape, stop at the first
+    // violation — a LIMIT-1 existence probe, not a full evaluation
+    // (validator.py:336-337 abort_on_first)
+    val buf = scala.collection.mutable.ListBuffer.empty[Row]
+    val it = selectedShapes.iterator
+    while (it.hasNext && buf.isEmpty) {
+      val shape = it.next()
+      if (!shape.deactivated)
+        targetsDF(shape).map(focusFilter).foreach { t =>
+          buf ++= violations(shape, trackCp(t.localCheckpoint())).limit(1).collect()
+        }
     }
-    val parts = selectedShapes.flatMap { shape =>
-      if (shape.deactivated) None
-      else targetsDF(shape).map(t => violations(shape, trackCp(focusFilter(t).localCheckpoint())))
-    }
-    if (parts.isEmpty) return Nil
-    val all = parts.reduce(_ unionByName _)
-    all.collect().toSeq.map(rowToResult)
+    buf.toSeq.map(rowToResult)
   }
 
   /** At-scale entry point: the union of every shape's violations as a

@@ -41,9 +41,7 @@ final class SparqlFrame(
     /** fixpoint cap for property-path closures evaluated directly by this
       * frame (quad paths, activeT paths) — thread ValidationOptions
       * .maxPathDepth here; exceeding it throws, never truncates. */
-    maxPathDepth: Int = 100,
-    /** bound on the per-graph driver loop (see SparqlFrame.MaxGraphLoop). */
-    maxGraphLoop: Int = SparqlFrame.MaxGraphLoop) {
+    maxPathDepth: Int = 100) {
   import Sparql._
 
   Kernels.ensure(spark)
@@ -424,14 +422,13 @@ final class SparqlFrame(
       // MaxGraphLoop graphs it fails loudly instead of building a silent
       // multi-thousand-branch plan.
       val names = QuadsDF.graphNames(quads.get)
-      if (names.size > maxGraphLoop)
+      if (names.size > SparqlFrame.MaxGraphLoop)
         throw new ReportableError(
           s"GRAPH ?$x over a block outside the single-pass quad path " +
             s"(GRAPH nested under GRAPH <iri>, or an EXISTS / " +
             s"SHACLFunction body that is itself not quad-compatible) " +
             s"evaluates per named graph, and this dataset has " +
-            s"${names.size} named graphs (limit $maxGraphLoop; raise via " +
-            "ValidationOptions.maxGraphLoop or GRAFT_MAX_GRAPH_LOOP). " +
+            s"${names.size} named graphs (limit ${SparqlFrame.MaxGraphLoop}). " +
             "Rewrite the block to triple patterns (incl. property paths), " +
             "OPTIONAL/UNION/BIND, row-local FILTERs, (NOT) EXISTS, " +
             "SHACLFunction calls with quad-compatible bodies, nested " +
@@ -1563,21 +1560,6 @@ object SparqlFrame {
   /** Bound on the per-graph driver loop for GRAPH ?g blocks that cannot
     * compile to the single-pass quad join (nested GRAPH, subselects):
     * each graph adds a plan branch, so past this many graphs the engine
-    * fails loudly instead of silently building a huge Union plan.
-    * Configurable: `GRAFT_MAX_GRAPH_LOOP` env var (process default) or
-    * per run via ValidationOptions.maxGraphLoop — callers with mid-scale
-    * multigraph datasets (1k-10k vocab graphs) can opt back into the
-    * slow-but-correct loop. */
-  // lazy: an unparseable GRAFT_MAX_GRAPH_LOOP must surface as the
-  // IllegalArgumentException below at the access site — a strict val would
-  // wrap it in ExceptionInInitializerError from the object initializer
-  // (and NoClassDefFoundError on later accesses), hiding the message
-  lazy val MaxGraphLoop: Int = sys.env.get("GRAFT_MAX_GRAPH_LOOP") match {
-    case None => 1000
-    case Some(s) => scala.util.Try(s.trim.toInt).getOrElse(
-      // a set-but-unparseable bound is an operator typo ('10k'), not a
-      // request for the default — fail fast instead of silently keeping 1000
-      throw new IllegalArgumentException(
-        s"GRAFT_MAX_GRAPH_LOOP is set but not an integer: '$s'"))
-  }
+    * fails loudly instead of silently building a huge Union plan. */
+  val MaxGraphLoop = 1000
 }

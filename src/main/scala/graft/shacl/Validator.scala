@@ -37,14 +37,13 @@ object Validator {
     // ont_graph mixin = axiom inoculation, not a plain union (validator.py
     // mix_in_ontology -> rdfutil/inoculate.py)
     val data = ontGraph.map(o => Inoculate.mix(dataGraph, o)).getOrElse(dataGraph)
-    val df0 = TriplesDF.fromMemGraph(spark, data)
-    val df = inferenceStep(spark, df0, opts)
-    validateFrame(spark, df, sg, dataCbd = n => data.cbd(n), opts,
-      prefixes = sg.nsPrefixes ++ data.nsPrefixes)
+    validateFrame(spark, TriplesDF.fromMemGraph(spark, data), sg, dataCbd = n => data.cbd(n),
+      opts, prefixes = sg.nsPrefixes ++ data.nsPrefixes)
   }
 
-  /** Validate an arbitrary triples DataFrame (the at-scale path). CBDs for
-    * blank-node report cloning are fetched via targeted scans. */
+  /** Validate an arbitrary triples DataFrame (the at-scale path), after
+    * the inference and rules `opts` ask for. CBDs for blank-node report
+    * cloning are fetched via targeted scans. */
   def validateFrame(
       spark: SparkSession,
       triples: DataFrame,
@@ -52,20 +51,9 @@ object Validator {
       dataCbd: Node => Seq[Triple],
       opts: ValidationOptions = ValidationOptions(),
       prefixes: Map[String, String] = Map.empty): Outcome = {
-    // advanced mode: apply SHACL-AF rules (graph mutation) before any
-    // constraint runs — validator.py:323-330
-    val expanded =
-      if (opts.advanced) RulesEngine.expand(spark, triples, shapesGraph, opts.iterateRules)
-      else triples
-    val shapes = new ShapeCompiler(shapesGraph).compile()
-    val engine = new ValidationEngine(spark, expanded, shapes, shapesGraph, opts)
+    val (shapes, engine) = prepare(spark, triples, shapesGraph, opts)
     val rows = engine.run()
-    // allow_infos/allow_warnings: allowed severities still report but do not
-    // flip conformance (shape.py:729-741)
-    val allowed: Set[Iri] =
-      (if (opts.allowWarnings) Set(SH.Info, SH.Warning)
-       else if (opts.allowInfos) Set(SH.Info)
-       else Set.empty[Iri])
+    val allowed = allowedSeverities(opts)
     val shapesByKey = shapes.values.map(sh => sh.id.key -> sh).toMap
     // detail rows (sh:detail children) never flip conformance on their own
     val blocking = rows.filterNot(_.isDetail).filterNot(r =>
@@ -112,12 +100,7 @@ object Validator {
       shapesGraph: MemGraph,
       opts: ValidationOptions = ValidationOptions(),
       sampleSize: Int = 100): ScaleOutcome = {
-    val inferred = inferenceStep(spark, triples, opts)
-    val expanded =
-      if (opts.advanced) RulesEngine.expand(spark, inferred, shapesGraph, opts.iterateRules)
-      else inferred
-    val shapes = new ShapeCompiler(shapesGraph).compile()
-    val engine = new ValidationEngine(spark, expanded, shapes, shapesGraph, opts)
+    val (shapes, engine) = prepare(spark, triples, shapesGraph, opts)
     import org.apache.spark.sql.functions._
     // detail rows are report decoration, not top-level results
     val viol = engine.violationsFrame().filter(col("prid").isNull)
@@ -129,10 +112,7 @@ object Validator {
     val bySev = counts.groupBy { case (_, sk, _) => engine.severityOf(sk).value }
       .map { case (sev, rows) => sev -> rows.map(_._3).sum }
     val byComp = counts.groupBy(_._1).map { case (c, rows) => c -> rows.map(_._3).sum }
-    val allowed: Set[String] =
-      (if (opts.allowWarnings) Set(SH.Info.value, SH.Warning.value)
-       else if (opts.allowInfos) Set(SH.Info.value)
-       else Set.empty[String])
+    val allowed = allowedSeverities(opts).map(_.value)
     val blocking = bySev.filterNot { case (sev, _) => allowed.contains(sev) }.values.sum
     val sampleRows = viol.limit(sampleSize).collect().toSeq
       .map(r => ResultRow(
@@ -193,6 +173,27 @@ object Validator {
     viol.filter(col("prid").isNull).select(rn.as("s"), explode(pairs).as("po"))
       .filter(col("po").isNotNull).select(col("s"), col("po.p").as("p"), col("po.o").as("o"))
   }
+
+  /** The preparation both frame entry points share: inference, then
+    * SHACL-AF rules in advanced mode (graph mutation before any constraint
+    * runs, validator.py:323-330), then the compiled shapes and the engine
+    * over the expanded triples. */
+  private def prepare(spark: SparkSession, triples: DataFrame, shapesGraph: MemGraph,
+                      opts: ValidationOptions): (Map[Node, ShapeIR], ValidationEngine) = {
+    val inferred = inferenceStep(spark, triples, opts)
+    val expanded =
+      if (opts.advanced) RulesEngine.expand(spark, inferred, shapesGraph, opts.iterateRules)
+      else inferred
+    val shapes = new ShapeCompiler(shapesGraph).compile()
+    (shapes, new ValidationEngine(spark, expanded, shapes, shapesGraph, opts))
+  }
+
+  /** allow_infos / allow_warnings (shape.py:729-741): results at these
+    * severities still report but do not flip conformance. */
+  private def allowedSeverities(opts: ValidationOptions): Set[Iri] =
+    if (opts.allowWarnings) Set(SH.Info, SH.Warning)
+    else if (opts.allowInfos) Set(SH.Info)
+    else Set.empty
 
   /** Pre-validation inference (run_type.py:21-85): 'rdfs', 'owlrl', or
     * 'both' (owlrl here subsumes the rdfs closure). With

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** CleanPipeline soak driver: synthesizes an N-doc corpus (DocSynth),
@@ -15,13 +14,8 @@ object CleanCli {
     val outRoot = args(0)
     val nDocs = args.lift(1).map(_.toLong).getOrElse(500000L)
     val fat = args.lift(2).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .appName("graft-clean")
-      .config("spark.sql.shuffle.partitions", math.max(cpus * 4, 16).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Sessions.cpus
+    val spark = Sessions.local("graft-clean")
     val t0 = System.nanoTime()
     val all = graft.kg.DocSynth.docs(spark, nDocs, 42, math.max(cpus * 4, 64), fat).toDF()
       .select(col("doc_id"),

@@ -1,17 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Pure-CPU scaling probe: iterated hashing, negligible memory traffic. */
+/** Pure-CPU scaling probe: iterated hashing, negligible memory traffic.
+  * Usage: SPARK_GRAFT_CPUS=<n> runMain graft.tools.CpuProbe [rows] */
 object CpuProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = args(0).toInt
-    val n = args.lift(1).map(_.toLong).getOrElse(20000000L)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val n = args.headOption.map(_.toLong).getOrElse(20000000L)
+    val spark = Sessions.local("graft-cpu-probe")
     import spark.implicits._
     // warm
     spark.range(0, 1000000, 1, 64).select(max(xxhash64($"id"))).head()
@@ -20,7 +16,7 @@ object CpuProbe {
     val r = spark.range(0, n, 1, 128)
       .select(iterated.as("h2"))
       .agg(max($"h2")).head()
-    println(f"CPU cpus=$cpus sec=${(System.nanoTime()-t0)/1e9}%.2f r=$r")
+    println(f"CPU cpus=${Sessions.cpus} sec=${(System.nanoTime()-t0)/1e9}%.2f r=$r")
     spark.stop()
   }
 }

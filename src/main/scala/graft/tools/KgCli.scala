@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.kg.KgPipeline
-import org.apache.spark.sql.SparkSession
 
 /** CLI for the KG-construction pipeline: synthesize docs, run all stages
   * with lineage/resume, print stage counts + conformance.
@@ -13,18 +12,9 @@ object KgCli {
     val out = args.headOption.getOrElse("/tmp/graft-kg")
     val n = args.lift(1).map(_.toLong).getOrElse(1000L)
     val runId = args.lift(2).getOrElse("run1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-kg")
-      .config("spark.sql.shuffle.partitions", math.max(cpus.toInt * 4, 16).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-kg")
     val t0 = System.nanoTime()
-    val c = KgPipeline.run(spark, out, n, partitions = cpus.toInt, runId = runId)
+    val c = KgPipeline.run(spark, out, n, partitions = Sessions.cpus, runId = runId)
     val dt = (System.nanoTime() - t0) / 1e9
     // peak RSS of this (driver) JVM — the soak evidence that the driver
     // stays bounded while the data scales (VmHWM = high-water mark)

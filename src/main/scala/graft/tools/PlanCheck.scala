@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for representative queries so plan
   * regressions (lost pushdown, missed broadcast, codegen breaks) are
   * visible. Usage: runMain graft.tools.PlanCheck [sfDir] [names...] */
@@ -32,11 +30,7 @@ object PlanCheck {
         // late r6: decontamination (bench fp set broadcast, corpus streams
         // once), stratified sampling (single codegen filter, zero shuffle)
         "q_decontaminate", "q_sample_strata", "q_url_canon")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-plan-check")
     names.foreach { n =>
       println(s"========== $n ==========")
       graft.Queries.all(n)(spark, dir).explain("formatted")

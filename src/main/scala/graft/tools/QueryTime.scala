@@ -1,22 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Times individual registry queries without a full Bench pass.
   * Usage: runMain graft.tools.QueryTime <sfDir> <name> [name...] */
 object QueryTime {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else graft.Queries.all.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-query-time")
     for (n <- names) {
       val t0 = System.nanoTime()
       val rows = graft.Queries.all(n)(spark, dir).count()

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.rdf._
 import graft.shacl._
-import org.apache.spark.sql.SparkSession
 
 /** Rules-expansion CLI, pyshacl_rules-shaped
   * (/root/reference/pyshacl/entrypoints.py:362-472): prints the expanded
@@ -14,11 +13,7 @@ object RulesCli {
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { System.err.println("usage: RulesCli <data.ttl> [shapes.ttl] [--iterate] [--rdfs]"); sys.exit(2) }
     val pos = args.filterNot(_.startsWith("--")).toList
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-rules")
     try {
       val dataG = GraphLoader.parseFile(pos.head) // format-sniffing loader
       val shapesG = pos.lift(1).map(GraphLoader.parseFile(_, bnodePrefix = "s")).getOrElse(dataG)

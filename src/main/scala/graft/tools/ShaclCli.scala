@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.rdf._
 import graft.shacl._
-import org.apache.spark.sql.SparkSession
 
 /** CLI validator, pySHACL-CLI-shaped (/root/reference/pyshacl/cli.py:243-420):
   * exit 0 conforms / 1 not / 2 error; prints the report text and, with -f
@@ -106,14 +105,7 @@ object ShaclCli {
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { System.err.println("usage: ShaclCli <data.ttl> [shapes.ttl] [--inference rdfs|owlrl|both] [--strict-owlrl] [-f human|turtle|nt|table] [--ttl] [--advanced] [--iterate-rules] [--allow-infos] [--allow-warnings] [--abort-first] [--focus <iri,iri>] [--use-shapes <iri,iri>] [-e ontology.ttl] [-m shacl-shacl.ttl] [--imports] [-o report.out]"); sys.exit(2) }
     val CliArgs(pos, opts, fmt, ontFile, metashacl, imports, output) = parseArgs(args)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-shacl")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-shacl")
     try {
       // --imports: chase local owl:imports from the data document
       // (GraphLoader.loadWithImports; web IRIs recorded as skipped)
@@ -161,14 +153,7 @@ object ShaclCli {
 object ShtCli {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/reference/test/resources/sht_tests/core")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-sht")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-sht")
     val results =
       if (args.contains("--dash")) ShtSuite.runAllDash(spark, dir)
       else ShtSuite.runAll(spark, dir)

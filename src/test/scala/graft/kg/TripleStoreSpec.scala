@@ -137,19 +137,6 @@ class TripleStoreSpec extends AnyFunSuite {
     assert(graft.rdf.TriplesDF.readNTriples(spark, ntDir).count() == st.read().count())
   }
 
-  test("salted join equals plain join on skewed keys") {
-    val big = spark.range(0, 10000).select(
-      when($"id" % 100 =!= 0, $"id" % 500).otherwise(lit(7L)).as("k"), $"id".as("payload"))
-    val small = spark.range(0, 500).select($"id".as("k"), concat(lit("v"), $"id").as("v"))
-    val hot = Skew.hotKeys(big, "k", threshold = 50)
-    assert(hot.contains(7L))
-    val plain = big.join(small, "k").select($"k", $"payload", $"v")
-      .as[(Long, Long, String)].collect().toSet
-    val salted = Skew.saltedJoin(spark, big, small, "k", hot)
-      .select($"k", $"payload", $"v").as[(Long, Long, String)].collect().toSet
-    assert(salted == plain)
-  }
-
   test("format marker: marker-less store with AGREEING p_part values is adopted") {
     // a store written by v2 code just before the marker landed must not be
     // forced through a needless re-export: verify names, write the marker

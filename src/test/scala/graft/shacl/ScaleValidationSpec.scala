@@ -168,4 +168,30 @@ class ScaleValidationSpec extends AnyFunSuite {
     atScale.release()
     assert(spark.sparkContext.getPersistentRDDs.size <= before)
   }
+
+  test("validateFrame runs the inference the options ask for") {
+    // ex:alice is untyped: only RDFS inference over the rdfs:domain axiom
+    // makes her an ex:Person, the class the shape targets
+    val data = TurtleParser.parseGraph(
+      """@prefix ex: <http://ex.org/> .
+        |@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .
+        |ex:worksFor rdfs:domain ex:Person .
+        |ex:alice ex:worksFor ex:acme .
+        |""".stripMargin, "http://test/d")
+    val shapes = TurtleParser.parseGraph(
+      """@prefix sh: <http://www.w3.org/ns/shacl#> .
+        |@prefix ex: <http://ex.org/> .
+        |ex:S a sh:NodeShape ; sh:targetClass ex:Person ;
+        |  sh:property [ sh:path ex:name ; sh:minCount 1 ] .
+        |""".stripMargin, "http://test/s")
+    val df = TriplesDF.fromMemGraph(spark, data)
+    assert(Validator.validateFrame(spark, df, shapes, n => data.cbd(n)).conforms)
+    val rdfs = ValidationOptions(inference = "rdfs")
+    val out = Validator.validateFrame(spark, df, shapes, n => data.cbd(n), rdfs)
+    assert(!out.conforms)
+    assert(out.results.map(_.focus) == Seq(Iri("http://ex.org/alice")))
+    val atScale = Validator.validateFrameAtScale(spark, df, shapes, rdfs)
+    assert(atScale.totalViolations == 1)
+    atScale.release()
+  }
 }
