@@ -916,7 +916,7 @@ object Queries {
          |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
          |WHERE bit_count(xor(a.sh_lo, b.sh_lo)) + bit_count(xor(a.sh_hi, b.sh_hi)) <= 10""".stripMargin
     },
-    // df-capped inverted-index exact Jaccard; mirrors Dedup.shingles
+    // df-capped inverted-index exact Jaccard; mirrors WordShingles
     // (word 3-grams of lower(trim(text)) split on \s+) and the [2, maxDf]
     // blocking exactly
     "q_ngram_jaccard" ->

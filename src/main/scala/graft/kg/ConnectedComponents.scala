@@ -113,13 +113,12 @@ object ConnectedComponents {
         val ra = find(a); val rb = find(b)
         if (ra != rb) { if (ra < rb) put(rb, ra) else put(ra, rb) }
       }
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      var i = 0
-      while (i < cap) {
-        if (used(i)) { val k = keys(i); val r = find(k); if (r != k) out += ((r, k)) }
-        i += 1
+      // emit the stars straight from the slot scan (find only compresses
+      // paths of existing keys, so the map no longer grows): no buffer
+      Iterator.range(0, cap).flatMap { i =>
+        if (!used(i)) None
+        else { val k = keys(i); val r = find(k); if (r != k) Some((r, k)) else None }
       }
-      out.iterator
     }.toDF("a", "b")
   }
 

@@ -20,16 +20,6 @@ object Dedup {
       .agg(count(lit(1)).as("cnt"), sort_array(collect_list(col(idCol))).as("ids"))
       .filter(col("cnt") > 1)
 
-  /** Word k-shingles as an array column (codegen'd, no UDF). */
-  def shingles(text: Column, k: Int = 3): Column = {
-    val toks = split(lower(trim(text)), "\\s+")
-    filter(
-      transform(toks, (_, i) =>
-        when(i <= size(toks) - k,
-          array_join(slice(toks, i + lit(1), lit(k)), " "))),
-      x => x.isNotNull)
-  }
-
   /** Portable MinHash signature table: the shingle hash is md5-derived
     * (h1 = 60 bits, h2 = 60 bits mod P) and permutation i is the
     * Kirsch-Mitzenmacher double hash (h1 + i*h2) mod P with P = 2^31-1 —
@@ -594,7 +584,7 @@ object Dedup {
   def ngramJaccard(docs: DataFrame, idCol: String, textCol: String,
                    candidates: DataFrame, k: Int = 3): DataFrame = {
     val sh = docs.select(col(idCol).as("id"),
-      array_distinct(shingles(col(textCol), k)).as("sh"))
+      array_distinct(WordShingles.column(split(lower(trim(col(textCol))), "\\s+"), k)).as("sh"))
     val withA = candidates.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
     val withB = withA.join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
     withB.select(col("id_a"), col("id_b"),

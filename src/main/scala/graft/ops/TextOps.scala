@@ -84,7 +84,7 @@ object TextOps {
     * doc has fewer than 3 tokens. Boilerplate-heavy and degenerate
     * (looping) documents score high. */
   def dupTrigramFraction(text: Column): Column = {
-    val sh = Dedup.shingles(text)
+    val sh = WordShingles.column(split(lower(trim(text)), "\\s+"), 3)
     when(size(sh) < 1, lit(0.0d))
       .otherwise(round(lit(1.0d) -
         size(array_distinct(sh)).cast("double") / size(sh), 4))
@@ -102,7 +102,9 @@ object TextOps {
     * below 0.1, stopword ratio above 0.03, duplicate-trigram fraction
     * below 0.2. Thresholds are parameters so corpora can tune them; every
     * term is deterministic and SQL-expressible (DuckDB-oracled as
-    * q_gopher). */
+    * q_gopher). Every signal tokenizes once per row: no lambda re-splits
+    * the text per element (the trigram shingles are one [[WordShingles]]
+    * call, so the filter stays linear in document length). */
   def gopherKeep(text: Column, minWords: Int = 50, maxWords: Int = 100000): Column =
     tokenCount(text).between(minWords, maxWords) &&
       meanWordLen(text).between(3.0, 10.0) &&

@@ -1,28 +1,29 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.{CatalystColumns, Column}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Word k-gram shingle array over a token array (array<string> in,
   * array<string> out): element i = the k tokens starting at i joined with
   * a single space — exactly `array_join(slice(toks, i+1, k), " ")` for
-  * i in 0..n-k, i.e. what [[Dedup.shingles]]'s higher-order
-  * transform/slice/array_join chain produces, null tokens skipped by the
-  * join the same way array_join skips them.
+  * i in 0..n-k, null tokens skipped by the join the same way array_join
+  * skips them. The one shingle-array implementation: the quality
+  * filter's repetition signal and `Dedup.ngramJaccard` call it, and the
+  * signature/window kernels hash the same strings.
   *
   * Exists for guide §4 reasons: Spark evaluates higher-order-function
-  * lambdas interpreted, per element, and the HOF chain allocates a slice
-  * ArrayData per output shingle — the r8 stage audit measured 10-25 s of
-  * task CPU per signature/window stage at sf0.1 in that chain. This
-  * expression emits ONE static-method call per row inside whole-stage
-  * codegen (same pattern as [[ArrayDotProduct]]); the loop body is plain
-  * JIT-able JVM code. Output strings are byte-identical, so every
-  * md5-derived fingerprint downstream (and the DuckDB oracle) is
-  * unchanged. */
+  * lambdas interpreted, per element, and a transform/slice/array_join
+  * chain allocates a slice ArrayData per output shingle — and when its
+  * lambda names the token array, re-runs the regex split per element,
+  * O(n²) per document. This expression emits ONE static-method call per
+  * row inside whole-stage codegen (same pattern as [[ArrayDotProduct]]);
+  * the loop body is plain JIT-able JVM code. Output strings are
+  * byte-identical to that chain (OpsSpec pins it), so every md5-derived
+  * fingerprint downstream (and the DuckDB oracle) is unchanged. */
 case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
   require(k >= 1, s"shingle width must be >= 1 (got $k)")
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -42,6 +43,10 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
 object WordShingles {
   private val SPACE = UTF8String.fromString(" ")
 
+  /** `graft_shingles(tokens, k)` as a Column built from the expression
+    * itself, so plain `Column => Column` operators need no session. */
+  def column(tokens: Column, k: Int): Column = CatalystColumns.wrap(tokens)(WordShingles(_, k))
+
   /** Tight shingle loop shared by interpreted eval and generated code. */
   def compute(arr: ArrayData, k: Int): ArrayData = {
     val n = arr.numElements()
@@ -60,28 +65,5 @@ object WordShingles {
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  // WeakHashMap keyed by session (same idempotent-registration scheme and
-  // rationale as ArrayDotProduct.ensure)
-  private val registeredFor = new java.util.WeakHashMap[SparkSession, Unit]()
-
-  /** Register `graft_shingles(tokens, k)` (k must be an integer literal)
-    * with the session's function registry, idempotent per session. */
-  def ensure(spark: SparkSession): Unit = registeredFor.synchronized {
-    if (registeredFor.containsKey(spark)) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      { children =>
-        require(children.size == 2, "graft_shingles takes exactly 2 arguments")
-        val k = children(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_shingles width must be an integer literal, got $other")
-        }
-        WordShingles(children.head, k)
-      },
-      "built-in")
-    registeredFor.put(spark, ())
   }
 }

@@ -81,6 +81,42 @@ class KgSpec extends AnyFunSuite {
     assert(withV == expected.toMap ++ Map(1L -> 1L, 2L -> 2L))
   }
 
+  test("CC local contraction emits exact stars from a node-dense partition") {
+    // one partition, 120k scattered ids in components of 2-4 nodes with a
+    // few duplicate/reversed edges: the slot map grows to 2^18 slots and
+    // the scan emits one star edge per non-root node, checked against a
+    // driver-side union-find
+    val rnd = new scala.util.Random(11)
+    val ids = rnd.shuffle((0L until 120000L).map(_ * 7919L + 3L).toVector)
+    val edges = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    var rest = ids
+    while (rest.nonEmpty) {
+      val (comp, tail) = rest.splitAt(2 + rnd.nextInt(3))
+      for (j <- 1 until comp.size) {
+        val e = (comp(j), comp(rnd.nextInt(j)))
+        edges += (if (rnd.nextBoolean()) e else e.swap)
+        if (rnd.nextInt(10) == 0) edges += e.swap
+      }
+      rest = tail
+    }
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = { val p = parent.getOrElse(x, x); if (p == x) x else find(p) }
+    edges.foreach { case (a, b) =>
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val expected = edges.flatMap(e => Seq(e._1, e._2)).map(v => v -> find(v)).toMap
+    val df = edges.toSeq.toDF("a", "b").coalesce(1)
+    assert(df.rdd.getNumPartitions == 1)
+    val stars = ConnectedComponents.contractLocal(spark, df)
+      .as[(Long, Long)].collect()
+    assert(stars.length == expected.count { case (v, r) => v != r })
+    assert(stars.toSet == expected.toSeq.collect { case (v, r) if v != r => (r, v) }.toSet)
+    val got = ConnectedComponents.run(spark, df.toDF("src", "dst"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == expected)
+  }
+
   test("span tagger preserves per-row span-sequence (kind,text,media_ref,order)") {
     val docs = DocSynth.docs(spark, 200, seed = 42, partitions = 4)
     val tagged = KgPipeline.tagSpans(docs)

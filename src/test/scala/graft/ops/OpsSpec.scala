@@ -232,6 +232,62 @@ class OpsSpec extends AnyFunSuite {
     assert(!m(4L)._1, "short doc must drop on word count")
   }
 
+  test("trigram shingle kernel equals the transform/slice/array_join chain it replaced") {
+    // the pre-kernel repetition signal, written out as the executable
+    // contract: every shingle, dup3 and keep verdict must match it
+    val prose = ("the quick brown fox jumps over the lazy dog and then " +
+      "walks into the forest to find some food for the long winter season " +
+      "while birds are singing in the trees above the quiet river bank " +
+      "where children often play during warm summer afternoons with kites " +
+      "and later the families gather around small fires to share stories " +
+      "about distant mountains and the travelers who once crossed them")
+    val edge = Seq[String](null, "", "one", "two words", "   lead and trail   ",
+      "tab\tsep\tWords\nnew line  \t run\r\nof   white space here",
+      "Café naïve ÜBER straße 東京 タワー café naïve über straße",
+      (1 to 500).map(_ => "buy cheap pills now").mkString(" "), // 2,000 tokens
+      prose, s"  $prose\t$prose  ")
+    val corpus = spark.read.parquet(s"$sf/documents.parquet").select($"doc_id", $"text")
+    val docs = edge.zipWithIndex.map { case (t, i) => (900000L + i, t) }
+      .toDF("doc_id", "text").union(corpus)
+    val toks = split(lower(trim($"text")), "\\s+")
+    val hof = filter(transform(toks, (_, i) =>
+      when(i <= size(toks) - 3, array_join(slice(toks, i + 1, lit(3)), " "))), _.isNotNull)
+    val oldDup3 = when(size(hof) < 1, lit(0.0d))
+      .otherwise(round(lit(1.0d) - size(array_distinct(hof)).cast("double") / size(hof), 4))
+    val oldKeep = TextOps.tokenCount($"text").between(50, 100000) &&
+      TextOps.meanWordLen($"text").between(3.0, 10.0) &&
+      (TextOps.symbolRatio($"text") < 0.1) && (TextOps.stopwordRatio($"text") > 0.03) &&
+      (oldDup3 < 0.2)
+    val rows = docs.select($"doc_id", hof, WordShingles.column(toks, 3),
+      oldDup3, TextOps.dupTrigramFraction($"text"), oldKeep, TextOps.gopherKeep($"text"))
+      .collect()
+    assert(rows.length == edge.size + corpus.count())
+    for (r <- rows) {
+      val id = r.getLong(0)
+      assert(r.get(1) == r.get(2), s"shingles differ for doc $id")
+      assert(r.get(3) == r.get(4), s"dup3 differs for doc $id")
+      assert(r.get(5) == r.get(6), s"keep differs for doc $id")
+    }
+    val byId = rows.map(r => r.getLong(0) -> r).toMap
+    assert(byId(900000L).isNullAt(2) && byId(900000L).isNullAt(4)) // null text
+    assert(byId(900003L).getSeq[String](2).isEmpty && byId(900003L).getDouble(4) == 0.0)
+    assert(byId(900007L).getSeq[String](2).size == 1998 && byId(900007L).getDouble(4) > 0.99)
+    assert(byId(900008L).getBoolean(6) && !byId(900009L).getBoolean(6)) // prose keeps, doubled drops
+  }
+
+  test("gopherKeep tokenizes once per row: no lambda body re-splits the text") {
+    // a lambda that names the token array re-runs the regex split for
+    // every element (O(n²) per document); the stopword filter's lambda
+    // only tests isin, so it is the one lambda expected here
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, StringSplit}
+    val plan = Seq("some text").toDF("text")
+      .select(TextOps.gopherKeep($"text")).queryExecution.analyzed
+    val lambdas = plan.flatMap(_.expressions).flatMap(_.collect { case l: LambdaFunction => l })
+    assert(lambdas.nonEmpty, "the walk must reach the stopword filter's lambda")
+    val resplits = lambdas.filter(_.function.exists(_.isInstanceOf[StringSplit]))
+    assert(resplits.isEmpty, s"per-element re-tokenization: ${resplits.map(_.sql).mkString("; ")}")
+  }
+
   test("portable ANN twins: partition-invariant signatures + recall pinned") {
     val items = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
       .select($"vec_id", $"embedding")
@@ -596,7 +652,6 @@ class OpsSpec extends AnyFunSuite {
   test("RepetitionStats projection matches the explode+groupBy+window form") {
     // the pre-r8 shape, inlined as the executable contract (the DuckDB
     // q_repetition oracle recomputes the same tallies its own way)
-    WordShingles.ensure(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"doc_id", regexp_replace($"text", " line ", "\n").as("text"))
       .union(Seq(
@@ -617,8 +672,8 @@ class OpsSpec extends AnyFunSuite {
       round(sum(($"c" - 1) * $"len").cast("double") /
         greatest(sum($"c" * $"len"), lit(1L)), 4).as("dup_line_char_frac"))
     val bigramCounts = base
-      .select($"id", explode(call_function("graft_shingles",
-        split(lower(trim($"text")), "\\s+"), lit(2))).as("bg"))
+      .select($"id", explode(WordShingles.column(
+        split(lower(trim($"text")), "\\s+"), 2)).as("bg"))
       .groupBy($"id", $"bg").agg(count(lit(1)).as("c"))
     val topBigram = bigramCounts
       .withColumn("rn", row_number().over(
@@ -648,7 +703,6 @@ class OpsSpec extends AnyFunSuite {
     // hashes == array_distinct(graft_shingles) -> md5/conv per element;
     // ordered window fps == graft_shingles -> md5/conv per element
     // (what the DuckDB ngram/substring/decontaminate oracles recompute)
-    WordShingles.ensure(spark)
     ShingleHashes.ensure(spark)
     WindowFps.ensure(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -658,7 +712,7 @@ class OpsSpec extends AnyFunSuite {
       .select($"doc_id", split(lower(trim($"text")), "\\s+").as("tk"))
     for (k <- Seq(3, 13, 20)) {
       val expShingle = docs.select($"doc_id",
-        transform(array_distinct(call_function("graft_shingles", $"tk", lit(k))),
+        transform(array_distinct(WordShingles.column($"tk", k)),
           s => conv(substring(md5(s), 1, 15), 16, 10).cast("long")).as("hs"))
         .as[(Long, Seq[Long])].collect().toMap
       val gotShingle = docs.select($"doc_id",
@@ -666,7 +720,7 @@ class OpsSpec extends AnyFunSuite {
         .as[(Long, Seq[Long])].collect().toMap
       assert(gotShingle == expShingle, s"shingle hashes diverge at k=$k")
       val expFps = docs.select($"doc_id",
-        transform(call_function("graft_shingles", $"tk", lit(k)),
+        transform(WordShingles.column($"tk", k),
           s => conv(substring(md5(s), 1, 15), 16, 10).cast("long")).as("fps"))
         .as[(Long, Seq[Long])].collect().toMap
       val gotFps = docs.select($"doc_id",
@@ -709,14 +763,13 @@ class OpsSpec extends AnyFunSuite {
     // codegen shingles -> md5 h1/h2 -> 16 Kirsch-Mitzenmacher min
     // aggregates (the DuckDB q_minhash_* oracles recompute this form)
     val P = 2147483647L
-    WordShingles.ensure(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"doc_id", $"text")
       .union(Seq((900001L, ""), (900002L, "only two"),
         (900003L, "exactly three tokens"), (900004L, " pad  a b c  ")).toDF("doc_id", "text"))
     val h = docs.select($"doc_id".as("id"),
-      explode(array_distinct(call_function("graft_shingles",
-        split(lower(trim($"text")), "\\s+"), lit(3)))).as("s"))
+      explode(array_distinct(WordShingles.column(
+        split(lower(trim($"text")), "\\s+"), 3))).as("s"))
       .select($"id", md5($"s").as("m"))
       .select($"id",
         conv(substring($"m", 1, 15), 16, 10).cast("long").as("h1"),
