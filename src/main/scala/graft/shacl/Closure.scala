@@ -1,11 +1,14 @@
 package graft.shacl
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one semi-naive closure kernel behind every recursive operator:
   * property-path closures ([[PathEval]]), OWL-RL `owl:TransitiveProperty`
-  * (prp-trp) and the registry's `q_closure`.
+  * (prp-trp) and the registry's `q_closure`; and [[absorb]], the one naive
+  * fixpoint step behind the SHACL-AF rule loop ([[RulesEngine.expand]]) and
+  * OWL-RL classification and sameAs replication ([[OwlRlInference.expand]]).
   *
   * Each batch chains [[Unroll]] applications of `step` lazily from the
   * frontier, subtracts everything reached so far once, at the batch
@@ -54,6 +57,33 @@ object Closure {
       frontier = batch
     }
     reached
+  }
+
+  /** Grow `graph` by the rows of `derived` it lacks (duplicates in
+    * `derived` count once; `graph`'s own rows are kept as they are).
+    * The new rows sit behind a lazy `localCheckpoint` whose count is its
+    * only job; when there are any, the grown graph is checkpointed eagerly
+    * and `graph`'s checkpoint is freed. Returns the graph to continue with
+    * and the number of rows added. */
+  def absorb(graph: DataFrame, derived: DataFrame): (DataFrame, Long) = {
+    val cols = graph.columns.toSeq
+    def prefixed(df: DataFrame, pre: String) = df.select(cols.map(c => col(c).as(pre + c)): _*)
+    // the new rows get column ids of their own (renamed across the join):
+    // sharing graph's ids, the union below would re-instance their
+    // checkpoint, whose constraints Spark then fails to re-map when a column's
+    // nested nullability differs between the two
+    val fresh = prefixed(derived, "_d").distinct()
+      .join(prefixed(graph, "_g"), cols.map(c => col("_d" + c) === col("_g" + c)).reduce(_ && _),
+        "left_anti")
+      .toDF(cols: _*).localCheckpoint(false)
+    val n = fresh.count()
+    val grown = if (n == 0) graph else {
+      val g = graph.unionByName(fresh).localCheckpoint()
+      free(graph)
+      g
+    }
+    free(fresh)
+    (grown, n)
   }
 
   /** The driver-side closure for small in-memory graphs (schema

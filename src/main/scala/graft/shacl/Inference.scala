@@ -303,7 +303,9 @@ object OwlRlInference {
     val hasRules = svf.nonEmpty || avf.nonEmpty || hv.nonEmpty || chains.nonEmpty ||
       fps.nonEmpty || ifps.nonEmpty || maxC1.nonEmpty || maxQC1.nonEmpty
 
-    def classifyFixpoint(): Unit = if (hasRules) {
+    // each returns the number of rows it added to `out`
+    def classifyFixpoint(): Long = if (!hasRules) 0L else {
+      var added = 0L
       var grew = true
       var round = 0
       while (grew && round < MaxRounds) {
@@ -392,19 +394,14 @@ object OwlRlInference {
         }
         if (derived.isEmpty) grew = false
         else {
-          val fresh = derived.reduce(_ unionByName _).distinct()
-            .join(out, Seq("s", "p", "o"), "left_anti").localCheckpoint()
-          val n = fresh.count()
-          if (n > 0) {
-            val superseded = out
-            out = out.unionByName(fresh).distinct().localCheckpoint()
-            Closure.free(superseded) // new checkpoint materialized; old blocks dead
-          }
-          Closure.free(fresh)
+          val (grown, n) = Closure.absorb(out, derived.reduce(_ unionByName _))
+          out = grown
+          added += n
           grew = n > 0
         }
       }
       if (grew) capExceeded("OWL-RL classification fixpoint", MaxRounds)
+      added
     }
 
     // eq-rep: owl:sameAs symmetric-transitive closure, then replicate every
@@ -416,12 +413,12 @@ object OwlRlInference {
     // Small alias sets (the corpora) come from a driver BFS + broadcast;
     // past DriverSameAsLimit edges, components run distributed through the
     // ConnectedComponents operator and the pair table stays a join.
-    def eqRep(): Unit = {
+    def eqRep(): Long = {
     val sameAsEdges = out.filter($"p" === O("sameAs"))
       .select(termKey($"s").as("_src"), termKey($"o").as("_dst"))
       .filter($"_src" =!= $"_dst").distinct()
     val probe = sameAsEdges.limit(DriverSameAsLimit + 1).count()
-    if (probe > 0) {
+    if (probe == 0) 0L else {
       val pairsDF: DataFrame =
         if (probe <= DriverSameAsLimit) {
           val sameAs = sameAsEdges.collect().map(r => (r.getString(0), r.getString(1))).toSeq
@@ -449,16 +446,20 @@ object OwlRlInference {
         }
       val subDF = pairsDF.select($"_from".as("_sfrom"), $"_to".as("_sto"))
       val objDF = pairsDF.select($"_from".as("_ofrom"), $"_to".as("_oto"))
-      out = out
+      // only rows with an aliased term can be new: a row with neither
+      // alias equals its original
+      val (grown, n) = Closure.absorb(out, out
         .join(subDF, termKey($"s") === $"_sfrom", "left")
         .join(objDF, termKey($"o") === $"_ofrom", "left")
+        .filter($"_sto".isNotNull || $"_oto".isNotNull)
         .select(
           when($"_sto".isNull, $"s")
             .otherwise(RdfsInference.termKeyToTermCol(spark, $"_sto")).as("s"),
           $"p",
           when($"_oto".isNull, $"o")
-            .otherwise(RdfsInference.termKeyToTermCol(spark, $"_oto")).as("o"))
-        .distinct()
+            .otherwise(RdfsInference.termKeyToTermCol(spark, $"_oto")).as("o")))
+      out = grown
+      n
     }
     }
 
@@ -466,32 +467,15 @@ object OwlRlInference {
     // re-fire chains/classification, and fp/ifp over replicated triples can
     // mint new sameAs pairs (the reference's owlrl library materializes to
     // the full fixpoint, run_type.py:21-85). Without rules one eq-rep pass
-    // is already complete — the loop (and its counting jobs) is skipped, so
-    // the identity-heavy path (e.g. the 1M-pair closure) pays no extra cost.
-    classifyFixpoint()
-    eqRep()
-    if (hasRules) {
-      var cp = out.localCheckpoint()
-      out = cp
-      var prev = -1L
-      var cur = out.count()
-      var outer = 0
-      while (cur != prev) {
-        outer += 1
-        prev = cur
-        classifyFixpoint()
-        eqRep()
-        val superseded = cp
-        cp = out.localCheckpoint()
-        out = cp
-        // each outer round pinned a full graph copy until JVM exit
-        // otherwise (review finding, round 4)
-        Closure.free(superseded)
-        cur = out.count()
-        // the round after the cap only checks that nothing is left
-        if (cur != prev && outer > MaxOuterRounds)
-          capExceeded("OWL-RL {classify → eq-rep} fixpoint", MaxOuterRounds)
-      }
+    // is already complete.
+    var grew = classifyFixpoint() + eqRep() > 0
+    var outer = 0
+    while (hasRules && grew) {
+      outer += 1
+      grew = classifyFixpoint() + eqRep() > 0
+      // the round after the cap only checks that nothing is left
+      if (grew && outer > MaxOuterRounds)
+        capExceeded("OWL-RL {classify → eq-rep} fixpoint", MaxOuterRounds)
     }
     // RDFS closure over the enriched graph (covers rdfs2/3/5/7/9/11 with
     // the equivalence-derived schema in place)

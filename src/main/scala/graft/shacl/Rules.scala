@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * product of three node-expression results is added to the data graph;
   * rules run in (shape sh:order, rule sh:order); with iterate_rules each
   * shape's rule list repeats to fixpoint (cap 100). Here the per-focus
-  * loop is a 3-way join on the focus column and "new triples only" is a
-  * left-anti join against the current triples frame.
+  * loop is a 3-way join on the focus column and "new triples only" is
+  * [[Closure.absorb]]'s left-anti join against the current triples frame.
   *
   * Node expressions (/root/reference/pyshacl/helper/expression_helper.py:158-285):
   * sh:this, constants, sh:path, sh:union, sh:intersection, sh:filterShape,
@@ -53,11 +53,12 @@ object NodeExprIR {
             EFilterShape(filters.head, parse(sg, compiler, nodes.head))
           else {
             // FunctionExpression: a (fn, argsList) pair where the object is
-            // an rdf:list (expression_helper.py:222-283; sh:message skipped)
+            // an rdf:list, rdf:nil for no arguments (expression_helper.py:222-283;
+            // sh:message skipped)
             val fnPairs = sg.predicateObjects(b).filter { case (pk, pv) =>
               pk != SH.message && (pv match {
                 case l: Lit => false
-                case other => sg.value(other, RDF.first).isDefined
+                case other => other == RDF.nil || sg.value(other, RDF.first).isDefined
               })
             }.toList
             fnPairs.headOption match {
@@ -161,7 +162,7 @@ object RulesEngine {
     val rules = gatherRules(sg, compiler)
     if (rules.isEmpty) return triples0
 
-    var triples = triples0.localCheckpoint()
+    var triples = triples0.localCheckpoint(false)
     // the engine is rebuilt LAZILY — only after a rule actually added
     // triples — so the sub-shape memo cache and subclass closure survive
     // across rules and fixpoint rounds that don't mutate the graph
@@ -188,7 +189,7 @@ object RulesEngine {
         for (r <- sorted if !r.deactivated) {
           if (engineStale) {
             // the stale engine's memo checkpoints were already materialized
-            // into `fresh` frames below; free its blocks before rebuilding
+            // into the grown graph; free its blocks before rebuilding
             engine.close()
             engine = new ValidationEngine(spark, triples, shapes, sg)
             engineStale = false
@@ -212,28 +213,15 @@ object RulesEngine {
                   val O = evalExpr(engine, focus, tr.o).select(col("f"), col("v").as("_o"))
                   S.join(P, "f").join(O, "f")
                     .select(col("_s").as("s"), col("_p")("v").as("p"), col("_o").as("o"))
-                    .distinct()
                 case sr: SparqlRuleIR =>
                   sparqlRuleTriples(spark, engine, focus, sr)
               }
-              val fresh = product.join(triples,
-                product("s") === triples("s") && product("p") === triples("p") &&
-                  product("o") === triples("o"), "left_anti")
-                .localCheckpoint()
-              val n = fresh.count()
-              if (n > 0) {
-                val superseded = triples
-                triples = triples.unionByName(fresh).localCheckpoint()
-                // the new checkpoint is materialized (localCheckpoint is
-                // eager); the superseded frame's blocks pin memory for
-                // nothing — the only reader left is the stale engine,
-                // which rebuilds before any further use (engineStale)
-                Closure.free(superseded)
-                added += n
-                engineStale = true
-              }
-              // fresh's delta is folded into the union (or empty): free it
-              Closure.free(fresh)
+              // absorb frees the superseded graph: its only reader left is
+              // the stale engine, which rebuilds before any further use
+              val (grown, n) = Closure.absorb(triples, product)
+              triples = grown
+              added += n
+              if (n > 0) engineStale = true
           }
         }
         keepGoing = added > 0 && iterateRules
@@ -289,7 +277,6 @@ object RulesEngine {
       }
     }
     parts.reduceOption(_ unionByName _)
-      .map(_.distinct())
       .getOrElse(spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         graft.rdf.TriplesDF.schema))
   }
@@ -314,76 +301,21 @@ object RulesEngine {
         .select(col("f").as("_vf"))
       nodes.join(viol, nodes("v") === col("_vf"), "left_anti")
     case EFunction(fnRef, argExprs) =>
-      // compiled SHACLFunction: args evaluated per focus, joined on f
-      // (per-focus cartesian), the body applied as one Column projection
+      // args evaluated per focus, joined on f (per-focus cartesian), then
+      // one SparqlFrame call: a compiled body is a projection, a full SPARQL
+      // body runs once over the distinct argument tuples
       val defn = engine.functions.getOrElse(fnRef, throw new ReportableError(
         s"The SHACLFunction $fnRef was not defined in this SHACL Shapes file."))
       var cur = focus.select(col("f"))
-      val argCols = argExprs.zipWithIndex.map { case (a, i) =>
-        val d = evalExpr(engine, focus, a).select(col("f"), col("v").as(s"_a$i"))
-        cur = cur.join(d, "f")
-        s"_a$i"
+      val args = argExprs.zipWithIndex.map { case (a, i) =>
+        cur = cur.join(evalExpr(engine, focus, a).select(col("f"), col("v").as(s"_a$i")), "f")
+        col(s"_a$i")
       }
-      defn.body match {
-        case Left(ast) =>
-          val env = defn.params.zip(argCols).map { case ((local, dt, _), c) =>
-            local -> SparqlExpr.termToTyped(col(c), dt)
-          }.toMap
-          val res = SparqlExpr.compile(ast, env)
-          cur.select(col("f"), SparqlExpr.typedToTerm(res).as("v")).distinct()
-        case Right(q) =>
-          // full SPARQL body, evaluated ONCE over the distinct argument
-          // tuples; results join back per (focus, tuple) row — a per-focus
-          // collapse would merge multi-valued arguments into one arbitrary
-          // result (the reference and the compiled path yield one result
-          // per argument tuple)
-          val frame = new SparqlFrame(engine.triplesDF.sparkSession, engine.triplesDF,
-            engine.step, engine.fnsByIri, None)
-          val paramNames = defn.params.map(_._1)
-          val argPairs = paramNames.zip(argCols)
-          val trueT = termLit(Lit("true", XSD.boolean))
-          val falseT = termLit(Lit("false", XSD.boolean))
-          val resolved: DataFrame = q match { // one __r per distinct tuple
-            case sel: Sparql.SqSelect =>
-              val tuples = cur.select(argPairs.map { case (p, c) => col(c).as(p) }: _*)
-                .distinct()
-              val res = frame.evalSelect(sel,
-                frame.sol(tuples, paramNames.toSet), keep = paramNames.toSet)
-              val resultVar = sel.proj.headOption match {
-                case Some(Sparql.PVar(x)) => x
-                case Some(Sparql.PExpr(_, as)) => as
-                case _ => throw new ReportableError(
-                  s"SHACLFunction $fnRef SELECT body must project a result variable")
-              }
-              if (paramNames.isEmpty)
-                res.df.agg(first(col(resultVar), ignoreNulls = true).as("__r"))
-              else res.df.groupBy(paramNames.map(col): _*)
-                .agg(first(col(resultVar), ignoreNulls = true).as("__r"))
-            case ask: Sparql.SqAsk =>
-              if (paramNames.isEmpty) {
-                val any = frame.evalAsk(ask, frame.unitSeed).df.limit(1).count() > 0
-                cur.sparkSession.range(1)
-                  .select((if (any) trueT else falseT).as("__r"))
-              } else {
-                val tuples = cur.select(argPairs.map { case (p, c) => col(c).as(p) }: _*)
-                  .distinct()
-                val hits = frame.evalAsk(ask, frame.sol(tuples, paramNames.toSet)).df
-                  .select(paramNames.map(col): _*).distinct().withColumn("__hit", lit(1))
-                tuples.join(hits, paramNames, "left")
-                  .select(paramNames.map(col) :+
-                    when(col("__hit").isNotNull, trueT).otherwise(falseT).as("__r"): _*)
-              }
-            case _ => throw new ReportableError(
-              s"SHACLFunction $fnRef body must be a SELECT or ASK query")
-          }
-          val renamed = argPairs.foldLeft(resolved) { case (d, (p, c)) =>
-            d.withColumnRenamed(p, c)
-          }
-          val joined =
-            if (argPairs.isEmpty) cur.crossJoin(broadcast(renamed))
-            else cur.join(renamed, argPairs.map(_._2), "left")
-          joined.select(col("f"), col("__r").as("v"))
-            .filter(col("v").isNotNull).distinct()
-      }
+      val frame = new SparqlFrame(engine.triplesDF.sparkSession, engine.triplesDF,
+        engine.step, engine.fnsByIri, None)
+      val (withResult, result) = frame.callFn(defn, cur, args)
+      val pairs = withResult.select(col("f"), result.as("v"))
+      // a full body's unbound result derives nothing
+      (if (defn.body.isRight) pairs.filter(col("v").isNotNull) else pairs).distinct()
   }
 }

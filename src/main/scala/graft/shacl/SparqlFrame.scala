@@ -500,7 +500,7 @@ final class SparqlFrame(
         val args = args0.map(walk)
         fns.get(iri).filter(_.body.isRight) match {
           case Some(defn) =>
-            val (v, s2) = applyFnFull(defn, args, cur, quadCtx)
+            val (v, s2) = applyFnFull(defn, args.map(compileT(_, cur)), cur, quadCtx)
             cur = s2
             EVar(v)
           case None => EFnIri(iri, args)
@@ -514,8 +514,30 @@ final class SparqlFrame(
     (walk(e), cur)
   }
 
-  private def applyFnFull(defn: ShaclFnDef, args: List[SqExpr], cur: Sol,
-                          quadCtx: Option[(String, DataFrame)] = None): (String, Sol) = {
+  /** One SHACLFunction call on the argument columns `args` of `df` (the
+    * rules engine's node expressions): `df` with the call's result attached,
+    * and the result column. A compiled body is a projection; a full SPARQL
+    * body evaluates as in [[liftFnCalls]], its argument tuples seeding the
+    * body's sub-selects as a query's bindings would. */
+  def callFn(defn: ShaclFnDef, df: DataFrame, args: List[Column]): (DataFrame, Column) =
+    defn.body match {
+      case Left(ast) => (df, compiledFn(defn.params, ast, args))
+      case Right(_) =>
+        val (v, s) = applyFnFull(defn, args, Sol(df, df.columns.toSet, Set.empty), asRoot = true)
+        (s.df, col(v))
+    }
+
+  private def compiledFn(params: List[(String, String, Boolean)], ast: SparqlExpr.Ast,
+                         args: List[Column]): Column = {
+    val env = params.zip(args).map { case ((local, dt, _), c) =>
+      local -> SparqlExpr.termToTyped(c, dt)
+    }.toMap
+    SparqlExpr.typedToTerm(SparqlExpr.compile(ast, env))
+  }
+
+  private def applyFnFull(defn: ShaclFnDef, args: List[Column], cur: Sol,
+                          quadCtx: Option[(String, DataFrame)] = None,
+                          asRoot: Boolean = false): (String, Sol) = {
     fnCounter += 1
     val resVar = s"__fnr$fnCounter"
     val paramNames = defn.params.map(_._1)
@@ -526,12 +548,13 @@ final class SparqlFrame(
     val hv = quadCtx.map(_ => s"__fng$fnCounter")
     var df = cur.df
     paramNames.zip(argNames).zip(args).foreach { case ((_, an), a) =>
-      df = df.withColumn(an, compileT(a, cur))
+      df = df.withColumn(an, a)
     }
     val seedCols = paramNames.zip(argNames).map { case (p, an) => col(an).as(p) } ++
       quadCtx.map { case (gv, _) => col(gv).as(hv.get) }
     val seedDf = df.select(seedCols: _*).distinct()
     val seed = Sol(seedDf, paramNames.toSet ++ hv, Set.empty)
+    if (asRoot) rootSeed = seed
     val groupKeys = paramNames ++ hv
     def evalBody(w: SqGroup): Sol = quadCtx match {
       case Some((_, base)) => evalQuadGroup(w, hv.get, base, seed)
@@ -644,20 +667,6 @@ final class SparqlFrame(
     case ECall(_, as) => as.flatMap(fnBodyGroups)
     case _ => Nil
   }
-
-  /** Is the group a plain BGP (triple patterns with non-path predicates)
-    * plus row-local filters (no EXISTS — those re-enter group evaluation
-    * and need per-graph scoping)? Those evaluate against the quads frame
-    * in one join. */
-  private def bgpOnly(g: SqGroup): Boolean =
-    g.elems.exists(_.isInstanceOf[SqTriple]) && g.elems.forall {
-      case t: SqTriple => t.p match {
-        case PredIri(_) | PredVar(_) => true
-        case _ => false
-      }
-      case SqFilter(e) => !hasExists(e) && !hasFullFn(e)
-      case _ => false
-    }
 
   /** Shapes a GRAPH ?g block can take and still compile to the single-pass
     * quad-join plan: triple patterns (IRI/var/property-path predicate —
@@ -909,7 +918,7 @@ final class SparqlFrame(
       case PredIri(i) => base = base.filter(col("p") === i)
       case PredVar(x) =>
         sources += x -> iriT(col("p"))
-      case other => throw new IllegalStateException(s"quadPattern: $other") // bgpOnly guards
+      case other => throw new IllegalStateException(s"quadPattern: $other") // quadCompatible rejects $PATH
     }
     t.o match {
       case TVar(x) => sources += x -> col("o")
@@ -1275,12 +1284,7 @@ final class SparqlFrame(
       val defn = fns.getOrElse(iri, throw new ReportableError(
         s"The SHACLFunction <$iri> was not defined in this SHACL Shapes file."))
       defn.body match {
-        case Left(ast) =>
-          val argCols = args.map(compileT(_, cur))
-          val env = defn.params.zip(argCols).map { case ((local, dt, _), c) =>
-            local -> SparqlExpr.termToTyped(c, dt)
-          }.toMap
-          SparqlExpr.typedToTerm(SparqlExpr.compile(ast, env))
+        case Left(ast) => compiledFn(defn.params, ast, args.map(compileT(_, cur)))
         case Right(_) => throw new ReportableError(
           s"The SHACLFunction <$iri> has a full SPARQL body; calls are supported " +
             "in FILTER and BIND position (where they evaluate set-oriented).")

@@ -7,7 +7,8 @@ import graft.rdf._
 /** Property-path closures on the one closure kernel, checked against a
   * driver-side BFS over the collected edges: seeded cyclic random graphs
   * through the engine's value nodes, GRAPH ?g scoping over quads, the
-  * step cap's boundary, and checkpoint release on ValidationEngine.close. */
+  * step cap's boundary, and checkpoint release on ValidationEngine.close;
+  * and the naive fixpoint step `absorb` on small frames. */
 class ClosureSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val ex = "http://ex.org/"
@@ -159,5 +160,28 @@ class ClosureSpec extends AnyFunSuite {
     assert(pinned().exists(_.toString.contains("Closure.scala")))
     engine.close()
     assert(pinned().isEmpty)
+  }
+
+  test("absorb adds only the rows the graph lacks, each once, and frees what it supersedes") {
+    import spark.implicits._
+    val firstId = spark.sparkContext.emptyRDD[Int].id
+    def pinned() = spark.sparkContext.getPersistentRDDs.keySet.filter(_ > firstId)
+    def rddId(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed
+      .collectFirst { case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id }.get
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("s", "o").as[(String, String)].collect()
+    // the graph's own duplicate row is kept as it is
+    val graphRows = Seq(("a", "b"), ("a", "b"), ("b", "c"))
+    val graph = graphRows.toDF("s", "o").localCheckpoint()
+    val (same, n0) = Closure.absorb(graph, Seq(("b", "c"), ("a", "b"), ("b", "c")).toDF("s", "o"))
+    assert(n0 == 0 && (same eq graph))
+    assert(pinned() == Set(rddId(graph)))
+    // columns in another order, a duplicated new row, and rows already there
+    val derived = Seq(("d", "c"), ("d", "c"), ("b", "a"), ("c", "a")).toDF("o", "s")
+    val (grown, n) = Closure.absorb(graph, derived)
+    assert(n == 2)
+    assert(rows(grown).sorted.toSeq == (graphRows ++ Seq(("c", "d"), ("a", "c"))).sorted)
+    assert(rows(grown).toSet == (graphRows ++ rows(derived)).toSet)
+    assert(pinned() == Set(rddId(grown)))
+    Closure.free(grown)
   }
 }

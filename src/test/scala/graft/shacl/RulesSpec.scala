@@ -69,6 +69,59 @@ class RulesSpec extends AnyFunSuite {
       Set(Iri("http://ex.org/b"), Iri("http://ex.org/c"), Iri("http://ex.org/d")))
   }
 
+  test("TripleRule: without iterateRules a higher sh:order rule reads a lower-order rule's output") {
+    // listed first but ordered second: ex:r2 exists only if the second
+    // rule sees the graph the first one grew in the same pass
+    val g = expandTtl(prefixes +
+      """ex:a a ex:T ; ex:p ex:b .
+        |ex:S a sh:NodeShape ; sh:targetClass ex:T ;
+        |  sh:rule [ a sh:TripleRule ; sh:order 2 ;
+        |    sh:subject sh:this ; sh:predicate ex:r2 ; sh:object [ sh:path ex:r1 ] ] ;
+        |  sh:rule [ a sh:TripleRule ; sh:order 1 ;
+        |    sh:subject sh:this ; sh:predicate ex:r1 ; sh:object [ sh:path ex:p ] ] .
+        |""".stripMargin)
+    def I(l: String) = Iri("http://ex.org/" + l)
+    assert(g.contains(I("a"), I("r1"), I("b")))
+    assert(g.contains(I("a"), I("r2"), I("b")))
+  }
+
+  test("TripleRule: compiled and ASK-bodied SHACLFunctions as the object") {
+    val g = expandTtl(prefixes +
+      """ex:a a ex:T ; ex:name "jo" ; ex:p ex:b .
+        |ex:c a ex:T ; ex:name "al" .
+        |ex:upper a sh:SPARQLFunction ;
+        |  sh:parameter [ sh:path ex:s ] ;
+        |  sh:select "SELECT ?result WHERE { BIND(UCASE($s) AS ?result) }" .
+        |ex:hasP a sh:SPARQLFunction ;
+        |  sh:parameter [ sh:path ex:x ] ;
+        |  sh:ask "ASK { $x ex:p ?any . }" .
+        |ex:anyP a sh:SPARQLFunction ;
+        |  sh:ask "ASK { ?s ex:p ?o . }" .
+        |ex:noQ a sh:SPARQLFunction ;
+        |  sh:ask "ASK { ?s ex:q ?o . }" .
+        |ex:S a sh:NodeShape ; sh:targetClass ex:T ;
+        |  sh:rule [ a sh:TripleRule ; sh:subject sh:this ; sh:predicate ex:upperName ;
+        |    sh:object [ ex:upper ( [ sh:path ex:name ] ) ] ] ;
+        |  sh:rule [ a sh:TripleRule ; sh:subject sh:this ; sh:predicate ex:hasP ;
+        |    sh:object [ ex:hasP ( sh:this ) ] ] ;
+        |  sh:rule [ a sh:TripleRule ; sh:subject sh:this ; sh:predicate ex:anyP ;
+        |    sh:object [ ex:anyP () ] ] ;
+        |  sh:rule [ a sh:TripleRule ; sh:subject sh:this ; sh:predicate ex:noQ ;
+        |    sh:object [ ex:noQ () ] ] .
+        |""".stripMargin)
+    def I(l: String) = Iri("http://ex.org/" + l)
+    val (t, f) = (Lit("true", XSD.boolean), Lit("false", XSD.boolean))
+    def objs(s: String, p: String) = g.objects(I(s), I(p)).toSet
+    assert(objs("a", "upperName") == Set(Lit("JO")))
+    assert(objs("c", "upperName") == Set(Lit("AL")))
+    assert(objs("a", "hasP") == Set(t))
+    assert(objs("c", "hasP") == Set(f))
+    for (x <- Seq("a", "c")) {
+      assert(objs(x, "anyP") == Set(t), x)
+      assert(objs(x, "noQ") == Set(f), x)
+    }
+  }
+
   for ((sub, name) <- Seq(
     ("triple", "schema2person"), ("triple", "rectangle"), ("triple", "square"),
     ("triple", "functions-permutations"),
