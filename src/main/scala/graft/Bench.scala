@@ -19,11 +19,11 @@ object Bench {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(s"graft-bench-$cpus")
-      // shuffle parallelism scales with cores (2-4x slots, matching
-      // ScaleProbe): a fixed 1x-cores partition count lets one straggler
-      // partition idle the other cores at every wave boundary, which the
-      // r6 1M-soak analysis measured as a spurious ~10-point serial
-      // fraction in the in-bench eff(4->8) figure
+      // shuffle parallelism scales with cores (max(4x slots, 16), the
+      // rule Sessions.local uses): a fixed 1x-cores partition count lets
+      // one straggler partition idle the other cores at every wave
+      // boundary, which the r6 1M-soak analysis measured as a spurious
+      // ~10-point serial fraction in the in-bench eff(4->8) figure
       .config("spark.sql.shuffle.partitions", math.max(cpus * 4, 16).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")

@@ -127,11 +127,13 @@ object ConnectedComponents {
   private def converge(spark: SparkSession, edges0: DataFrame,
                        maxIter: Int): DataFrame = {
     import spark.implicits._
-    // undirected, self-loops dropped; canonical a<b. Checkpoints are LAZY
+    // undirected, self-loops dropped; canonical a<b. Checkpoints are lazy
     // throughout: the digest aggregation right below each one is the
-    // materializing action, so every round costs ONE job (digest) that
-    // both truncates the lineage and reads the convergence digest, instead
-    // of an eager-checkpoint job plus a digest job.
+    // action that stores the rows and reads the convergence digest, with
+    // no separate eager-checkpoint pass. Under AQE (which every session
+    // of this project enables) the checkpoint call itself still runs the
+    // round's shuffle-map stages (distinct, groupBy, join) as jobs; only
+    // the final stage waits for the digest.
     // NO edge-multiset distinct before the contraction: union-find is
     // insensitive to duplicate edges, so deduping the RAW multiset would
     // shuffle the full edge set (21.5M rows in the 150k-doc scaling run)

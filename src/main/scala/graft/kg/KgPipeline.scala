@@ -113,9 +113,11 @@ object KgPipeline {
     // The shared proxies are localCheckpoint'd: Spark does not share a
     // subplan across union branches, so without a materialization the
     // pairs distinct would recompute once PER BRANCH; the checkpointed
-    // frames are narrow (pairs) or vocab-bounded (comp, present). They are
-    // LAZY, so the consuming action computes all three inside one job with
-    // their stages overlapped (guide §2.6), not in three sequential jobs.
+    // frames are narrow (pairs) or vocab-bounded (comp, present). The
+    // checkpoints are lazy, but under AQE (which every session of this
+    // project enables) a lazy checkpoint still plans its query and runs
+    // its shuffle-map stages in the call: the three distincts' shuffles run one after another, here,
+    // and only their final stages wait for the consuming action.
     val comp = components.select(col("id").as("entity_id"), col("component"))
       .distinct().localCheckpoint(false)
     val compIds = comp.select(col("entity_id")).distinct()

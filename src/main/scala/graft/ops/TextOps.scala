@@ -5,8 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines.
-  * All pure `functions._` expressions (whole-stage codegen, no UDFs) so
-  * they survive a 100x scale-up inside one WholeStageCodegen span.
+  * All codegen'd expressions (whole-stage codegen, no UDFs) so they
+  * survive a 100x scale-up inside one WholeStageCodegen span: built-in
+  * `functions._` chains, plus the graft kernels [[WordShingles]] and
+  * [[UrlCanon]] where a built-in chain would re-evaluate its intermediates.
   * Column-in/column-out style composes into any pipeline.
   */
 object TextOps {
@@ -226,7 +228,8 @@ object TextOps {
     * the cheapest dedup a crawl pipeline runs (two fetches of one page
     * differ only in case, default port, fragment, and tracking params far
     * more often than in content). Standard steps, each a plain RE2-safe
-    * regex (the identical chain recomputes in DuckDB with the 'g' flag —
+    * regex, run once per row by the [[UrlCanon]] kernel (the same regex
+    * chain, written as SQL, recomputes in DuckDB with the 'g' flag —
     * q_url_canon is hash-checked):
     *   1. drop the `#fragment` (never sent to the server);
     *   2. lowercase scheme + authority ONLY (paths are case-sensitive);
@@ -242,22 +245,5 @@ object TextOps {
     * nothing, the rest match nothing). Not a full RFC 3986 resolver —
     * no percent-decoding or dot-segment removal (documented limit; both
     * alter semantics when applied blindly). */
-  def urlCanon(url: Column): Column = {
-    val noFrag = regexp_replace(url, "#.*", "")
-    val headPat = "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*"
-    val head = regexp_extract(noFrag, headPat, 0)
-    val lowered = concat(lower(head), noFrag.substr(length(head) + 1, length(noFrag)))
-    val noPort = regexp_replace(
-      regexp_replace(lowered, "^(http://[^/:?#]+):80([/?#]|$)", "$1$2"),
-      "^(https://[^/:?#]+):443([/?#]|$)", "$1$2")
-    val base = regexp_extract(noPort, "^[^?]*", 0)
-    val qs = when(length(noPort) > length(base),
-      noPort.substr(length(base) + 2, length(noPort))).otherwise(lit(""))
-    val qs2 = regexp_replace(qs,
-      "(^|&)(utm_[A-Za-z0-9_]*|fbclid|gclid)=[^&]*", "$1")
-    val qs3 = regexp_replace(regexp_replace(qs2, "&&+", "&"), "^&+|&+$", "")
-    val tidy = concat(base,
-      when(qs3 =!= "", concat(lit("?"), qs3)).otherwise(lit("")))
-    regexp_replace(tidy, "^(https?://[^/?#]+)/([?#]|$)", "$1$2")
-  }
+  def urlCanon(url: Column): Column = UrlCanon.column(url)
 }

@@ -13,9 +13,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Each batch chains [[Unroll]] applications of `step` lazily from the
   * frontier, subtracts everything reached so far once, at the batch
   * boundary, and stores the new rows behind a lazy `localCheckpoint`: the
-  * count that ends the batch is its only action. The next frontier is the
-  * whole batch, a superset of the deepest step's rows, so after k full
-  * batches exactly the rows within k * Unroll steps of the seed are reached.
+  * count that ends the batch is its only action. (Under AQE, which every
+  * session of this project enables, the checkpoint call already runs the
+  * batch's shuffle-map stages as jobs; the count runs the final stage.)
+  * The next frontier is the whole batch, a superset of the deepest step's
+  * rows, so after k full batches exactly the rows within k * Unroll steps
+  * of the seed are reached.
   * `reached` is a union of checkpointed batches and needs no checkpoint of
   * its own. */
 object Closure {
@@ -62,7 +65,9 @@ object Closure {
   /** Grow `graph` by the rows of `derived` it lacks (duplicates in
     * `derived` count once; `graph`'s own rows are kept as they are).
     * The new rows sit behind a lazy `localCheckpoint` whose count is its
-    * only job; when there are any, the grown graph is checkpointed eagerly
+    * only action (under AQE the checkpoint call already runs the distinct
+    * and anti-join shuffles as jobs; the count runs the final stage); when
+    * there are any, the grown graph is checkpointed eagerly
     * and `graph`'s checkpoint is freed. Returns the graph to continue with
     * and the number of rows added. */
   def absorb(graph: DataFrame, derived: DataFrame): (DataFrame, Long) = {

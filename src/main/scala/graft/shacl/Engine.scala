@@ -854,8 +854,10 @@ final class ValidationEngine(
   /** At-scale entry point: the union of every shape's violations as a
     * DataFrame — nothing is collected to the driver. Columns: f, v, path,
     * comp, shape, orig, constraint, msgs, rid, prid (term structs / keys).
-    * The frame carries a lazy tracked localCheckpoint: the first action on
-    * it evaluates the plan once and stores the rows, later actions (counts,
+    * The frame carries a lazy tracked localCheckpoint: under AQE (which
+    * every session of this project enables) this call already plans the
+    * union and runs its shuffle-map stages as jobs; the first action on the frame runs the
+    * final stage once and stores the rows, later actions (counts,
     * samples, report triples) read the stored blocks, and close() frees
     * them. Callers aggregate counts, take bounded samples, or write report
     * triples distributed; see Validator.validateFrameAtScale. */

@@ -477,6 +477,89 @@ class OpsSpec extends AnyFunSuite {
       assert(got(raw) == want, s"$raw -> ${got(raw)} (want $want)") }
   }
 
+  test("UrlCanon kernel equals the regexp column chain it replaced") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    // the pre-kernel chain, written out as the executable contract (the
+    // DuckDB oracle SQL of q_url_canon runs the same steps)
+    def chain(url: Column): Column = {
+      val noFrag = regexp_replace(url, "#.*", "")
+      val head = regexp_extract(noFrag, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*", 0)
+      val lowered = concat(lower(head), noFrag.substr(length(head) + 1, length(noFrag)))
+      val noPort = regexp_replace(
+        regexp_replace(lowered, "^(http://[^/:?#]+):80([/?#]|$)", "$1$2"),
+        "^(https://[^/:?#]+):443([/?#]|$)", "$1$2")
+      val base = regexp_extract(noPort, "^[^?]*", 0)
+      val qs = when(length(noPort) > length(base),
+        noPort.substr(length(base) + 2, length(noPort))).otherwise(lit(""))
+      val qs2 = regexp_replace(qs, "(^|&)(utm_[A-Za-z0-9_]*|fbclid|gclid)=[^&]*", "$1")
+      val qs3 = regexp_replace(regexp_replace(qs2, "&&+", "&"), "^&+|&+$", "")
+      val tidy = concat(base, when(qs3 =!= "", concat(lit("?"), qs3)).otherwise(lit("")))
+      regexp_replace(tidy, "^(https?://[^/?#]+)/([?#]|$)", "$1$2")
+    }
+    val existing = Seq(
+      "HTTPS://Example.COM:443/p/7?utm_source=feed&id=7#sec", "http://Ex.ORG:80/",
+      "http://ex.org/q?a=1&utm_campaign=x&b=2", "https://sub.ex.org/a/b?id=3",
+      "not a url at all", "http://x.com/?utm_a=1&utm_b=2",
+      "https://x.com:8443/keep:port?fbclid=abc", "https://x.com/CaseSensitive/Path",
+      "http://x.com/a&utm_b=2/c", "http://x.com/p?a=1&utm_b=2/c")
+    val ports = for {
+      (scheme, port) <- Seq("http" -> 80, "https" -> 443, "http" -> 443, "https" -> 80)
+      path <- Seq("", "/p/Q")
+      query <- Seq("", "?q=1&utm_a=2")
+      frag <- Seq("", "#F")
+    } yield s"$scheme://Ex.COM:$port$path$query$frag"
+    val vithkuqi = new String(Character.toChars(0x10570)) // capital, Unicode 14
+    val edge = Seq[String](null, "", "?", "#", "#x", "https://x:443?q", "ftp://X.Y:80/",
+      "http://x.com/p?a=1?b=2?c", "http://x.com?a?b", "http://x.com/p?a=1&&&b=2&&&&c",
+      "http://x.com/?&a=1&", "http://x.com/p?&&&", "http://x.com/p?utm_a=1&fbclid=2&gclid=3",
+      "http://x.com/?utm_a=&&gclid=x&", "http://x.com/p?UTM_x=1&utm_y=2",
+      "http://x.com/p?fbclid&a=1", "http://x.com/p?a=1\n#frag", "HTTP://X.COM:80\n#f",
+      "http://X.com/p\nq#f\nr", "HTTP://İSTANBUL.example/İ", "https://STRASSE-ß.DE/ß",
+      "http://ΣΊΣΥΦΟΣ.GR/ΣΟΣ?utm_a=Σ", s"http://A$vithkuqi.COM/$vithkuqi?q=$vithkuqi",
+      s"https://X.com:443/😀?utm_x=1&k=😀#😀",
+      "mailto:X@Y.COM", "//Host.COM/p", "HTTP://[::1]:80/", "http://user:PW@X.COM:80/p")
+    // the clean_docs benchmark corpus's URL formula, over its 5,000 ids
+    val n = $"id"
+    val corpusUrls = spark.range(5000).select(concat(lit("HTTPS://Ex.COM:443/"),
+      when(n % 25 === 0, concat(lit("shared/"), (n % 2).cast("string")))
+        .otherwise(concat(lit("u/"), n.cast("string"))),
+      lit("?utm_source=feed&p=1#frag")).as("url"))
+    val queryUrls = graft.Queries.qUrlCanon(spark, sf).select($"url_raw".as("url"))
+    // an RDD source, so the projection runs generated code, not a local fold
+    val urls = spark.sparkContext.parallelize(existing ++ ports ++ edge, 2).toDF("url")
+      .union(corpusUrls).union(queryUrls)
+    val rows = urls.select($"url", chain($"url"), TextOps.urlCanon($"url")).collect()
+    assert(rows.length == existing.size + ports.size + edge.size + 5000 +
+      queryUrls.count())
+    for (r <- rows) assert(r.get(1) == r.get(2), s"${r.get(0)}: ${r.get(1)} vs ${r.get(2)}")
+    val got = rows.map(r => Option(r.getString(0)) -> r.getString(2)).toMap
+    assert(got(None) == null)
+    assert(got(Some("http://x.com/p?UTM_x=1&utm_y=2")) == "http://x.com/p?UTM_x=1") // case-sensitive
+    assert(got(Some("http://x.com/p?fbclid&a=1")) == "http://x.com/p?fbclid&a=1") // no '=' kept
+    assert(got(Some(s"http://A$vithkuqi.COM/$vithkuqi?q=$vithkuqi")) ==
+      s"http://a${new String(Character.toChars(0x10597))}.com/$vithkuqi?q=$vithkuqi")
+    // interpreted eval agrees with the generated code
+    for (r <- rows) assert(UrlCanon(Literal.create(r.getString(0), StringType)).eval() ==
+      Option(r.getString(2)).map(UTF8String.fromString).orNull, s"${r.get(0)}")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.range(1).select(TextOps.urlCanon($"id")).collect())
+    assert(e.getMessage.contains("graft_url_canon"), e.getMessage)
+  }
+
+  test("url_dedup plans one kernel call per row: no regex node, under 100 expression nodes") {
+    import org.apache.spark.sql.catalyst.expressions.{RegExpExtract, RegExpReplace}
+    // a Range source, so the optimizer cannot fold the projection away
+    val docs = spark.range(3).select($"id".cast("string").as("doc_id"),
+      concat(lit("HTTP://X.com:80/p"), ($"id" % 2).cast("string"), lit("?utm_a=1#f")).as("url"))
+    val plan = CleanPipeline.urlDedup(docs, "doc_id", "url").queryExecution.optimizedPlan
+    val nodes = plan.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    val regex = nodes.filter(e => e.isInstanceOf[RegExpReplace] || e.isInstanceOf[RegExpExtract])
+    assert(regex.isEmpty, s"${regex.size} regex nodes in url_dedup's plan")
+    assert(nodes.size < 100, s"${nodes.size} expression nodes in url_dedup's plan")
+  }
+
   // little-endian writers for hand-built containers in the tests below
   private def le16(b: Array[Byte], i: Int, v: Int): Unit = {
     b(i) = (v & 0xff).toByte; b(i + 1) = ((v >> 8) & 0xff).toByte

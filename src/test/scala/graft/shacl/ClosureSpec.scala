@@ -184,4 +184,34 @@ class ClosureSpec extends AnyFunSuite {
     assert(pinned() == Set(rddId(grown)))
     Closure.free(grown)
   }
+
+  test("under AQE a lazy localCheckpoint of a shuffling plan starts a job before any action") {
+    import org.apache.spark.ListenerDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val sc = spark.sparkContext
+    // jobs started on this thread while `body` runs
+    def jobsOf(body: => Unit): Int = {
+      val tag = java.util.UUID.randomUUID().toString
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("closure.spec.tag") == tag)) n.incrementAndGet()
+      }
+      ListenerDrain(sc)
+      sc.addSparkListener(listener)
+      sc.setLocalProperty("closure.spec.tag", tag)
+      try { body; ListenerDrain(sc); n.get() }
+      finally { sc.setLocalProperty("closure.spec.tag", null); sc.removeSparkListener(listener) }
+    }
+    def grouped() = spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).agg(count(lit(1)))
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    // AQE plans the query and runs its shuffle-map stages inside the call;
+    // only the final stage waits for the first action
+    assert(jobsOf(grouped().localCheckpoint(false)) >= 1)
+    assert(jobsOf(spark.range(0, 1000, 1, 4).filter(col("id") > 3).localCheckpoint(false)) == 0)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try assert(jobsOf(grouped().localCheckpoint(false)) == 0)
+    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
 }
