@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * function call over a million focus nodes is one vectorized projection,
   * not a million query evaluations. Bodies beyond the compiled subset (real
   * WHERE clauses, sh:ask) parse through the full SPARQL frontend and
-  * evaluate set-oriented — see ShaclFnDef and SparqlFrame.applyFnFull.
+  * evaluate set-oriented — see ShaclFnDef and SparqlFrame.applyFn.
   */
 object SparqlExpr {
   sealed trait Ast

@@ -22,6 +22,13 @@ import org.apache.spark.sql.types._
   * (v,k,dt,lang); NULL = unbound. Variables introduced under OPTIONAL /
   * UNION are tracked in `maybeNull` and joined with SPARQL-compatible
   * (null-tolerant) semantics.
+  *
+  * One evaluator serves every active graph: a group evaluates in a
+  * [[Scope]] — the frame its patterns match, plus for `GRAPH ?x` a hidden
+  * graph key that every pattern binds from the quads `g` column. A quad is
+  * one more column of the same table, so a block over any number of named
+  * graphs compiles to one fixed-size plan, with joins, OPTIONAL, EXISTS,
+  * MINUS, sub-selects and SHACLFunction bodies keyed per graph.
   */
 final class SparqlFrame(
     spark: SparkSession,
@@ -34,20 +41,28 @@ final class SparqlFrame(
       * (its own CI allow-fails shapesGraph-001); this engine has the shapes
       * graph at hand and supports it. */
     shapesT: Option[DataFrame] = None,
-    /** named data graphs as a quads frame (s,p,o,g): GRAPH <iri> / GRAPH ?g
-      * patterns evaluate per graph (the reference queries rdflib Datasets
-      * as unions or per-graph, graph_abstraction.py:112-128). */
+    /** named data graphs as a quads frame (s,p,o,g): GRAPH <iri> patterns
+      * match one graph, GRAPH ?g patterns every named graph at once with ?g
+      * bound per match (the reference queries rdflib Datasets as unions or
+      * per-graph, graph_abstraction.py:112-128). */
     quads: Option[DataFrame] = None,
     /** fixpoint cap for property-path closures evaluated directly by this
-      * frame (quad paths, activeT paths) — thread ValidationOptions
-      * .maxPathDepth here; exceeding it throws, never truncates. */
+      * frame (paths outside the default graph) — thread
+      * ValidationOptions.maxPathDepth here; exceeding it throws, never
+      * truncates. */
     maxPathDepth: Int = 100) {
   import Sparql._
 
   Kernels.ensure(spark)
 
-  /** The frame BGPs currently match against (swapped inside GRAPH blocks). */
-  private var activeT: DataFrame = T
+  /** Where a group's patterns match: `frame` is a triples frame (default,
+    * shapes or one named graph), or under `GRAPH ?x` the named-graph slice
+    * of the quads with `key` set — the hidden variable every pattern binds
+    * from the `g` column, so joins, correlations and aggregates stay within
+    * one graph. */
+  private final case class Scope(frame: DataFrame, key: Option[String] = None)
+
+  private val dflt = Scope(T)
 
   final case class Sol(df: DataFrame, vars: Set[String], maybeNull: Set[String])
 
@@ -66,15 +81,14 @@ final class SparqlFrame(
     * which the reference keeps implicitly because it loops per focus). */
   def evalSelect(q: SqSelect, seed: Sol, keep: Set[String] = Set.empty): Sol = {
     rootSeed = seed
-    val g = evalGroup(q.where, seed)
-    project(q, g, keep)
+    project(q, evalGroup(q.where, seed, dflt), keep)
   }
 
   /** ASK per seed row: returns the distinct seed rows for which the pattern
     * has at least one solution. */
   def evalAsk(q: SqAsk, seed: Sol): Sol = {
     rootSeed = seed
-    val g = evalGroup(q.where, seed)
+    val g = evalGroup(q.where, seed, dflt)
     val cols = seed.vars.toSeq.sorted.map(col)
     Sol(g.df.select(cols: _*).distinct(), seed.vars, g.maybeNull.intersect(seed.vars))
   }
@@ -83,12 +97,12 @@ final class SparqlFrame(
     * caller's job — it owns triple-store semantics). */
   def evalWhere(where: SqGroup, seed: Sol): Sol = {
     rootSeed = seed
-    evalGroup(where, seed)
+    evalGroup(where, seed, dflt)
   }
 
   private var rootSeed: Sol = _
 
-  /** `sliceBy`: the quad path's per-graph sub-select slice — when set,
+  /** `sliceBy`: the graph key of a sub-select under GRAPH ?g — when set,
     * OFFSET/LIMIT rank WITHIN each value of that (hidden graph) column
     * instead of slicing the whole frame, because inside GRAPH ?g the
     * sub-select is one evaluation PER GRAPH and SPARQL's Slice applies to
@@ -216,10 +230,7 @@ final class SparqlFrame(
     case other => other
   }
 
-  /** Every aggregate a SELECT references (projections, HAVING, ORDER BY)
-    * — shared by [[aggregateStep]] and the quad path's sub-select
-    * compatibility check so the predicate can never drift from what
-    * aggregation actually collects. */
+  /** Every aggregate a SELECT references (projections, HAVING, ORDER BY). */
   private def selectAggs(q: SqSelect): List[EAgg] = {
     val found = scala.collection.mutable.ListBuffer.empty[EAgg]
     q.proj.foreach { case PExpr(e, _) => collectAggs(e, found); case _ => }
@@ -232,7 +243,7 @@ final class SparqlFrame(
     * otherwise return the solution untouched. */
   /** `fillEmpty`: catalog frame (one term column named like the single
     * `keep` var) whose rows must ALL appear in a global-aggregate result —
-    * the quad path's per-graph image of SPARQL's "an aggregate over zero
+    * the per-graph image of SPARQL's "an aggregate over zero
     * solutions still yields one row". Missing groups get each aggregate's
     * empty-group value per SPARQL 18.5.1 (COUNT/SUM/AVG → 0 — Avg({}) = 0
     * by definition, matching rdflib — GROUP_CONCAT → "", MIN/MAX/SAMPLE →
@@ -315,57 +326,65 @@ final class SparqlFrame(
       }
 
   // -------------------------------------------------------------- groups
-  private def evalGroup(g: SqGroup, seed: Sol): Sol =
-    g.elems.foldLeft(seed)((cur, e) => evalElem(e, cur))
+  /** One fold over a group: patterns, BIND, OPTIONAL, UNION, MINUS, VALUES,
+    * sub-selects and nested GRAPH in order, then the group's FILTERs over
+    * the whole group (SPARQL 18.2.2 scopes a FILTER to its group, wherever
+    * it sits). Under a graph key the key is bound before the filters: a
+    * group none of whose patterns bound it ranges over every named graph.
+    * `gv` is the variable of the GRAPH ?x block this group is the body of:
+    * it binds to the key there, so the block's BINDs and FILTERs see it. */
+  private def evalGroup(g: SqGroup, seed: Sol, sc: Scope, gv: Option[String] = None): Sol = {
+    val bound = g.elems.foldLeft(seed)((cur, e) => evalElem(e, cur, sc, gv))
+    g.elems.collect { case SqFilter(e) => e }
+      .foldLeft(exposeGraph(bound, sc, gv))((cur, e) => filterBy(cur, e, sc))
+  }
 
-  private def evalElem(e: SqElem, cur: Sol): Sol = e match {
-    case t: SqTriple => joinSols(cur, triplePattern(t, cur))
-    case SqFilter(EExists(g, neg)) => existsFilter(cur, g, neg)
-    case SqFilter(ENot(EExists(g, neg))) => existsFilter(cur, g, !neg)
-    case SqFilter(e) if hasExists(e) =>
-      // EXISTS nested inside the expression: materialize markers, then
-      // filter on the rewritten expression (full-fn lift composes after)
-      val (e1, s1) = liftExists(e, cur, evalGroup)
-      val (e2, s2) = if (hasFullFn(e1)) liftFnCalls(e1, s1) else (e1, s1)
-      val filtered = s2.df.filter(compileB(e2, s2) === true)
-      Sol(filtered.select(cur.vars.toSeq.sorted.map(col): _*), cur.vars, cur.maybeNull)
-    case SqFilter(e) if hasFullFn(e) =>
-      val (e2, lifted) = liftFnCalls(e, cur)
-      val filtered = lifted.df.filter(compileB(e2, lifted) === true)
-      Sol(filtered.select(cur.vars.toSeq.sorted.map(col): _*), cur.vars, cur.maybeNull)
-    case SqFilter(e) =>
-      cur.copy(df = cur.df.filter(compileB(e, cur) === true))
+  private def evalElem(e: SqElem, cur: Sol, sc: Scope, gv: Option[String]): Sol = e match {
+    case t: SqTriple => joinSols(cur, triplePattern(t, cur, sc))
+    case _: SqFilter => cur // applied over the whole group by evalGroup
     case SqBind(e, v) =>
       if (cur.vars.contains(v))
         throw new ReportableError(s"BIND would re-bind already-bound variable ?$v")
-      if (hasExists(e)) {
-        val (e1, s1) = liftExists(e, cur, evalGroup)
-        val (e2, s2) = if (hasFullFn(e1)) liftFnCalls(e1, s1) else (e1, s1)
+      if (hasExists(e) || hasFullFn(e)) {
+        // the EXISTS / function body correlates on (and its result varies
+        // with) the graph, so the key must be bound wherever the BIND sits
+        val acc = exposeGraph(cur, sc, gv)
+        val (e2, s2) = lift(e, acc, sc)
         val df = s2.df.withColumn(v, compileT(e2, s2))
-        Sol(df.select((cur.vars + v).toSeq.sorted.map(col): _*), cur.vars + v, cur.maybeNull)
-      } else if (hasFullFn(e)) {
-        val (e2, lifted) = liftFnCalls(e, cur)
-        val df = lifted.df.withColumn(v, compileT(e2, lifted))
-        Sol(df.select((cur.vars + v).toSeq.sorted.map(col): _*), cur.vars + v, cur.maybeNull)
-      } else Sol(cur.df.withColumn(v, compileT(e, cur)), cur.vars + v, cur.maybeNull)
-    case SqUnion(branches) => unionSols(branches.map(b => evalGroup(b, cur)))
-    case SqOptional(g) => optionalJoin(cur, g)
+        Sol(df.select((acc.vars + v).toSeq.sorted.map(col): _*), acc.vars + v, acc.maybeNull)
+      } else {
+        // a BIND over the block's graph var before any pattern bound it
+        // (BIND(STR(?g) AS ?u)) sees it bound per graph
+        val acc = if (gv.exists(x => !cur.vars.contains(x) && exprVars(e).contains(x)))
+          exposeGraph(cur, sc, gv) else cur
+        Sol(acc.df.withColumn(v, compileT(e, acc)), acc.vars + v, acc.maybeNull)
+      }
+    case SqUnion(branches) => unionSols(branches.map(b => evalGroup(b, cur, sc)))
+    case SqOptional(g) =>
+      // a leading OPTIONAL under a graph key is LeftJoin(Z, A) per graph:
+      // its left side carries one row per named graph
+      optionalJoin(withKey(cur, sc), g, sc)
     case SqSubSelect(sel) =>
       // sub-selects evaluate against the pre-bound seed (SHACL pre-binding
-      // flows into subqueries) and join back on shared variables
-      val sub = evalSelect2(sel, rootSeed)
-      joinSols(cur, sub)
+      // flows into subqueries) and join back on shared variables — under a
+      // graph key, on the graph too
+      joinSols(cur, subSelect(sel, rootSeed, Set.empty, sc))
     case SqGraphPat(TVar("shapesGraph"), g) if shapesT.isDefined =>
-      val saved = activeT
-      activeT = shapesT.get
-      try evalGroup(g, cur) finally activeT = saved
+      evalGroup(g, cur, Scope(shapesT.get))
     case SqGraphPat(TVar("shapesGraph"), _) =>
       throw new ReportableError(
         "SPARQL Constraint text has $shapesGraph in it, but Shapes Graph is not currently supported.")
     case SqGraphPat(TConst(Iri(name)), g) if quads.isDefined =>
-      val saved = activeT
-      activeT = QuadsDF.graph(quads.get, Some(name))
-      try evalGroup(g, cur) finally activeT = saved
+      evalGroup(g, cur, Scope(QuadsDF.graph(quads.get, Some(name))))
+    case SqGraphPat(TVar(x), g) if quads.isDefined =>
+      // every named graph at once: a fresh hidden key, so a nested GRAPH ?y
+      // (at any depth, also under GRAPH <iri>) ranges over all graphs again
+      keyCounter += 1
+      val k = s"__g$keyCounter"
+      val r = evalGroup(g, cur, Scope(quads.get.filter(col("g") =!= ""), Some(k)), Some(x))
+      Sol(r.df.drop(k), r.vars - k, r.maybeNull - k)
+    case SqGraphPat(other, _) =>
+      throw new ReportableError(s"GRAPH patterns are not supported (got $other)")
     case SqValues(vs, rows) =>
       // inline data: a literal solution frame joined in like any other
       // group element (UNDEF = NULL = maybe-null join semantics)
@@ -384,70 +403,66 @@ final class SparqlFrame(
       // one bound variable; disjoint-domain rhs rows remove nothing. The
       // rhs evaluates in its own scope (seeded by the pre-bound frame, not
       // the lhs), then one distinct projection + anti-join does the rest.
-      val rhs = evalGroup(g, rootSeed)
-      val shared = cur.vars.intersect(rhs.vars).filterNot(_.startsWith("__")).toSeq.sorted
-      if (shared.isEmpty) cur
+      // Under a graph key both sides must be in the same graph, but the
+      // hidden key is no shared variable: a disjoint rhs removes nothing.
+      val lhs = withKey(cur, sc)
+      val rhs = evalGroup(g, rootSeed, sc)
+      val shared = lhs.vars.intersect(rhs.vars).filterNot(_.startsWith("__")).toSeq.sorted
+      if (shared.isEmpty) lhs
       else {
-        val r = rhs.df.select(shared.map(v => col(v).as(s"__m_$v")): _*).distinct()
-        val compat = shared.map(v =>
+        val cmp = shared ++ sc.key
+        val r = rhs.df.select(cmp.map(v => col(v).as(s"__m_$v")): _*).distinct()
+        val compat = cmp.map(v =>
           col(v).isNull || col(s"__m_$v").isNull || col(v) === col(s"__m_$v"))
         val overlap = shared.map(v => col(v).isNotNull && col(s"__m_$v").isNotNull)
-        Sol(cur.df.join(r, compat.reduce(_ && _) && overlap.reduce(_ || _), "left_anti"),
-          cur.vars, cur.maybeNull)
+        Sol(lhs.df.join(r, compat.reduce(_ && _) && overlap.reduce(_ || _), "left_anti"),
+          lhs.vars, lhs.maybeNull)
       }
-    case SqGraphPat(TVar(x), g) if quads.isDefined && quadCompatible(g) =>
-      // BGP/OPTIONAL/UNION(+row-local FILTER/BIND) block: ONE pass over
-      // the named-graphs slice of the quads frame with ?g bound from the g
-      // column — per-graph scoping falls out of the shared-variable join
-      // (every pattern, including those inside OPTIONAL and UNION
-      // branches, binds the same ?g, so the left/union joins key on the
-      // graph too). Filters apply after the block's patterns join (SPARQL
-      // scopes filters to the whole group, so this is if anything more
-      // faithful than positional application). No driver loop, no
-      // per-graph plan branch: a catalog of millions of per-document
-      // graphs compiles to the same fixed-size plan. A block that leaves
-      // ?x unbound (nested-GRAPH-only body) ranges over every named graph
-      // — SPARQL's cross product with the graph names.
-      val namedBase = quads.get.filter(col("g") =!= "")
-      val r = evalQuadGroup(g, x, namedBase, cur)
-      if (r.vars.contains(x)) r else joinSols(r, graphSeedSol(x, namedBase))
-    case SqGraphPat(TVar(x), g) if quads.isDefined =>
-      // non-quad-compatible block (GRAPH nested under GRAPH <iri> — which
-      // must range over ALL named graphs while the constant re-scope
-      // filters the frame — or an EXISTS / SHACLFunction body that is
-      // itself non-quad-compatible): evaluates
-      // once per named graph with ?g bound to the
-      // graph IRI. That is a per-graph PLAN branch — fine for a
-      // vocab-scale catalog, wrong for per-document graphs — so past
-      // MaxGraphLoop graphs it fails loudly instead of building a silent
-      // multi-thousand-branch plan.
-      val names = QuadsDF.graphNames(quads.get)
-      if (names.size > SparqlFrame.MaxGraphLoop)
-        throw new ReportableError(
-          s"GRAPH ?$x over a block outside the single-pass quad path " +
-            s"(GRAPH nested under GRAPH <iri>, or an EXISTS / " +
-            s"SHACLFunction body that is itself not quad-compatible) " +
-            s"evaluates per named graph, and this dataset has " +
-            s"${names.size} named graphs (limit ${SparqlFrame.MaxGraphLoop}). " +
-            "Rewrite the block to triple patterns (incl. property paths), " +
-            "OPTIONAL/UNION/BIND, row-local FILTERs, (NOT) EXISTS, " +
-            "SHACLFunction calls with quad-compatible bodies, nested " +
-            "GRAPH ?var / GRAPH <iri>, or sub-selects (the single-pass " +
-            "join path), or validate per graph slice.")
-      val sols = names.map { nm =>
-        val saved = activeT
-        activeT = QuadsDF.graph(quads.get, Some(nm))
-        try {
-          val s0 = evalGroup(g, cur)
-          if (s0.vars.contains(x)) // ?g also bound inside the block
-            s0.copy(df = s0.df.filter(col(x) === termLit(Iri(nm))))
-          else Sol(s0.df.withColumn(x, termLit(Iri(nm))), s0.vars + x, s0.maybeNull)
-        } finally activeT = saved
-      }
-      if (sols.isEmpty) Sol(cur.df.limit(0).withColumn(x, nullT), cur.vars + x, cur.maybeNull + x)
-      else unionSols(sols)
-    case SqGraphPat(other, _) =>
-      throw new ReportableError(s"GRAPH patterns are not supported (got $other)")
+  }
+
+  private var keyCounter = 0
+
+  /** One row per named graph of the scope, `k` bound to the graph IRI —
+    * the image of SPARQL's empty solution Z inside GRAPH ?x. */
+  private def catalog(k: String, sc: Scope): Sol =
+    Sol(sc.frame.select(iriT(col("g")).as(k)).distinct(), Set(k), Set.empty)
+
+  /** `cur` with the scope's graph key bound: crossed with the catalog when
+    * nothing has bound it yet. Identity outside GRAPH ?x. */
+  private def withKey(cur: Sol, sc: Scope): Sol = sc.key match {
+    case Some(k) if !cur.vars.contains(k) => joinSols(cur, catalog(k, sc))
+    case _ => cur
+  }
+
+  /** [[withKey]], then the block's graph var `gv` bound to the key — or,
+    * when a pattern or the outer solution already bound it, kept where it
+    * is compatible with the key. */
+  private def exposeGraph(cur: Sol, sc: Scope, gv: Option[String]): Sol =
+    (sc.key, gv) match {
+      case (Some(k), Some(x)) =>
+        val s = withKey(cur, sc)
+        if (!s.vars.contains(x)) Sol(s.df.withColumn(x, col(k)), s.vars + x, s.maybeNull)
+        else Sol(s.df.filter(col(x).isNull || col(x) === col(k)).withColumn(x, col(k)),
+          s.vars, s.maybeNull - x)
+      case _ => withKey(cur, sc)
+    }
+
+  private def filterBy(cur: Sol, e: SqExpr, sc: Scope): Sol = e match {
+    case EExists(g, neg) => existsFilter(cur, g, neg, sc)
+    case ENot(EExists(g, neg)) => existsFilter(cur, g, !neg, sc)
+    case _ if hasExists(e) || hasFullFn(e) =>
+      // EXISTS / full-bodied function calls nested inside the expression:
+      // materialize markers and result columns, filter, project them away
+      val (e2, s2) = lift(e, cur, sc)
+      val filtered = s2.df.filter(compileB(e2, s2) === true)
+      Sol(filtered.select(cur.vars.toSeq.sorted.map(col): _*), cur.vars, cur.maybeNull)
+    case _ => cur.copy(df = cur.df.filter(compileB(e, cur) === true))
+  }
+
+  /** Nested EXISTS markers, then full-bodied SHACLFunction result columns. */
+  private def lift(e: SqExpr, cur: Sol, sc: Scope): (SqExpr, Sol) = {
+    val (e1, s1) = if (hasExists(e)) liftExists(e, cur, sc) else (e, cur)
+    if (hasFullFn(e1)) liftFnCalls(e1, s1, sc) else (e1, s1)
   }
 
   /** Align variable sets (missing vars -> NULL) and union. */
@@ -463,11 +478,13 @@ final class SparqlFrame(
     Sol(aligned.reduce(_ unionByName _), allVars, mn)
   }
 
-  /** evalSelect without clobbering rootSeed (nested use). */
-  private def evalSelect2(q: SqSelect, seed: Sol, keep: Set[String] = Set.empty): Sol = {
-    val g = evalGroup(q.where, seed)
-    project(q, g, keep)
-  }
+  /** A sub-select or SELECT function body (evalSelect without clobbering
+    * rootSeed). Under a graph key the projection keeps the key, OFFSET /
+    * LIMIT slice per graph, and a global aggregate yields its empty-group
+    * row for every graph without solutions. */
+  private def subSelect(q: SqSelect, seed: Sol, keep: Set[String], sc: Scope): Sol =
+    project(q, evalGroup(q.where, seed, sc), keep ++ sc.key, sliceBy = sc.key,
+      fillEmpty = sc.key.map(k => catalog(k, sc).df))
 
   // ------------------------------------- full-bodied SHACLFunction calls
   private var fnCounter = 0
@@ -486,21 +503,17 @@ final class SparqlFrame(
     * function's WHERE clause, and results join back by argument value — the
     * reference evaluates the body per call (shacl_function.py:283-326);
     * here a million calls over k distinct argument tuples cost one pass.
-    * With `quadCtx` = (graphVar, namedBase) the call site sits inside
-    * GRAPH ?g on the single-pass quad path: the hidden graph var rides the
-    * argument-tuple seed (the way liftExists threads __k_ keys), the body
-    * evaluates through [[evalQuadGroup]] so its patterns bind the SAME
-    * graph per row, and results join back on (args, graph) — still one
-    * fixed-size plan for any number of named graphs. */
-  private def liftFnCalls(e: SqExpr, cur0: Sol,
-                          quadCtx: Option[(String, DataFrame)] = None): (SqExpr, Sol) = {
+    * The body evaluates in the caller's scope; under a graph key the key
+    * rides the argument-tuple seed and the join back, so the body's
+    * patterns bind the caller's graph per row. */
+  private def liftFnCalls(e: SqExpr, cur0: Sol, sc: Scope): (SqExpr, Sol) = {
     var cur = cur0
     def walk(e: SqExpr): SqExpr = e match {
       case EFnIri(iri, args0) =>
         val args = args0.map(walk)
         fns.get(iri).filter(_.body.isRight) match {
           case Some(defn) =>
-            val (v, s2) = applyFnFull(defn, args.map(compileT(_, cur)), cur, quadCtx)
+            val (v, s2) = applyFn(defn, args.map(compileT(_, cur)), cur, sc)
             cur = s2
             EVar(v)
           case None => EFnIri(iri, args)
@@ -523,7 +536,8 @@ final class SparqlFrame(
     defn.body match {
       case Left(ast) => (df, compiledFn(defn.params, ast, args))
       case Right(_) =>
-        val (v, s) = applyFnFull(defn, args, Sol(df, df.columns.toSet, Set.empty), asRoot = true)
+        val (v, s) = applyFn(defn, args, Sol(df, df.columns.toSet, Set.empty), dflt,
+          asRoot = true)
         (s.df, col(v))
     }
 
@@ -535,46 +549,26 @@ final class SparqlFrame(
     SparqlExpr.typedToTerm(SparqlExpr.compile(ast, env))
   }
 
-  private def applyFnFull(defn: ShaclFnDef, args: List[Column], cur: Sol,
-                          quadCtx: Option[(String, DataFrame)] = None,
-                          asRoot: Boolean = false): (String, Sol) = {
+  private def applyFn(defn: ShaclFnDef, args: List[Column], cur: Sol, sc: Scope,
+                      asRoot: Boolean = false): (String, Sol) = {
     fnCounter += 1
     val resVar = s"__fnr$fnCounter"
     val paramNames = defn.params.map(_._1)
     val argNames = paramNames.map(p => s"__fna${fnCounter}_$p")
-    // hidden graph var for the body evaluation: fresh (__-prefixed) so it
-    // cannot collide with a body variable that happens to share the outer
-    // graph var's name
-    val hv = quadCtx.map(_ => s"__fng$fnCounter")
     var df = cur.df
     paramNames.zip(argNames).zip(args).foreach { case ((_, an), a) =>
       df = df.withColumn(an, a)
     }
-    val seedCols = paramNames.zip(argNames).map { case (p, an) => col(an).as(p) } ++
-      quadCtx.map { case (gv, _) => col(gv).as(hv.get) }
-    val seedDf = df.select(seedCols: _*).distinct()
-    val seed = Sol(seedDf, paramNames.toSet ++ hv, Set.empty)
+    val groupKeys = paramNames ++ sc.key
+    val seedDf = df.select(paramNames.zip(argNames).map { case (p, an) => col(an).as(p) } ++
+      sc.key.map(col): _*).distinct()
+    val seed = Sol(seedDf, groupKeys.toSet, Set.empty)
     if (asRoot) rootSeed = seed
-    val groupKeys = paramNames ++ hv
-    def evalBody(w: SqGroup): Sol = quadCtx match {
-      case Some((_, base)) => evalQuadGroup(w, hv.get, base, seed)
-      case None => evalGroup(w, seed)
-    }
     val resolved: DataFrame = defn.body.toOption.get match {
       case sel: SqSelect =>
-        val res = quadCtx match {
-          case Some((_, base)) =>
-            // per-graph projection: LIMIT/OFFSET slice per graph and a
-            // paramless global aggregate gets the per-graph empty-group
-            // row — the same treatment quad-path sub-selects get (with
-            // params the empty-group fill can't be keyed, and absent
-            // (args, graph) groups read back as unbound via the left
-            // join below, matching the per-graph loop)
-            val fill = if (paramNames.isEmpty) Some(graphSeedSol(hv.get, base).df) else None
-            project(sel, evalBody(sel.where), keep = paramNames.toSet ++ hv,
-              sliceBy = hv, fillEmpty = fill)
-          case None => evalSelect2(sel, seed, keep = paramNames.toSet)
-        }
+        // with params the empty-group fill can't be keyed: an absent
+        // (args, graph) group reads back as unbound via the left join below
+        val res = subSelect(sel, seed, paramNames.toSet, sc)
         val resultVar = sel.proj.headOption match {
           case Some(PVar(x)) => x
           case Some(PExpr(_, as)) => as
@@ -585,9 +579,9 @@ final class SparqlFrame(
         else res.df.groupBy(groupKeys.map(col): _*)
           .agg(first(col(resultVar), ignoreNulls = true).as(resVar))
       case ask: SqAsk =>
-        // ASK per argument tuple (× graph under quadCtx): matched tuples
+        // ASK per argument tuple (× graph under a key): matched tuples
         // -> true, else false
-        val g = evalBody(ask.where)
+        val g = evalGroup(ask.where, seed, sc)
         val hits = g.df.select(groupKeys.map(col): _*).distinct()
           .withColumn("__hit", lit(1))
         seedDf.join(hits, groupKeys, "left")
@@ -595,17 +589,10 @@ final class SparqlFrame(
       case _ => throw new ReportableError(
         s"SHACLFunction <${defn.iri.value}> body must be a SELECT or ASK query")
     }
-    val renamed0 = paramNames.zip(argNames).foldLeft(resolved) { case (d, (p, an)) =>
+    val renamed = paramNames.zip(argNames).foldLeft(resolved) { case (d, (p, an)) =>
       d.withColumnRenamed(p, an)
     }
-    // body-graph var back to the caller's graph var name, so the join
-    // keys on it (safe: params were just renamed to __fna columns, and
-    // the result var is __fnr — no bare name can collide)
-    val renamed = quadCtx match {
-      case Some((gv, _)) => renamed0.withColumnRenamed(hv.get, gv)
-      case None => renamed0
-    }
-    val joinKeys = argNames ++ quadCtx.map(_._1)
+    val joinKeys = argNames ++ sc.key
     val joined =
       if (joinKeys.isEmpty) df.crossJoin(broadcast(renamed))
       else df.join(renamed, joinKeys, "left")
@@ -613,11 +600,15 @@ final class SparqlFrame(
   }
 
   // ---------------------------------------------------------- BGP joins
-  /** Defined via [[existsGroups]] — ONE traversal for both the dispatch
-    * sites (evalElem / evalQuadGroup) and the quadCompatible gate, so the
-    * two can never drift and misroute a filter into a path whose
-    * EXISTS-lift case doesn't fire. */
-  private def hasExists(e: SqExpr): Boolean = existsGroups(e).nonEmpty
+  private def hasExists(e: SqExpr): Boolean = e match {
+    case EExists(_, _) => true
+    case EBin(_, l, r) => hasExists(l) || hasExists(r)
+    case ENot(x) => hasExists(x)
+    case ENeg(x) => hasExists(x)
+    case ECall(_, as) => as.exists(hasExists)
+    case EFnIri(_, as) => as.exists(hasExists)
+    case _ => false
+  }
 
   /** Variables an expression references directly (EXISTS bodies excluded —
     * their correlation is the lift's job, not the caller's). */
@@ -631,318 +622,20 @@ final class SparqlFrame(
     case _ => Set.empty
   }
 
-  /** Every EXISTS body anywhere inside the expression (quadCompatible
-    * checks each one rides the quad path before lifting the filter). */
-  private def existsGroups(e: SqExpr): List[SqGroup] = e match {
-    case EExists(g, _) => List(g)
-    case EBin(_, l, r) => existsGroups(l) ++ existsGroups(r)
-    case ENot(x) => existsGroups(x)
-    case ENeg(x) => existsGroups(x)
-    case ECall(_, as) => as.flatMap(existsGroups)
-    case EFnIri(_, as) => as.flatMap(existsGroups)
-    case _ => Nil
-  }
-
-  /** WHERE group of every full-bodied SHACLFunction call anywhere inside
-    * the expression, paired with the function's IRI (args recurse; EXISTS
-    * bodies are walked separately via [[existsGroups]], whose groups
-    * re-enter quadCompatible and reach the filters inside). quadCompatible
-    * requires each one to itself ride the quad path before lifting the
-    * call, and hasGraphPat walks them so a body's nested GRAPH cannot hide
-    * under GRAPH <iri>. The IRI lets those walkers thread a visited set:
-    * a self- or mutually-recursive function definition would otherwise
-    * recurse unboundedly at plan-compatibility time (StackOverflowError)
-    * — a visited body is instead treated as non-quad-compatible, which
-    * just routes the block to the per-graph loop. */
-  private def fnBodyGroups(e: SqExpr): List[(String, SqGroup)] = e match {
-    case EFnIri(iri, as) =>
-      val own = fns.get(iri).flatMap(_.body.toOption).toList.collect {
-        case sel: SqSelect => iri -> sel.where
-        case ask: SqAsk => iri -> ask.where
-      }
-      own ++ as.flatMap(fnBodyGroups)
-    case EBin(_, l, r) => fnBodyGroups(l) ++ fnBodyGroups(r)
-    case ENot(x) => fnBodyGroups(x)
-    case ENeg(x) => fnBodyGroups(x)
-    case ECall(_, as) => as.flatMap(fnBodyGroups)
-    case _ => Nil
-  }
-
-  /** Shapes a GRAPH ?g block can take and still compile to the single-pass
-    * quad-join plan: triple patterns (IRI/var/property-path predicate —
-    * paths walk [[PathEval]] with a frontier that carries the graph
-    * column), row-local FILTER/BIND, OPTIONAL / UNION whose branches are
-    * themselves quad-compatible, nested GRAPH ?y over a quad-compatible
-    * body (re-scoping is just another quad evaluation on a fresh graph
-    * var), and EVERY sub-select whose WHERE is quad-compatible: GROUP BY
-    * aggregates ride the hidden graph key, OFFSET/LIMIT rank per graph
-    * (project's sliceBy), and global aggregates per-graph-ize via
-    * aggregateStep's fillEmpty (matchless graphs get SPARQL's empty-group
-    * row). Nested GRAPH <iri> rides the path too (one evaluation over the
-    * frame filtered to that graph), unless a further GRAPH nests inside it
-    * (that one must range over ALL named graphs again). EXISTS — top-level
-    * or nested inside a FILTER expression — rides the path when every
-    * EXISTS body is itself quad-compatible (liftExists markers), and so
-    * do full-bodied SHACLFunction calls whose body WHERE is
-    * quad-compatible (the (args, graph) seed — r7). What still falls back
-    * to the per-graph loop (bounded by MaxGraphLoop):
-    * GRAPH-under-GRAPH-<iri> and filter/bind EXISTS or SHACLFunction
-    * bodies that are themselves non-quad-compatible. */
-  private def quadCompatible(g: SqGroup, seen: Set[String] = Set.empty): Boolean = {
-    // pattern-bearing: something must bind ?g per graph — a bare triple, an
-    // OPTIONAL/UNION whose branches are themselves pattern-bearing (checked
-    // recursively below), or a sub-select / nested GRAPH (the evaluator
-    // seeds ?g with the named-graph frame when the block leaves it
-    // unbound). A leading OPTIONAL is fine since r6: the fold seeds its
-    // left side with the named-graph frame (see evalQuadGroup), so the
-    // left join is per-graph from the first element.
-    val bearing = g.elems.exists {
-      case _: SqTriple | _: SqOptional | _: SqUnion | _: SqSubSelect => true
-      case SqGraphPat(TVar(v), _) => v != "shapesGraph"
-      case SqGraphPat(TConst(_: graft.rdf.Iri), _) => true
-      case _ => false
-    }
-    bearing && g.elems.forall {
-      case t: SqTriple => t.p match {
-        case PredIri(_) | PredVar(_) | PredPath(_) => true
-        case _ => false
-      }
-      // (NOT) EXISTS — top-level or nested inside the filter expression —
-      // re-enters the quad evaluator with ?g in the correlation key
-      // (top-level as a semi/anti join, nested via liftExists markers),
-      // as long as every EXISTS body is itself quad-compatible
-      case SqFilter(EExists(g2, _)) => quadCompatible(g2, seen)
-      case SqFilter(ENot(EExists(g2, _))) => quadCompatible(g2, seen)
-      // full-bodied SHACLFunction calls ride the path when every body's
-      // WHERE is itself quad-compatible: the body evaluates through
-      // evalQuadGroup keyed on the (args, graph) seed (r7)
-      case SqFilter(e) =>
-        existsGroups(e).forall(quadCompatible(_, seen)) &&
-          fnBodyGroups(e).forall { case (iri, g2) =>
-            !seen.contains(iri) && quadCompatible(g2, seen + iri) }
-      // BIND folds with the patterns, but the evaluator seeds ?g first
-      // when the expression needs it (EXISTS, a full-bodied function call
-      // — whose result is per-graph — or a direct ?g reference), so
-      // EXISTS- and function-bearing BINDs ride the path when their
-      // bodies do
-      case SqBind(e, _) =>
-        existsGroups(e).forall(quadCompatible(_, seen)) &&
-          fnBodyGroups(e).forall { case (iri, g2) =>
-            !seen.contains(iri) && quadCompatible(g2, seen + iri) }
-      case SqOptional(g2) => quadCompatible(g2, seen)
-      case SqUnion(branches) => branches.forall(quadCompatible(_, seen))
-      // GRAPH $shapesGraph must re-enter evalGroup (it swaps activeT to
-      // the shapes frame, not a data graph) — per-graph loop handles it
-      case SqGraphPat(TVar(v), g2) => v != "shapesGraph" && quadCompatible(g2, seen)
-      // nested GRAPH <iri> re-scopes to ONE fixed graph: a single quad
-      // evaluation over the frame filtered to that graph (late r6). A
-      // further GRAPH nested inside it must range over ALL named graphs
-      // again, which the filtered frame cannot express — keep those on
-      // the loop.
-      case SqGraphPat(TConst(_: graft.rdf.Iri), g2) =>
-        quadCompatible(g2, seen) && !hasGraphPat(g2, seen)
-      // sub-selects ride the hidden graph key: GROUP BY aggregates group
-      // per graph, OFFSET/LIMIT rank per graph (project's sliceBy), and a
-      // GLOBAL aggregate per-graph-izes via aggregateStep's fillEmpty
-      // (matchless graphs get the SPARQL empty-group row: COUNT/SUM 0,
-      // GROUP_CONCAT "", the rest unbound)
-      case SqSubSelect(sel) => quadCompatible(sel.where, seen)
-      case _ => false
-    }
-  }
-
-  /** Any GRAPH pattern anywhere under the group (used to keep nested
-    * GRAPH-inside-GRAPH-<iri> off the single-pass path — see
-    * quadCompatible). */
-  private def hasGraphPat(g: SqGroup, seen: Set[String] = Set.empty): Boolean = g.elems.exists {
-    case _: SqGraphPat => true
-    case SqOptional(g2) => hasGraphPat(g2, seen)
-    case SqUnion(bs) => bs.exists(hasGraphPat(_, seen))
-    case SqSubSelect(sel) => hasGraphPat(sel.where, seen)
-    // EXISTS and SHACLFunction bodies anywhere in a filter/bind
-    // expression — an expression-NESTED body can smuggle a GRAPH pattern
-    // past a top-level-only check, and under GRAPH <iri> that pattern
-    // would wrongly range over the constant-filtered frame
-    case SqFilter(e) =>
-      existsGroups(e).exists(hasGraphPat(_, seen)) ||
-        fnBodyGroups(e).exists { case (iri, g2) =>
-          !seen.contains(iri) && hasGraphPat(g2, seen + iri) }
-    case SqBind(e, _) =>
-      existsGroups(e).exists(hasGraphPat(_, seen)) ||
-        fnBodyGroups(e).exists { case (iri, g2) =>
-          !seen.contains(iri) && hasGraphPat(g2, seen + iri) }
-    case _ => false
-  }
-
-  /** One row per named graph with `x` bound to the graph IRI — the
-    * quads-path image of the SPARQL empty solution Z inside GRAPH ?x. A
-    * leading OPTIONAL left-joins against THIS frame (so the join is keyed
-    * per graph and a graph whose optional part is empty still contributes
-    * its row of nulls), instead of falling back to the per-graph loop. */
-  private def graphSeedSol(x: String, base: DataFrame): Sol =
-    Sol(base.select(iriT(col("g")).as(x)).distinct(), Set(x), Set.empty)
-
-  /** Evaluate a quad-compatible GRAPH ?g block in ONE pass: every triple
-    * pattern becomes a [[quadPattern]] binding `x` from the quads g
-    * column, OPTIONAL becomes the regular keyed left join (whose keys
-    * include `x`, so matches stay inside the row's graph), UNION unions
-    * per-branch evaluations, and FILTERs scope to the whole block. */
-  private def evalQuadGroup(g: SqGroup, x: String, base: DataFrame, start: Sol): Sol = {
-    val withPats = g.elems.foldLeft(start) {
-      case (acc, t: SqTriple) => t.p match {
-        case PredPath(p) => pathPattern(t, acc, p, Some((x, base)))
-        case _ => joinSols(acc, quadPattern(t, x, base))
-      }
-      case (acc, SqOptional(g2)) =>
-        // leading OPTIONAL: nothing has bound ?x yet, but SPARQL's
-        // LeftJoin(Z, A) is per graph — seed with the named-graph frame
-        // so the left side carries one row per graph (× the pre-bound seed)
-        val seeded = if (acc.vars.contains(x)) acc
-          else joinSols(acc, graphSeedSol(x, base))
-        optionalJoinWith(seeded, g2, (gg, seed) => evalQuadGroup(gg, x, base, seed))
-      case (acc, SqUnion(branches)) =>
-        // a branch that leaves ?x unbound (nested-GRAPH-only body) ranges
-        // over every named graph — seed it, don't null-fill it
-        unionSols(branches.map { b =>
-          val r = evalQuadGroup(b, x, base, acc)
-          if (r.vars.contains(x)) r else joinSols(r, graphSeedSol(x, base))
-        })
-      case (acc0, SqBind(e, v)) =>
-        if (acc0.vars.contains(v))
-          throw new ReportableError(s"BIND would re-bind already-bound variable ?$v")
-        // a BIND that references ?x before any pattern has bound it (e.g.
-        // a leading BIND(STR(?g) AS ?u)) must still see ?x bound per graph
-        // — seed from the named-graph catalog, like leading OPTIONALs; a
-        // later pattern join restricts back to the row's own graph. A
-        // BIND over an EXISTS or a full-bodied function call always
-        // seeds: the body correlates on (and its result varies with) ?x,
-        // so per-graph scoping needs the binding regardless of where the
-        // BIND sits in the block.
-        val acc = if (!acc0.vars.contains(x) &&
-            (hasExists(e) || hasFullFn(e) || exprVars(e).contains(x)))
-          joinSols(acc0, graphSeedSol(x, base)) else acc0
-        if (hasExists(e) || hasFullFn(e)) {
-          val (e1, s1) = if (hasExists(e)) liftExists(e, acc,
-            (gg, seed) => evalQuadGroup(gg, x, base, seed)) else (e, acc)
-          val (e2, s2) = if (hasFullFn(e1)) liftFnCalls(e1, s1, Some((x, base)))
-            else (e1, s1)
-          Sol(s2.df.withColumn(v, compileT(e2, s2))
-            .select((acc.vars + v).toSeq.sorted.map(col): _*),
-            acc.vars + v, acc.maybeNull)
-        } else Sol(acc.df.withColumn(v, compileT(e, acc)), acc.vars + v, acc.maybeNull)
-      case (acc, SqGraphPat(TVar(y), g2)) =>
-        // nested GRAPH re-scopes the active graph: it evaluates against
-        // the full named-graphs frame on its own graph var, independent of
-        // ?x (the dispatch site seeds ?x afterwards if nothing binds it —
-        // SPARQL's cross product of outer graph names with the inner
-        // solutions). Same-var nesting (GRAPH ?x inside GRAPH ?x) falls
-        // out of the shared-variable join.
-        val r = evalQuadGroup(g2, y, base, acc)
-        if (r.vars.contains(y)) r else joinSols(r, graphSeedSol(y, base))
-      case (acc, SqGraphPat(TConst(i: graft.rdf.Iri), g2)) =>
-        // nested GRAPH <iri> re-scopes to ONE fixed graph, independent of
-        // the outer ?x entirely: a single quad evaluation over the frame
-        // filtered to that graph (the hidden var binds the constant on
-        // every row and drops out; the dispatch site seeds ?x afterwards
-        // when nothing else binds it — SPARQL's cross product of the
-        // outer graph names with the inner solutions)
-        val y = s"__gconst_$x"
-        val r = evalQuadGroup(g2, y, base.filter(col("g") === i.value), acc)
-        Sol(r.df.drop(y), r.vars - y, r.maybeNull - y)
-      case (acc, SqSubSelect(sel)) =>
-        // per-graph sub-select in ONE pass: the inner WHERE evaluates on a
-        // hidden graph var that `project` carries through grouping and
-        // DISTINCT (the `keep` channel — the same one SHACL pre-binding
-        // attribution uses), so aggregates group per graph, DISTINCT
-        // dedups per graph, and the projected result joins back on ?x
-        // plus shared projected vars. Sub-selects see the pre-bound seed
-        // (rootSeed), not the outer block's partial solution, per SPARQL
-        // bottom-up evaluation.
-        val hv = s"__gsub_$x"
-        val inner0 = evalQuadGroup(sel.where, hv, base, rootSeed)
-        val inner = if (inner0.vars.contains(hv)) inner0
-          else joinSols(inner0, graphSeedSol(hv, base))
-        val sub = project(sel, inner, keep = Set(hv), sliceBy = Some(hv),
-          fillEmpty = Some(graphSeedSol(hv, base).df))
-        val merged =
-          if (sub.vars.contains(x))
-            // the sub-select itself projects a var named ?x: per SPARQL it
-            // is the same variable, so it must be compatible with (and is
-            // then overridden by) the graph binding
-            Sol(sub.df.filter(col(x).isNull || col(x) === col(hv))
-              .withColumn(x, col(hv)).drop(hv), sub.vars - hv, sub.maybeNull - x - hv)
-          else Sol(sub.df.withColumnRenamed(hv, x), sub.vars - hv + x,
-            if (sub.maybeNull.contains(hv)) sub.maybeNull - hv + x else sub.maybeNull)
-        joinSols(acc, merged)
-      case (acc, _) => acc // filters applied below
-    }
-    // seed ?x BEFORE the filter fold: a block whose only patterns are
-    // nested GRAPH ?h binds h but not x, and SPARQL scopes the group's
-    // FILTERs over the solution WITH ?x bound per graph — evaluating them
-    // against an unbound x (or correlating EXISTS without it) is silently
-    // wrong (r6 self-review finding #1)
-    val withG = if (withPats.vars.contains(x)) withPats
-      else joinSols(withPats, graphSeedSol(x, base))
-    g.elems.foldLeft(withG) {
-      case (acc, SqFilter(EExists(g2, neg))) =>
-        existsFilterWith(acc, g2, neg, (gg, seed) => evalQuadGroup(gg, x, base, seed))
-      case (acc, SqFilter(ENot(EExists(g2, neg)))) =>
-        existsFilterWith(acc, g2, !neg, (gg, seed) => evalQuadGroup(gg, x, base, seed))
-      case (acc, SqFilter(e)) if hasExists(e) || hasFullFn(e) =>
-        // expression-nested EXISTS and full-bodied SHACLFunction calls:
-        // markers/result columns materialize through the quad evaluator,
-        // so the correlation key carries ?x (seeded above) and each body
-        // scopes per graph — single-pass, like the top-level cases
-        val (e1, s1) = if (hasExists(e)) liftExists(e, acc,
-          (gg, seed) => evalQuadGroup(gg, x, base, seed)) else (e, acc)
-        val (e2, s2) = if (hasFullFn(e1)) liftFnCalls(e1, s1, Some((x, base)))
-          else (e1, s1)
-        val filtered = s2.df.filter(compileB(e2, s2) === true)
-        Sol(filtered.select(acc.vars.toSeq.sorted.map(col): _*), acc.vars, acc.maybeNull)
-      case (acc, SqFilter(e)) => acc.copy(df = acc.df.filter(compileB(e, acc) === true))
-      case (acc, _) => acc
-    }
-  }
-
-  /** One triple pattern against the quads frame, additionally binding
-    * `gVar` from the `g` column — the GRAPH ?g fast path. */
-  private def quadPattern(t: SqTriple, gVar: String, base0: DataFrame): Sol = {
-    var base = base0
-    val sources = scala.collection.mutable.ListBuffer.empty[(String, Column)]
-    sources += gVar -> iriT(col("g"))
-    t.s match {
-      case TVar(x) => sources += x -> col("s")
-      case TConst(n) => base = base.filter(col("s") === termLit(n))
-    }
-    t.p match {
-      case PredIri(i) => base = base.filter(col("p") === i)
-      case PredVar(x) =>
-        sources += x -> iriT(col("p"))
-      case other => throw new IllegalStateException(s"quadPattern: $other") // quadCompatible rejects $PATH
-    }
-    t.o match {
-      case TVar(x) => sources += x -> col("o")
-      case TConst(n) => base = base.filter(col("o") === termLit(n))
-    }
-    val grouped = sources.toList.groupBy(_._1)
-    for ((_, cols) <- grouped if cols.size > 1)
-      base = base.filter(
-        cols.map(_._2).sliding(2).map(p => p.head === p(1)).reduce(_ && _))
-    val out = grouped.map { case (x, cols) => cols.head._2.as(x) }.toSeq
-    Sol(base.select(out: _*), grouped.keySet, Set.empty)
-  }
-
-  private def triplePattern(t: SqTriple, cur: Sol): Sol = {
+  /** One triple pattern in scope `sc`: constant positions filter, variable
+    * positions project, and under a graph key the key binds from `g`. A
+    * property path (incl. $PATH) walks from its bound side. */
+  private def triplePattern(t: SqTriple, cur: Sol, sc: Scope): Sol = {
     t.p match {
       case PredShapePath =>
         return pathPattern(t, cur, shapePath.getOrElse(throw new ReportableError(
-          "SPARQL Constraint text has $PATH in it, but no path is known on this Shape.")))
-      case PredPath(p) => return pathPattern(t, cur, p)
+          "SPARQL Constraint text has $PATH in it, but no path is known on this Shape.")), sc)
+      case PredPath(p) => return pathPattern(t, cur, p, sc)
       case _ =>
     }
-    var base = activeT
-    // constant positions filter; variable positions project
+    var base = sc.frame
     val sources = scala.collection.mutable.ListBuffer.empty[(String, Column)]
+    sc.key.foreach(k => sources += k -> iriT(col("g")))
     t.s match {
       case TVar(x) => sources += x -> col("s")
       case TConst(n) => base = base.filter(col("s") === termLit(n))
@@ -951,7 +644,7 @@ final class SparqlFrame(
       case PredIri(i) => base = base.filter(col("p") === i)
       case PredVar(x) =>
         sources += x -> iriT(col("p"))
-      case PredShapePath => // handled above
+      case _ => // paths handled above
     }
     t.o match {
       case TVar(x) => sources += x -> col("o")
@@ -1016,16 +709,14 @@ final class SparqlFrame(
     * already bound (pySHACL lets rdflib walk it per focus; here the
     * engine's own path stepper runs from the bound anchor, which keeps
     * closure paths seeded and scale-safe). Unanchored closure-free paths
-    * fall back to a full pairs scan. Inside a quad-compatible GRAPH ?g
-    * block (`graph` = (?g, quads)) the frontier carries the graph column,
-    * so a closure runs for every named graph in one distributed pass, and
-    * ?g binds from the g column of the result — per-graph scoping falls
-    * out of the shared-variable join, same as quadPattern. */
-  private def pathPattern(t: SqTriple, cur: Sol, path: PathIR,
-                          graph: Option[(String, DataFrame)] = None): Sol = {
-    val base = graph.fold(activeT)(_._2)
-    val gOut = graph.map { case (gVar, _) => iriT(col("g")).as(gVar) }.toSeq
-    val gVars = graph.map(_._1).toSet
+    * fall back to a full pairs scan. Under a graph key the frontier carries
+    * the graph column, so a closure runs for every named graph in one
+    * distributed pass, and the key binds from the g column of the result.
+    * Returns the pattern's solutions; the caller joins them in. */
+  private def pathPattern(t: SqTriple, cur: Sol, path: PathIR, sc: Scope): Sol = {
+    val base = sc.frame
+    val gOut = sc.key.map(k => iriT(col("g")).as(k)).toSeq
+    val gVars = sc.key.toSet
     def boundSide(term: SqTerm): Boolean = term match {
       case TVar(x) => cur.vars.contains(x)
       case TConst(_) => true
@@ -1034,13 +725,12 @@ final class SparqlFrame(
     if (!forward && !boundSide(t.o)) {
       val pairs = pathPairs(path, base).getOrElse(throw new ReportableError(
         "a closure property path with neither side bound is not supported"))
-      val sol = (t.s, t.o) match {
+      return (t.s, t.o) match {
         case (TVar(a), TVar(b)) =>
           Sol(pairs.select(col("f").as(a) +: col("v").as(b) +: gOut: _*), Set(a, b) ++ gVars,
             Set.empty)
         case _ => throw new ReportableError("unreachable: unanchored ground path")
       }
-      return joinSols(cur, sol)
     }
     val (anchor, other, p) =
       if (forward) (t.s, t.o, path) else (t.o, t.s, PathIR.invert(path))
@@ -1048,24 +738,24 @@ final class SparqlFrame(
       case TVar(x) => cur.df.select(col(x).as("f")).filter(col("f").isNotNull).distinct()
       case TConst(n) => spark.range(1).select(termLit(n).as("f"))
     }
-    val res = (graph match {
-      case None if activeT eq T => pathStep(anchorVals.select(col("f"), col("f").as("v")), p)
+    val res = (sc.key match {
+      case None if base eq T => pathStep(anchorVals.select(col("f"), col("f").as("v")), p)
       // inside a GRAPH block, paths walk the active (shapes / named) frame
       case None =>
-        PathEval.step(activeT, anchorVals.select(col("f"), col("f").as("v")), p, maxPathDepth)
-      case Some((gVar, _)) =>
-        // frontier graph column: from the bound ?g when available (anchor
+        PathEval.step(base, anchorVals.select(col("f"), col("f").as("v")), p, maxPathDepth)
+      case Some(k) =>
+        // frontier graph column: from the bound key when available (anchor
         // and graph stay paired), else every named graph via a distributed
         // cross join against the distinct-graph catalog — correct for any
-        // element order; queries that bind ?g with a plain pattern first
-        // take the cheap paired branch
+        // element order; queries that bind the graph with a plain pattern
+        // first take the cheap paired branch
         val frontier = anchor match {
-          case TVar(a) if cur.vars.contains(gVar) =>
-            cur.df.filter(col(gVar).isNotNull && col(a).isNotNull)
-              .select(col(a).as("f"), col(gVar)("v").as("g")).distinct()
+          case TVar(a) if cur.vars.contains(k) =>
+            cur.df.filter(col(k).isNotNull && col(a).isNotNull)
+              .select(col(a).as("f"), col(k)("v").as("g")).distinct()
               .select(col("f"), col("f").as("v"), col("g"))
-          case _ if cur.vars.contains(gVar) =>
-            cur.df.filter(col(gVar).isNotNull).select(col(gVar)("v").as("g")).distinct()
+          case _ if cur.vars.contains(k) =>
+            cur.df.filter(col(k).isNotNull).select(col(k)("v").as("g")).distinct()
               .crossJoin(anchorVals).select(col("f"), col("f").as("v"), col("g"))
           case _ =>
             anchorVals.crossJoin(base.select(col("g")).distinct())
@@ -1079,13 +769,13 @@ final class SparqlFrame(
       case (TVar(a), TConst(n)) =>
         (res.filter(col("v") === termLit(n)).select(col("f").as(a) +: gOut: _*), Set(a) ++ gVars)
       case (TConst(_), TVar(o)) => (res.select(col("v").as(o) +: gOut: _*), Set(o) ++ gVars)
-      case (TConst(_), TConst(n)) if graph.isEmpty =>
+      case (TConst(_), TConst(n)) if sc.key.isEmpty =>
         (res.filter(col("v") === termLit(n)).limit(1).select(lit(1).as("__unit")),
           Set("__unit"))
       case (TConst(_), TConst(n)) =>
         (res.filter(col("v") === termLit(n)).select(gOut: _*).distinct(), gVars)
     }
-    joinSols(cur, Sol(df, vars, Set.empty))
+    Sol(df, vars, Set.empty)
   }
 
   private def joinSols(a: Sol, b: Sol): Sol = {
@@ -1133,9 +823,6 @@ final class SparqlFrame(
   private def keyCond(l: DataFrame, r: DataFrame, varsS: Seq[String]): Column =
     varsS.map(x => l(x) <=> r("__x_" + x)).reduceOption(_ && _).getOrElse(lit(true))
 
-  private def existsFilter(cur: Sol, g: SqGroup, negated: Boolean): Sol =
-    existsFilterWith(cur, g, negated, evalGroup)
-
   /** Materialize every EXISTS inside an EXPRESSION (`EXISTS{} || …`,
     * `IF(EXISTS{}, …)`, `BIND(EXISTS{} AS ?b)`) as a correlated boolean
     * TERM column on `cur` — the same keyedSeed correlation the top-level
@@ -1143,10 +830,8 @@ final class SparqlFrame(
     * either way and the expression reads true/false — rewriting each
     * EExists node to a reference to its marker var. The caller evaluates
     * the rewritten expression, then projects the `__ex_*` markers away.
-    * This is SPARQL's EXISTS-anywhere-in-an-expression, which both
-    * evaluation paths previously rejected. */
-  private def liftExists(e: SqExpr, cur: Sol,
-                         eval: (SqGroup, Sol) => Sol): (SqExpr, Sol) = {
+    * This is SPARQL's EXISTS-anywhere-in-an-expression. */
+  private def liftExists(e: SqExpr, cur: Sol, sc: Scope): (SqExpr, Sol) = {
     var acc = cur
     var n = acc.df.columns.count(_.startsWith("__ex_"))
     def walk(x: SqExpr): SqExpr = x match {
@@ -1156,7 +841,7 @@ final class SparqlFrame(
         // are functionally dependent on them — carrying marker structs
         // through the seed distinct and join keys is pure width
         val (varsS, seed) = keyedSeed(Sol(acc.df, cur.vars, acc.maybeNull))
-        val sub = eval(g, seed)
+        val sub = evalGroup(g, seed, sc)
         val hits = sub.df.select(varsS.map(v => col("__k_" + v).as("__x_" + v)): _*)
           .distinct().withColumn("__hit", lit(true))
         val flag = coalesce(col("__hit"), lit(false))
@@ -1175,30 +860,25 @@ final class SparqlFrame(
     (walk(e), acc)
   }
 
-  /** existsFilter with a pluggable group evaluator — inside GRAPH ?g the
-    * quad path re-enters with quad-pattern evaluation, so the EXISTS body
-    * is correlated on EVERY current variable including ?g (keyedSeed
-    * copies them all into the __k_ join key): the semi/anti join is
-    * per-graph without a driver loop. */
-  private def existsFilterWith(cur: Sol, g: SqGroup, negated: Boolean,
-                               eval: (SqGroup, Sol) => Sol): Sol = {
+  /** FILTER (NOT) EXISTS as a semi/anti join: the body is correlated on
+    * EVERY current variable — the graph key included, so under GRAPH ?g
+    * the join is per graph (keyedSeed copies them all into the __k_ join
+    * key). */
+  private def existsFilter(cur: Sol, g: SqGroup, negated: Boolean, sc: Scope): Sol = {
     val (varsS, seed) = keyedSeed(cur)
-    val sub = eval(g, seed)
+    val sub = evalGroup(g, seed, sc)
     val hits = sub.df.select(varsS.map(x => col("__k_" + x).as("__x_" + x)): _*).distinct()
     val joined = cur.df.join(hits, keyCond(cur.df, hits, varsS),
       if (negated) "left_anti" else "left_semi")
     Sol(joined, cur.vars, cur.maybeNull)
   }
 
-  private def optionalJoin(cur: Sol, g: SqGroup): Sol =
-    optionalJoinWith(cur, g, evalGroup)
-
-  /** optionalJoin with a pluggable group evaluator (the GRAPH ?g quad path
-    * re-enters with quad-pattern evaluation so inner patterns bind ?g). */
-  private def optionalJoinWith(cur: Sol, g: SqGroup,
-                               eval: (SqGroup, Sol) => Sol): Sol = {
+  /** OPTIONAL as matched ∪ unmatched rows of the keyedSeed correlation
+    * (under a graph key the key is part of it, so matches stay in the
+    * row's graph). */
+  private def optionalJoin(cur: Sol, g: SqGroup, sc: Scope): Sol = {
     val (varsS, seed) = keyedSeed(cur)
-    val sub = eval(g, seed)
+    val sub = evalGroup(g, seed, sc)
     val newVars = sub.vars.diff(seed.vars)
     val outVars = (cur.vars ++ newVars).toSeq.sorted
     // sub side: coalesced solution values under __v_, original keys under __x_
@@ -1504,8 +1184,8 @@ final class SparqlFrame(
     struct(c.as("v"), lit(2.toByte).as("k"), lit("").as("dt"), lit("").as("lang"))
 
   /** IRI term struct from a plain string column — THE encoding every
-    * graph/predicate variable binding uses; the quad path's seed frames
-    * join against quad-pattern-bound columns, so all sites must share it. */
+    * graph/predicate variable binding uses; the graph catalog joins
+    * against pattern-bound graph keys, so all sites must share it. */
   private def iriT(c: Column): Column =
     struct(c.as("v"), lit(0.toByte).as("k"), lit("").as("dt"), lit("").as("lang"))
 
@@ -1558,12 +1238,4 @@ final class SparqlFrame(
       when(an < bn, -1).when(an === bn, 0).otherwise(1))
       .otherwise(callUDF("rdf_cmp", a("v"), a("k"), a("dt"), a("lang"), b("v"), b("dt"), b("lang")))
   }
-}
-
-object SparqlFrame {
-  /** Bound on the per-graph driver loop for GRAPH ?g blocks that cannot
-    * compile to the single-pass quad join (nested GRAPH, subselects):
-    * each graph adds a plan branch, so past this many graphs the engine
-    * fails loudly instead of silently building a huge Union plan. */
-  val MaxGraphLoop = 1000
 }

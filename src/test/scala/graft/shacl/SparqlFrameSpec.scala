@@ -322,6 +322,20 @@ class SparqlFrameSpec extends AnyFunSuite {
       Seq("2011-01-10T05:00:00+01:00", "2011-01-10T20:00:00Z", "2011-01-10T14:00:00-08:00"))
   }
 
+  test("a property path joins into maybe-null UNION rows once") {
+    // the path's solutions are joined with the group's rows exactly once:
+    // joining them again null-tolerantly would pair the two UNION rows
+    val g =
+      s"""@prefix ex: <$ex> .
+         |ex:a ex:q "v" ; ex:r "w" ; ex:p ex:b .
+         |""".stripMargin
+    val rows = runOn(g,
+      "SELECT ?n ?z ?o WHERE { { ?s ex:q ?n . } UNION { ?s ex:r ?z . } ?s ex:p+ ?o . }")
+    assert(rows.map(r => (r.get("n"), r.get("z"), r("o"))).toSet == Set(
+      (Some(Lit("v")), None, Iri(ex + "b")), (None, Some(Lit("w")), Iri(ex + "b"))))
+    assert(rows.size == 2)
+  }
+
   test("GRAPH <iri> and GRAPH ?g evaluate against named data graphs") {
     val trig =
       s"""@prefix ex: <$ex> .
@@ -482,9 +496,9 @@ class SparqlFrameSpec extends AnyFunSuite {
   }
 
   test("GRAPH ?g leading OPTIONAL at 100k graphs: fixed-size plan, no loop") {
-    // per-document-graph corpus with a LEADING optional — the exact shape
-    // that used to die at MaxGraphLoop — now compiles to one fixed-size
-    // plan (the only Unions are OPTIONAL's bounded matched/unmatched pair)
+    // per-document-graph corpus with a LEADING optional compiles to one
+    // fixed-size plan (the only Unions are OPTIONAL's bounded
+    // matched/unmatched pair)
     val many = QuadsDF.fromQuads(spark, (1 to 100000).flatMap(i =>
       Seq(Quad(Iri(s"$ex/s$i"), Iri(ex + "name"), Lit(s"n$i"), Some(Iri(s"$ex/g$i")))) ++
         (if (i % 2 == 0)
@@ -718,7 +732,7 @@ class SparqlFrameSpec extends AnyFunSuite {
     assert(joined.map(r => (r("g"), r("o"))) == Seq((Iri(ex + "g2"), Iri(ex + "d"))))
 
     // scale shape: closure over 50k per-document graphs = ONE fixpoint,
-    // not a per-graph loop (no MaxGraphLoop error, correct counts)
+    // not one plan branch per graph (correct counts)
     val many = QuadsDF.fromQuads(spark, (1 to 50000).flatMap(i =>
       Seq(Quad(Iri(s"$ex/a$i"), Iri(ex + "p"), Iri(s"$ex/b$i"), Some(Iri(s"$ex/g$i"))),
         Quad(Iri(s"$ex/b$i"), Iri(ex + "p"), Iri(s"$ex/c$i"), Some(Iri(s"$ex/g$i"))))))
@@ -761,10 +775,9 @@ class SparqlFrameSpec extends AnyFunSuite {
     assert(ex2.map(r => (r("g"), r("n"))) == Seq((Iri(ex + "g2"), Lit("A2"))))
   }
 
-  test("EXISTS inside GRAPH ?g at 10k graphs: one plan, no MaxGraphLoop") {
-    // 10k per-document graphs (10x MaxGraphLoop would be too slow to
-    // build driver-side; 10k > vocab scale proves the loop is not taken
-    // since the loop would still be legal here — assert plan shape too)
+  test("EXISTS inside GRAPH ?g at 10k graphs: one plan, no per-graph branches") {
+    // 10k per-document graphs: the plan must stay one fixed size (no
+    // per-graph Union branches), and the counts must be per graph
     val n = 10000
     val many = QuadsDF.fromQuads(spark, (1 to n).flatMap(i =>
       Seq(Quad(Iri(s"$ex/s$i"), Iri(ex + "name"), Lit(s"n$i"), Some(Iri(s"$ex/g$i")))) ++
@@ -843,10 +856,9 @@ class SparqlFrameSpec extends AnyFunSuite {
   }
 
   test("EXISTS body with a GRAPH pattern keeps GRAPH <iri> off the quad path") {
-    // the EXISTS body's GRAPH ?h must range over ALL named graphs; if the
-    // block rode the quad path, it would evaluate over the g1-filtered
-    // frame and find nothing (hasGraphPat must see through the
-    // expression-nested EXISTS)
+    // the EXISTS body's GRAPH ?h must range over ALL named graphs; over
+    // the g1-filtered frame of the enclosing GRAPH ex:g1 it would find
+    // nothing
     val trig =
       s"""@prefix ex: <$ex> .
          |GRAPH ex:g1 { ex:a ex:p ex:b . }
@@ -908,10 +920,9 @@ class SparqlFrameSpec extends AnyFunSuite {
     val rows = frame.collect(sol, Seq("g", "s", "z"))
     assert(rows.map(r => (r("g"), r("s"), r("z"))) ==
       Seq((Iri(ex + "g2"), Iri(ex + "a"), Iri(ex + "c"))))
-    // scale shape: the same nesting over MaxGraphLoop+1 graphs — the exact
-    // query that used to die at the loud bound — now compiles single-pass
+    // scale shape: the same nesting over 1001 graphs compiles single-pass
     val many = QuadsDF.fromQuads(spark,
-      (1 to (SparqlFrame.MaxGraphLoop + 1)).map(i =>
+      (1 to 1001).map(i =>
         Quad(Iri(s"$ex/s$i"), Iri(ex + "p"), Iri(s"$ex/o$i"), Some(Iri(s"$ex/g$i")))) :+
         Quad(Iri(s"$ex/o7"), Iri(ex + "p"), Iri(s"$ex/z7"), Some(Iri(ex + "g1"))))
     val manyT = QuadsDF.defaultUnion(many)
@@ -1000,18 +1011,22 @@ class SparqlFrameSpec extends AnyFunSuite {
     assert(res2.df.filter(res2.df("n")("v") === "0").count() == n - n / 4)
   }
 
-  test("GRAPH ?g with GRAPH-under-GRAPH-<iri> fails loudly past MaxGraphLoop graphs") {
-    val many = QuadsDF.fromQuads(spark, (1 to (SparqlFrame.MaxGraphLoop + 1)).map(i =>
+  test("GRAPH ?g with GRAPH-under-GRAPH-<iri> over 1001 graphs: one plan, empty answer") {
+    val many = QuadsDF.fromQuads(spark, (1 to 1001).map(i =>
       Quad(Iri(s"$ex/s$i"), Iri(ex + "p"), Iri(s"$ex/o$i"), Some(Iri(s"$ex/g$i")))))
     val manyT = QuadsDF.defaultUnion(many)
     val frame = new SparqlFrame(spark, manyT, PathEval.step(manyT, _, _),
       Map.empty, None, None, Some(many))
-    val e = intercept[ReportableError](frame.evalSelect(Sparql.parseQuery(
+    val res = frame.evalSelect(Sparql.parseQuery(
       """SELECT ?g ?s WHERE { GRAPH ?g { ?s ex:p ?o .
         |  GRAPH ex:g1 { GRAPH ?h { ?o ex:p ?z . } } } }""".stripMargin,
-      Map("ex" -> ex)).asInstanceOf[Sparql.SqSelect], frame.unitSeed))
-    assert(e.getMessage.contains("named graphs") &&
-      e.getMessage.contains(SparqlFrame.MaxGraphLoop.toString))
+      Map("ex" -> ex)).asInstanceOf[Sparql.SqSelect], frame.unitSeed)
+    assert(res.df.queryExecution.optimizedPlan.collect {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
+    }.isEmpty, "GRAPH under GRAPH <iri> built per-graph branches")
+    // the graphs are <ex//gN>, so ex:g1 names none of them, and no object
+    // ever occurs as a subject: every branch of the join is empty
+    assert(res.df.count() == 0)
   }
 
   test("SUBSTR clips zero/negative starts like fn:substring; REPLACE honors q flag") {
@@ -1117,5 +1132,147 @@ class SparqlFrameSpec extends AnyFunSuite {
     assert(unions.isEmpty,
       "GRAPH ?g with a SHACLFunction FILTER must not union per-graph branches")
     assert(res2.df.count() == 5000)
+  }
+
+  test("a FILTER scopes over its whole group, wherever it sits (SPARQL 18.2.2)") {
+    val trig =
+      s"""@prefix ex: <$ex> .
+         |ex:a ex:v 1 . ex:b ex:v 5 . ex:c ex:v 9 . ex:a ex:tag "t" . ex:c ex:tag "t" .
+         |GRAPH ex:g1 { ex:a ex:v 1 . ex:b ex:v 5 . ex:c ex:v 9 .
+         |              ex:a ex:tag "t" . ex:c ex:tag "t" . }
+         |GRAPH ex:g2 { ex:b ex:v 7 . ex:b ex:tag "t" . }
+         |""".stripMargin
+    val quads = QuadsDF.fromQuads(spark, TrigParser.parseGraphQuads(trig, "http://test/"))
+    val T = QuadsDF.graph(quads, None)
+    val frame = new SparqlFrame(spark, T, PathEval.step(T, _, _), Map.empty, None,
+      None, Some(quads))
+    def q(txt: String, out: Seq[String]) = {
+      val res = frame.evalSelect(Sparql.parseQuery(txt, Map("ex" -> ex))
+        .asInstanceOf[Sparql.SqSelect], frame.unitSeed)
+      frame.collect(res, out).toSet
+    }
+    def ss(names: String*) = names.map(n => Map[String, Node]("s" -> Iri(ex + n))).toSet
+    val block = "FILTER(?o > 2) ?s ex:v ?o ."
+    assert(q(s"SELECT ?s WHERE { $block }", Seq("s")) == ss("b", "c"))
+    assert(q(s"SELECT ?s WHERE { GRAPH ex:g1 { $block } }", Seq("s")) == ss("b", "c"))
+    assert(q(s"SELECT ?g ?s WHERE { GRAPH ?g { $block } }", Seq("g", "s")) == Set(
+      Map("g" -> Iri(ex + "g1"), "s" -> Iri(ex + "b")),
+      Map("g" -> Iri(ex + "g1"), "s" -> Iri(ex + "c")),
+      Map("g" -> Iri(ex + "g2"), "s" -> Iri(ex + "b"))))
+    // FILTER EXISTS ahead of the pattern that binds its correlated ?s
+    val ex1 = "FILTER EXISTS { ?s ex:tag ?t . } ?s ex:v ?o ."
+    assert(q(s"SELECT ?s WHERE { $ex1 }", Seq("s")) == ss("a", "c"))
+    assert(q(s"SELECT ?s WHERE { GRAPH ex:g1 { $ex1 } }", Seq("s")) == ss("a", "c"))
+    assert(q(s"SELECT ?g ?s WHERE { GRAPH ?g { $ex1 } }", Seq("g", "s")) == Set(
+      Map("g" -> Iri(ex + "g1"), "s" -> Iri(ex + "a")),
+      Map("g" -> Iri(ex + "g1"), "s" -> Iri(ex + "c")),
+      Map("g" -> Iri(ex + "g2"), "s" -> Iri(ex + "b"))))
+  }
+
+  /** Five named graphs for the per-graph differential below: chains,
+    * a cycle, ex:q edges and ex:name literals spread so that every block
+    * answers differently per graph. */
+  private val diffTrig =
+    s"""@prefix ex: <$ex> .
+       |ex:a ex:p ex:zz . ex:zz ex:q ex:a .
+       |GRAPH ex:g1 { ex:a ex:p ex:b . ex:b ex:p ex:c . ex:a ex:q ex:z . ex:b ex:name "B1" . }
+       |GRAPH ex:g2 { ex:c ex:p ex:d . ex:b ex:q ex:y . ex:d ex:name "D2" . }
+       |GRAPH ex:g3 { ex:a ex:p ex:c . ex:c ex:p ex:a . ex:c ex:q ex:z . ex:c ex:name "C3" . }
+       |GRAPH ex:g4 { ex:x ex:q ex:y . ex:x ex:name "X4" . ex:x ex:p ex:b . }
+       |GRAPH ex:g5 { ex:b ex:p ex:d . ex:d ex:p ex:e . ex:e ex:q ex:b . ex:e ex:q ex:g5 .
+       |              ex:e ex:name "E5" . }
+       |""".stripMargin
+
+  /** `GRAPH ?g { block }` two ways: the single evaluator over the whole
+    * dataset, and a reference that follows SPARQL's algebra literally —
+    * for each named graph a fresh frame whose default graph is that graph,
+    * the block evaluated there, ?g bound afterwards, the results unioned.
+    * Returns both answers and the Union fan-outs of the single plan. */
+  private def perGraphDiff(block: String, fns: Map[String, ShaclFnDef] = Map.empty,
+                           path: Option[PathIR] = None)
+      : (Set[Map[String, Node]], Set[Map[String, Node]], Seq[Int], Int) = {
+    val quads = QuadsDF.fromQuads(spark, TrigParser.parseGraphQuads(diffTrig, "http://test/"))
+    val shapes = TriplesDF.fromMemGraph(spark, TurtleParser.parseGraph(
+      s"""@prefix ex: <$ex> . ex:shape1 ex:q ex:d . ex:shape2 ex:q ex:b .""", "http://test/"))
+    def parse(txt: String) =
+      Sparql.parseQuery(txt, Map("ex" -> ex)).asInstanceOf[Sparql.SqSelect]
+    def run(T: org.apache.spark.sql.DataFrame, txt: String) = {
+      val f = new SparqlFrame(spark, T, PathEval.step(T, _, _), fns, path, Some(shapes),
+        Some(quads))
+      val res = f.evalSelect(parse(txt), f.unitSeed)
+      (f.collect(res, res.vars.filterNot(_.startsWith("__")).toSeq.sorted), res.df)
+    }
+    val names = QuadsDF.graphNames(quads)
+    val reference = names.flatMap { nm =>
+      run(QuadsDF.graph(quads, Some(nm)), s"SELECT * WHERE { $block }")._1
+        .filter(_.get("g").forall(_ == Iri(nm))).map(_ + ("g" -> Iri(nm)))
+    }.toSet
+    val (got, df) = run(QuadsDF.defaultUnion(quads), s"SELECT * WHERE { GRAPH ?g { $block } }")
+    val fanOuts = df.queryExecution.optimizedPlan.collect {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u.children.size
+    }
+    (got.toSet, reference, fanOuts, names.size)
+  }
+
+  private def assertPerGraph(block: String, fns: Map[String, ShaclFnDef] = Map.empty,
+                             path: Option[PathIR] = None): Set[Map[String, Node]] = {
+    val (got, want, fanOuts, graphs) = perGraphDiff(block, fns, path)
+    assert(graphs == 5)
+    assert(got == want, s"block { $block }")
+    assert(fanOuts.forall(_ < graphs), s"per-graph Union in the plan: $fanOuts")
+    got
+  }
+
+  test("GRAPH ?g MINUS and VALUES match the per-graph reference in one plan") {
+    // shared ?s: removes per graph, the rhs evaluated in the row's graph
+    val shared = assertPerGraph("?s ex:p ?o . MINUS { ?s ex:q ?z . }")
+    assert(shared.nonEmpty && !shared.contains(Map[String, Node](
+      "g" -> Iri(ex + "g1"), "s" -> Iri(ex + "a"), "o" -> Iri(ex + "b"))))
+    assert(shared.contains(Map[String, Node](
+      "g" -> Iri(ex + "g3"), "s" -> Iri(ex + "a"), "o" -> Iri(ex + "c"))))
+    // disjoint rhs, and an rhs whose only link to the lhs is the graph:
+    // neither removes anything
+    val all = assertPerGraph("?s ex:p ?o .")
+    assert(all.size == 8)
+    assert(assertPerGraph("?s ex:p ?o . MINUS { ?a ex:name ?n . }") == all)
+    assert(assertPerGraph("?s ex:p ?o . MINUS { ?a ex:q ?z . }") == all)
+    assertPerGraph("?s ex:p ?o . MINUS { ?a ex:q ?g . }")
+    assertPerGraph("VALUES ?s { ex:a ex:b ex:x } ?s ex:p ?o .")
+    assertPerGraph("?s ex:p ?o . VALUES (?s ?o) { (ex:a ex:b) (ex:c UNDEF) }")
+  }
+
+  test("GRAPH ?g $PATH and GRAPH $shapesGraph match the per-graph reference") {
+    val plus = Some(PathIR.POneOrMore(PathIR.PPred(ex + "p")))
+    assert(assertPerGraph("?s $PATH ?o .", path = plus).size == 12)
+    assertPerGraph("VALUES ?s { ex:a ex:b } ?s $PATH ?o .", path = plus)
+    assertPerGraph("?s $PATH ex:c .", path = Some(PathIR.PSeq(List(
+      PathIR.PPred(ex + "p"), PathIR.PPred(ex + "p")))))
+    val sg = assertPerGraph("?s ex:p ?o . GRAPH $shapesGraph { ?sh ex:q ?o . }")
+    assert(sg.map(_("sh")) == Set(Iri(ex + "shape1"), Iri(ex + "shape2")))
+  }
+
+  test("GRAPH ?g with GRAPH ?h under GRAPH <iri> matches the per-graph reference") {
+    val r = assertPerGraph("?s ex:p ?o . GRAPH ex:g1 { ?o ex:p ?w . GRAPH ?h { ?w ex:q ?z . } }")
+    assert(r.nonEmpty && r.map(_("h")).size > 1)
+    assertPerGraph("GRAPH ex:g5 { ?s ex:p ?o . } GRAPH ?h { ?o ex:q ?z . }")
+  }
+
+  test("GRAPH ?g EXISTS and nested SHACLFunction bodies with GRAPH match the reference") {
+    assertPerGraph("?s ex:p ?o . FILTER EXISTS { GRAPH ?h { ?o ex:name ?n . } }")
+    assertPerGraph("?s ex:p ?o . FILTER NOT EXISTS { ?o ex:p ?w . GRAPH ?h { ?w ex:q ?z . } }")
+    assertPerGraph("?s ex:p ?o . BIND(EXISTS { ?o ex:p ?w . GRAPH ?h { ?w ex:name ?n . } } AS ?b)")
+    // ex:reach's body calls ex:named, whose body ranges over every graph
+    val named = ShaclFnDef(Iri(ex + "named"), List(("x", XSD.string, false)), None,
+      Right(Sparql.parseQuery("ASK { GRAPH ?h { $x ex:name ?n . } }", Map("ex" -> ex))))
+    val reach = ShaclFnDef(Iri(ex + "reach"), List(("x", XSD.string, false)), None,
+      Right(Sparql.parseQuery("ASK { $x ex:p ?y . FILTER(ex:named(?y)) }", Map("ex" -> ex))))
+    val nameOf = ShaclFnDef(Iri(ex + "nameOf"), List(("x", XSD.string, false)), None,
+      Right(Sparql.parseQuery("SELECT ?n WHERE { GRAPH ?h { $x ex:name ?n . } }",
+        Map("ex" -> ex))))
+    val fns = Map(ex + "named" -> named, ex + "reach" -> reach, ex + "nameOf" -> nameOf)
+    val kept = assertPerGraph("?s ex:p ?o . FILTER(ex:reach(?o))", fns)
+    assert(kept.size == 3)
+    assertPerGraph("?s ex:p ?o . BIND(ex:nameOf(?o) AS ?n)", fns)
+    assertPerGraph("?s ex:p ?o . BIND(ex:reach(?s) AS ?r)", fns)
   }
 }
