@@ -19,6 +19,12 @@ final case class BNode(id: String) extends Node {
   def key: String = "_:" + id
   override def toString: String = s"_:$id"
 }
+object Node {
+  /** The inverse of [[Node.key]] for IRI (`<iri>`) and blank-node (`_:b`)
+    * keys. Literal keys lower-case the language tag, so they do not decode. */
+  def fromKey(key: String): Node =
+    if (key.startsWith("_:")) BNode(key.drop(2)) else Iri(key.drop(1).dropRight(1))
+}
 
 /** dt == "" means a simple literal (no written datatype); this is kept
   * distinct from an explicit ^^xsd:string, mirroring rdflib term equality

@@ -71,6 +71,16 @@ object TriplesDF {
           .when(c("dt") =!= "", concat(lit("^^"), c("dt")))
           .otherwise(lit(""))))
 
+  /** Term struct column of a term-key string column, the column twin of
+    * [[Node.fromKey]]: it decodes IRI and blank-node keys only. */
+  def keyTerm(k: Column): Column =
+    when(k.startsWith("_:"),
+      struct(k.substr(lit(3), length(k)).as("v"), lit(1.toByte).as("k"),
+        lit("").as("dt"), lit("").as("lang")))
+      .otherwise(
+        struct(regexp_replace(k, "^<|>$", "").as("v"), lit(0.toByte).as("k"),
+          lit("").as("dt"), lit("").as("lang")))
+
   def fromTriples(spark: SparkSession, ts: Seq[Triple]): DataFrame = {
     val rows = ts.map(t => Row(rowOf(t.s), t.p.value, rowOf(t.o)))
     spark.createDataFrame(new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)

@@ -4,11 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** The one semi-naive closure kernel behind every recursive operator:
-  * property-path closures ([[PathEval]]), OWL-RL `owl:TransitiveProperty`
-  * (prp-trp) and the registry's `q_closure`; and [[absorb]], the one naive
-  * fixpoint step behind the SHACL-AF rule loop ([[RulesEngine.expand]]) and
-  * OWL-RL classification and sameAs replication ([[OwlRlInference.expand]]).
+/** The one semi-naive closure kernel behind the frontier closures:
+  * property-path closures ([[PathEval]]) and the registry's `q_closure`;
+  * and [[absorb]], the one naive fixpoint step behind the SHACL-AF rule
+  * loop ([[RulesEngine.expand]]) and the OWL-RL fixpoint, whose rounds
+  * absorb every rule's rows, prp-trp and sameAs replication included
+  * ([[OwlRlInference.expand]]).
   *
   * Each batch chains [[Unroll]] applications of `step` lazily from the
   * frontier, subtracts everything reached so far once, at the batch

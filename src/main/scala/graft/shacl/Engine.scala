@@ -835,7 +835,7 @@ final class ValidationEngine(
     * the whole violationsFrame(), or with abortOnFirst the first
     * violation only. */
   def run(): Seq[ResultRow] = {
-    if (!opts.abortOnFirst) return violationsFrame().collect().toSeq.map(rowToResult)
+    if (!opts.abortOnFirst) return violationsFrame().collect().toSeq.map(ResultRow.of)
     // short-circuit: evaluate shape by shape, stop at the first
     // violation — a LIMIT-1 existence probe, not a full evaluation
     // (validator.py:336-337 abort_on_first)
@@ -848,7 +848,7 @@ final class ValidationEngine(
           buf ++= violations(shape, trackCp(t.localCheckpoint())).limit(1).collect()
         }
     }
-    buf.toSeq.map(rowToResult)
+    buf.toSeq.map(ResultRow.of)
   }
 
   /** At-scale entry point: the union of every shape's violations as a
@@ -873,20 +873,6 @@ final class ValidationEngine(
   /** Severity of a shape key (driver-side metadata for at-scale counts). */
   def severityOf(shapeKey: String): Iri =
     shapes.values.find(_.id.key == shapeKey).map(_.severity).getOrElse(SH.Violation)
-
-  private def rowToResult(r: Row): ResultRow =
-    ResultRow(
-      focus = TriplesDF.nodeOf(r.getStruct(0)),
-      value = Option(r.getStruct(1)).map(TriplesDF.nodeOf),
-      pathKey = Option(r.getString(2)),
-      component = Iri(r.getString(3)),
-      shapeKey = r.getString(4),
-      constraintKey = Option(r.getString(6)),
-      messages = Option(r.getSeq[Row](7)).map(_.toList.map(m =>
-        TriplesDF.nodeOf(m) match { case l: Lit => l; case o => Lit(o.key) }))
-        .getOrElse(Nil),
-      rid = Option(r.getString(8)),
-      parentRid = Option(r.getString(9)))
 }
 
 final case class ResultRow(
@@ -902,4 +888,21 @@ final case class ResultRow(
   rid: Option[String] = None,
   parentRid: Option[String] = None) {
   def isDetail: Boolean = parentRid.isDefined
+}
+
+object ResultRow {
+  /** The result a row of [[ValidationEngine.violationsFrame]] describes. */
+  def of(r: Row): ResultRow =
+    ResultRow(
+      focus = TriplesDF.nodeOf(r.getStruct(0)),
+      value = Option(r.getStruct(1)).map(TriplesDF.nodeOf),
+      pathKey = Option(r.getString(2)),
+      component = Iri(r.getString(3)),
+      shapeKey = r.getString(4),
+      constraintKey = Option(r.getString(6)),
+      messages = Option(r.getSeq[Row](7)).map(_.toList.map(m =>
+        TriplesDF.nodeOf(m) match { case l: Lit => l; case o => Lit(o.key) }))
+        .getOrElse(Nil),
+      rid = Option(r.getString(8)),
+      parentRid = Option(r.getString(9)))
 }

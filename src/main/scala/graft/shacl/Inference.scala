@@ -1,7 +1,7 @@
 package graft.shacl
 
 import graft.rdf._
-import graft.rdf.TriplesDF.{termKey, termLit}
+import graft.rdf.TriplesDF.{keyTerm, termKey, termLit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,102 +20,82 @@ import org.apache.spark.sql.functions._
   *   rdfs3  (s,p,o) + range(p,c), o not lit    -> (o,type,c)
   *   rdfs9  (x,type,c) + c subClassOf* d       -> (x,type,d)
   *   rdfs5/11 transitive closures of the schema predicates themselves.
+  * [[derive]] is that rule step over a given schema; OWL-RL runs it in
+  * every round of its fixpoint.
   */
 object RdfsInference {
 
-  private def transitive(pairs: Seq[(String, String)]): Seq[(String, String)] = {
+  /** The predicates of the schema triples the RDFS rules read. */
+  val schemaPreds: Seq[String] =
+    Seq(RDFS.subClassOf, RDFS.subPropertyOf, RDFS.domain, RDFS.range).map(_.value)
+
+  private def transitive[A](pairs: Seq[(A, A)]): Seq[(A, A)] = {
     val adj = pairs.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
-    def succ(n: String): Seq[String] = adj.getOrElse(n, Nil)
+    def succ(n: A): Seq[A] = adj.getOrElse(n, Nil)
     adj.keys.toSeq.flatMap(start => Closure.reach(succ(start), succ).map(start -> _))
   }
 
-  private def keyNode(k: String): Node =
-    if (k.startsWith("_:")) BNode(k.drop(2)) else Iri(k.drop(1).dropRight(1))
-
   def expand(spark: SparkSession, df: DataFrame): DataFrame = {
-    import spark.implicits._
-    val schemaPreds = Seq(RDFS.subClassOf, RDFS.subPropertyOf, RDFS.domain, RDFS.range).map(_.value)
-    val schema = df.filter($"p".isin(schemaPreds: _*))
-      .select($"p", termKey($"s").as("sk"), termKey($"o").as("ok")).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
-    if (schema.isEmpty) return df
-
-    val sc = transitive(schema.collect { case (p, s, o) if p == RDFS.subClassOf.value => (s, o) })
-    val sp = transitive(schema.collect { case (p, s, o) if p == RDFS.subPropertyOf.value => (s, o) })
-      // only IRI properties can appear in predicate position
-      .filter { case (s, o) => s.startsWith("<") && o.startsWith("<") }
-      .map { case (s, o) => (s.drop(1).dropRight(1), o.drop(1).dropRight(1)) }
-    val dom = schema.collect { case (p, s, o) if p == RDFS.domain.value && s.startsWith("<") =>
-      (s.drop(1).dropRight(1), o) }
-    val rng = schema.collect { case (p, s, o) if p == RDFS.range.value && s.startsWith("<") =>
-      (s.drop(1).dropRight(1), o) }
-
-    var out = df
-    // rdfs7: subPropertyOf propagation
-    val withSuper =
-      if (sp.isEmpty) df
-      else {
-        val spDF = sp.toDF("_sub", "_sup")
-        val derived = df.join(broadcast(spDF), df("p") === $"_sub")
-          .select($"s", $"_sup".as("p"), $"o")
-        out = out.unionByName(derived)
-        out
-      }
-    // rdfs2/3: domain/range type derivation (range skips literal objects)
-    val typed = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    if (dom.nonEmpty) {
-      val domDF = dom.toDF("_dp", "_dc")
-      typed += withSuper.join(broadcast(domDF), withSuper("p") === $"_dp")
-        .select($"s", lit(RDF.ty.value).as("p"),
-          termKeyToTermCol(spark, $"_dc").as("o"))
-    }
-    if (rng.nonEmpty) {
-      val rngDF = rng.toDF("_rp", "_rc")
-      typed += withSuper.join(broadcast(rngDF), withSuper("p") === $"_rp")
-        .filter($"o"("k") =!= 2)
-        .select($"o".as("s"), lit(RDF.ty.value).as("p"),
-          termKeyToTermCol(spark, $"_rc").as("o"))
-    }
-    typed.foreach(t => out = out.unionByName(t))
-    // rdfs9: type propagation up the class hierarchy
-    if (sc.nonEmpty) {
-      val scDF = sc.toDF("_csub", "_csup")
-      val upTypes = out.filter($"p" === RDF.ty.value)
-        .join(broadcast(scDF), termKey($"o") === $"_csub")
-        .select($"s", lit(RDF.ty.value).as("p"), termKeyToTermCol(spark, $"_csup").as("o"))
-      out = out.unionByName(upTypes)
-      // rdfs11: materialized transitive subClassOf triples
-      val scTriples = TriplesDF.fromTriples(spark,
-        sc.map { case (a, b) => Triple(keyNode(a), RDFS.subClassOf, keyNode(b)) })
-      out = out.unionByName(scTriples)
-    }
-    out.distinct()
+    val schema = TriplesDF.collectTriples(df.filter(col("p").isin(schemaPreds: _*)))
+    if (schema.isEmpty) df
+    else derive(spark, df, schema).foldLeft(df)(_ unionByName _).distinct()
   }
 
-  /** Build a term struct column from a term-key string column (keys here are
-    * only IRIs/BNodes from the collected schema). */
-  private[shacl] def termKeyToTermCol(spark: SparkSession, keyCol: org.apache.spark.sql.Column) = {
-    import org.apache.spark.sql.functions._
-    when(keyCol.startsWith("_:"),
-      struct(keyCol.substr(lit(3), length(keyCol)).as("v"), lit(1.toByte).as("k"),
-        lit("").as("dt"), lit("").as("lang")))
-      .otherwise(
-        struct(regexp_replace(keyCol, "^<|>$", "").as("v"), lit(0.toByte).as("k"),
-          lit("").as("dt"), lit("").as("lang")))
+  /** The rows the RDFS rules derive from `df` under the schema triples in
+    * `schema` (other triples there are ignored), one frame per rule; they
+    * may repeat rows of `df` and of each other. */
+  def derive(spark: SparkSession, df: DataFrame, schema: Seq[Triple]): Seq[DataFrame] = {
+    import spark.implicits._
+    // classes and properties are IRIs or blank nodes, never literals
+    def pairs(pred: Iri): Seq[(Node, Node)] = schema.collect {
+      case Triple(s, p, o) if p == pred && !s.isInstanceOf[Lit] && !o.isInstanceOf[Lit] => (s, o) }
+    val sc = transitive(pairs(RDFS.subClassOf))
+    // only IRI properties can appear in predicate position
+    val sp = transitive(pairs(RDFS.subPropertyOf)).collect { case (Iri(a), Iri(b)) => (a, b) }
+    def typing(pred: Iri) = pairs(pred).collect { case (Iri(p), c) => (p, c.key) }
+    val dom = typing(RDFS.domain)
+    val rng = typing(RDFS.range)
+
+    val parts = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    def all = parts.foldLeft(df)(_ unionByName _)
+    // rdfs7: subPropertyOf propagation
+    if (sp.nonEmpty)
+      parts += df.join(broadcast(sp.toDF("_sub", "_sup")), $"p" === $"_sub")
+        .select($"s", $"_sup".as("p"), $"o")
+    // rdfs2/3: domain/range type derivation (range skips literal objects)
+    val withSuper = all
+    if (dom.nonEmpty)
+      parts += withSuper.join(broadcast(dom.toDF("_dp", "_dc")), $"p" === $"_dp")
+        .select($"s", lit(RDF.ty.value).as("p"), keyTerm($"_dc").as("o"))
+    if (rng.nonEmpty)
+      parts += withSuper.join(broadcast(rng.toDF("_rp", "_rc")), $"p" === $"_rp")
+        .filter($"o"("k") =!= 2)
+        .select($"o".as("s"), lit(RDF.ty.value).as("p"), keyTerm($"_rc").as("o"))
+    if (sc.nonEmpty) {
+      // rdfs9: type propagation up the class hierarchy
+      val scDF = sc.map { case (a, b) => (a.key, b.key) }.toDF("_csub", "_csup")
+      parts += all.filter($"p" === RDF.ty.value)
+        .join(broadcast(scDF), termKey($"o") === $"_csub")
+        .select($"s", lit(RDF.ty.value).as("p"), keyTerm($"_csup").as("o"))
+      // rdfs11: materialized transitive subClassOf triples
+      parts += TriplesDF.fromTriples(spark,
+        sc.map { case (a, b) => Triple(a, RDFS.subClassOf, b) })
+    }
+    parts.toSeq
   }
 }
 
 /** OWL-RL-lite closure (inference='owlrl' / 'both',
   * /root/reference/pyshacl/run_type.py:21-85). The reference delegates to
   * the owlrl library's full materialization; here the instance-affecting
-  * core of OWL-RL runs as DataFrame rules on top of the RDFS closure:
+  * core of OWL-RL runs as DataFrame rules together with the RDFS rules:
   *
   *   prp-inv    p owl:inverseOf q + (s,p,o)          -> (o,q,s) (and sym.)
   *   prp-symp   p a owl:SymmetricProperty + (s,p,o)  -> (o,p,s)
-  *   prp-trp    p a owl:TransitiveProperty (fixpoint over instance data)
+  *   prp-trp    p a owl:TransitiveProperty + (x,p,y),(y,p,z) -> (x,p,z)
   *   cax-eqc    a owl:equivalentClass b              -> mutual subclassing
   *   prp-eqp    p owl:equivalentProperty q           -> mutual subproperty
-  *   prp-spo2   p owl:propertyChainAxiom (p1..pn)    -> chain join (fixpoint)
+  *   prp-spo2   p owl:propertyChainAxiom (p1..pn)    -> chain join
   *   prp-fp/ifp (Inverse)FunctionalProperty          -> derived owl:sameAs
   *   cls-svf1   someValuesFrom + (x,p,y),(y,a,C)     -> (x,a,R)
   *   cls-avf    allValuesFrom + (x,a,R),(x,p,y)      -> (y,a,C)
@@ -127,14 +107,19 @@ object RdfsInference {
   *   cls-maxc2  maxCardinality/cardinality 1            -> values pairwise sameAs
   *   cls-maxqc3/4  maxQualifiedCardinality 1 (+onClass) -> qualified sameAs
   *
-  * The classification/chain/functional/cardinality rules run in one bounded
-  * fixpoint (they feed each other), and {classify -> sameAs-replicate}
-  * iterates to an OUTER fixpoint so replicated triples re-fire chains and
-  * classification. Restriction and chain schema is collected driver-side
-  * (schema-scale); instance work is joins. The "false" rules that cannot
-  * materialize as triples surface through [[inconsistencies]] as a
-  * distributed diagnostics frame (the reference's owlrl library raises on
-  * them, including ill-typed literals via dt-not-type).
+  * Every rule runs in one fixpoint loop, capped at [[MaxRounds]] rounds. A
+  * round collects the schema once (driver-scale), derives from the whole
+  * current graph with every rule and absorbs the new rows
+  * ([[Closure.absorb]]); then eq-rep replicates onto the sameAs aliases,
+  * in the first round and after any round that added rows. prp-trp joins
+  * the round's edges with themselves, so the reached distance doubles each
+  * round. The loop ends at the first round that adds nothing, so a rule
+  * whose input another rule derives fires in a later round, whatever the
+  * order; a round past the cap that still adds rows throws. The "false"
+  * rules that cannot materialize as triples surface through
+  * [[inconsistencies]] as a distributed diagnostics frame (the reference's
+  * owlrl library raises on them, including ill-typed literals via
+  * dt-not-type).
   */
 object OwlRlInference {
   private val owlNs = "http://www.w3.org/2002/07/owl#"
@@ -144,121 +129,23 @@ object OwlRlInference {
     * distributed (ConnectedComponents) instead of a driver BFS. */
   val DriverSameAsLimit = 100000
 
-  /** Cap of the prp-trp closure (in steps) and of the classification
-    * fixpoint (in rounds). Both converge long before it on real
-    * ontologies; hitting it means the closure is incomplete, which must
-    * not pass silently as a conformance verdict. */
+  /** Cap of the fixpoint, in rounds. Real ontologies converge long before
+    * it (an n-link transitive chain closes in about log2(n) rounds);
+    * hitting it means the closure is incomplete, which must not pass
+    * silently as a conformance verdict. */
   val MaxRounds = 50
 
-  /** Cap of the outer {classify → eq-rep} fixpoint, in rounds after the
-    * first pass; each round costs a classification fixpoint and a sameAs
-    * replication of the whole graph. */
-  val MaxOuterRounds = 10
+  /** Everything a round's rules read from the schema, in one collect. */
+  private val schemaPreds = RdfsInference.schemaPreds ++ Seq("inverseOf",
+    "equivalentClass", "equivalentProperty", "propertyChainAxiom", "onProperty",
+    "someValuesFrom", "allValuesFrom", "hasValue", "oneOf", "onClass", "maxCardinality",
+    "maxQualifiedCardinality", "cardinality", "qualifiedCardinality").map(O)
+  private val schemaTypes = Seq("SymmetricProperty", "TransitiveProperty",
+    "FunctionalProperty", "InverseFunctionalProperty").map(O)
 
-  private def capExceeded(what: String, cap: Int): Nothing =
-    throw new ReportableError(
-      s"$what did not converge within $cap rounds; the closure would be incomplete.")
-
-  def expand(spark: SparkSession, df0: DataFrame): DataFrame = {
+  def expand(spark: SparkSession, df: DataFrame): DataFrame = {
     import spark.implicits._
-    // schema harvest (small): inverseOf / equivalentClass / equivalentProperty
-    // / symmetric+transitive property declarations
-    val schemaPreds = Seq(O("inverseOf"), O("equivalentClass"), O("equivalentProperty"))
-    val schema = df0.filter($"p".isin(schemaPreds: _*) ||
-        ($"p" === RDF.ty.value && $"o"("k") === 0 &&
-          $"o"("v").isin(O("SymmetricProperty"), O("TransitiveProperty"))))
-      .select($"p", termKey($"s").as("sk"), $"o"("v").as("ov"), termKey($"o").as("ok"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSeq
-
-    def iriOf(k: String): Option[String] =
-      if (k.startsWith("<")) Some(k.drop(1).dropRight(1)) else None
-
-    val inv = schema.collect { case (p, sk, ov, _) if p == O("inverseOf") =>
-      iriOf(sk).map(s => (s, ov)) }.flatten
-    val eqp = schema.collect { case (p, sk, ov, _) if p == O("equivalentProperty") =>
-      iriOf(sk).map(s => (s, ov)) }.flatten
-    val eqc = schema.collect { case (p, sk, _, ok) if p == O("equivalentClass") => (sk, ok) }
-    val sym = schema.collect { case (p, sk, ov, _)
-      if p == RDF.ty.value && ov == O("SymmetricProperty") => iriOf(sk) }.flatten
-    val trans = schema.collect { case (p, sk, ov, _)
-      if p == RDF.ty.value && ov == O("TransitiveProperty") => iriOf(sk) }.flatten
-
-    // equivalences become extra RDFS schema triples, then the RDFS closure
-    // runs once over the union
-    val extraSchema = eqc.flatMap { case (a, b) =>
-      def n(k: String): Node = if (k.startsWith("_:")) BNode(k.drop(2)) else Iri(k.drop(1).dropRight(1))
-      Seq(Triple(n(a), RDFS.subClassOf, n(b)), Triple(n(b), RDFS.subClassOf, n(a)))
-    } ++ eqp.flatMap { case (a, b) =>
-      Seq(Triple(Iri(a), RDFS.subPropertyOf, Iri(b)), Triple(Iri(b), RDFS.subPropertyOf, Iri(a)))
-    }
-    var out =
-      if (extraSchema.isEmpty) df0
-      else df0.unionByName(TriplesDF.fromTriples(spark, extraSchema))
-
-    // prp-inv: both directions of each inverse pair
-    val invPairs = (inv ++ inv.map(x => (x._2, x._1))).distinct
-    if (invPairs.nonEmpty) {
-      val invDF = invPairs.toDF("_ip", "_iq")
-      out = out.unionByName(
-        out.join(broadcast(invDF), out("p") === $"_ip")
-          .select($"o".as("s"), $"_iq".as("p"), $"s".as("o")))
-    }
-    // prp-symp
-    if (sym.nonEmpty)
-      out = out.unionByName(
-        out.filter($"p".isin(sym: _*)).select($"o".as("s"), $"p", $"s".as("o")))
-    out = out.distinct().localCheckpoint()
-
-    // prp-trp: per transitive property, the closure kernel over (s, o)
-    // pairs. A step joins the frontier with the closure reached so far, not
-    // with the base edges, so the reached distance grows geometrically (a
-    // 60-link chain closes in 12 steps of the 50 allowed).
-    for (tp <- trans) {
-      val edges = out.filter($"p" === tp).select($"s", $"o").distinct()
-      val closed = Closure(edges, MaxRounds, s"owl:TransitiveProperty closure of <$tp>") {
-        (frontier, reached) =>
-          frontier.select($"s".as("_fs"), $"o".as("_fo"))
-            .join(reached.select($"s".as("_rs"), $"o".as("_ro")), $"_fo" === $"_rs")
-            .select($"_fs".as("s"), $"_ro".as("o")).distinct()
-      }
-      out = out.unionByName(closed.select($"s", lit(tp).as("p"), $"o")).distinct()
-    }
-
-    // ---- restriction / chain / functional-property schema (driver-scale)
-    val extTriples = TriplesDF.collectTriples(out.filter(
-      $"p".isin(O("propertyChainAxiom"), O("onProperty"), O("someValuesFrom"),
-        O("allValuesFrom"), O("hasValue"), O("oneOf"), O("onClass"),
-        O("maxCardinality"), O("maxQualifiedCardinality"), O("cardinality"),
-        O("qualifiedCardinality")) ||
-        ($"p" === RDF.ty.value && $"o"("k") === 0 &&
-          $"o"("v").isin(O("FunctionalProperty"), O("InverseFunctionalProperty")))))
-    val onProp: Map[Node, String] = extTriples.collect {
-      case Triple(s, p, Iri(o)) if p.value == O("onProperty") => s -> o }.toMap
-    val svf = extTriples.collect {
-      case Triple(s, p, o) if p.value == O("someValuesFrom") => (s, o) }
-    val avf = extTriples.collect {
-      case Triple(s, p, o) if p.value == O("allValuesFrom") => (s, o) }
-    val hv = extTriples.collect {
-      case Triple(s, p, o) if p.value == O("hasValue") => (s, o) }
-    val fps = extTriples.collect {
-      case Triple(Iri(pv), p, Iri(t)) if p == RDF.ty && t == O("FunctionalProperty") => pv }
-    val ifps = extTriples.collect {
-      case Triple(Iri(pv), p, Iri(t)) if p == RDF.ty && t == O("InverseFunctionalProperty") => pv }
-    val onClass: Map[Node, Node] = extTriples.collect {
-      case Triple(s, p, o) if p.value == O("onClass") => s -> o }.toMap
-    // cls-maxc2 / cls-maxqc3/4: only the cardinality-1 restrictions derive
-    // sameAs between the values of the restricted property on typed
-    // subjects. (owl:cardinality 1 implies maxCardinality 1.)
-    def card1(pred: String): Seq[Node] = extTriples.collect {
-      case Triple(s, p, o: Lit) if p.value == O(pred) &&
-        o.lex.trim.toIntOption.contains(1) => s }
-    val maxC1 = (card1("maxCardinality") ++ card1("cardinality")).distinct
-    val maxQC1 = (card1("maxQualifiedCardinality") ++ card1("qualifiedCardinality")).distinct
-    val chainHeads = extTriples.collect {
-      case Triple(Iri(pv), p, h) if p.value == O("propertyChainAxiom") => (pv, h) }
-    val oneOfHeads = extTriples.collect {
-      case Triple(cls, p, h) if p.value == O("oneOf") => (cls, h) }
+    var out = df.distinct().localCheckpoint()
 
     // resolve RDF lists level-wise: one job per list depth, not per cell
     def resolveLists(heads: Seq[Node]): Map[Node, List[Node]] = {
@@ -289,119 +176,154 @@ object OwlRlInference {
         h -> items.toList
       }.toMap
     }
-    val lists = resolveLists(chainHeads.map(_._2) ++ oneOfHeads.map(_._2))
-    val chains = chainHeads.map { case (pv, h) => (pv, lists.getOrElse(h, Nil)
-      .collect { case Iri(v) => v }) }.filter(_._2.size >= 2)
-    // cls-oo: one-shot enumeration classification
-    val ooTriples = oneOfHeads.flatMap { case (cls, h) =>
-      lists.getOrElse(h, Nil).map(n => Triple(n, RDF.ty, cls)) }
-    if (ooTriples.nonEmpty)
-      out = out.unionByName(TriplesDF.fromTriples(spark, ooTriples)).distinct()
 
-    // bounded fixpoint: classification, chains and functional-property
-    // sameAs feed each other (owlrl materializes to fixpoint)
-    val hasRules = svf.nonEmpty || avf.nonEmpty || hv.nonEmpty || chains.nonEmpty ||
-      fps.nonEmpty || ifps.nonEmpty || maxC1.nonEmpty || maxQC1.nonEmpty
+    // one round's rule step: every rule but eq-rep, each over the whole
+    // current graph, under the schema collected from it
+    def rules(): Seq[DataFrame] = {
+      val schema = TriplesDF.collectTriples(out.filter($"p".isin(schemaPreds: _*) ||
+        ($"p" === RDF.ty.value && $"o"("k") === 0 && $"o"("v").isin(schemaTypes: _*))))
+      def pairs(pred: String): Seq[(Node, Node)] = schema.collect {
+        case Triple(s, p, o) if p.value == pred => (s, o) }
+      def iriPairs(pred: String) = pairs(pred).collect { case (Iri(a), Iri(b)) => (a, b) }
+      def declared(t: String) = schema.collect {
+        case Triple(Iri(pv), p, Iri(c)) if p == RDF.ty && c == t => pv }
+      val inv = iriPairs(O("inverseOf"))
+      val sym = declared(O("SymmetricProperty"))
+      val trans = declared(O("TransitiveProperty"))
+      val fps = declared(O("FunctionalProperty"))
+      val ifps = declared(O("InverseFunctionalProperty"))
+      val onProp: Map[Node, String] = pairs(O("onProperty")).collect { case (s, Iri(o)) => s -> o }.toMap
+      val svf = pairs(O("someValuesFrom"))
+      val avf = pairs(O("allValuesFrom"))
+      val hv = pairs(O("hasValue"))
+      val onClass: Map[Node, Node] = pairs(O("onClass")).toMap
+      // cls-maxc2 / cls-maxqc3/4: only the cardinality-1 restrictions derive
+      // sameAs between the values of the restricted property on typed
+      // subjects. (owl:cardinality 1 implies maxCardinality 1.)
+      def card1(pred: String): Seq[Node] = pairs(O(pred)).collect {
+        case (s, o: Lit) if o.lex.trim.toIntOption.contains(1) => s }
+      val maxC1 = (card1("maxCardinality") ++ card1("cardinality")).distinct
+      val maxQC1 = (card1("maxQualifiedCardinality") ++ card1("qualifiedCardinality")).distinct
+      val chainHeads = pairs(O("propertyChainAxiom")).collect { case (Iri(pv), h) => (pv, h) }
+      val oneOfHeads = pairs(O("oneOf"))
+      val lists = resolveLists(chainHeads.map(_._2) ++ oneOfHeads.map(_._2))
+      val chains = chainHeads.map { case (pv, h) => (pv, lists.getOrElse(h, Nil)
+        .collect { case Iri(v) => v }) }.filter(_._2.size >= 2)
 
-    // each returns the number of rows it added to `out`
-    def classifyFixpoint(): Long = if (!hasRules) 0L else {
-      var added = 0L
-      var grew = true
-      var round = 0
-      while (grew && round < MaxRounds) {
-        round += 1
-        val typeC = lit(RDF.ty.value).as("p")
-        val derived = scala.collection.mutable.ListBuffer.empty[DataFrame]
-        for ((r, c) <- svf; p <- onProp.get(r)) {
-          if (c == Iri(O("Thing")))
-            // cls-svf2: someValuesFrom owl:Thing — ANY value qualifies
-            derived += out.filter($"p" === p).select($"s", typeC, termLit(r).as("o"))
-          else {
-            val typed = out.filter($"p" === RDF.ty.value && termKey($"o") === c.key)
-              .select(termKey($"s").as("_tk")).distinct()
-            derived += out.filter($"p" === p)
-              .join(typed, termKey($"o") === $"_tk", "left_semi")
-              .select($"s", typeC, termLit(r).as("o"))
-          }
-        }
-        // cls-maxc2: maxCardinality 1 on typed subjects — all values of p
-        // collapse into one individual via sameAs (literal values excluded,
-        // like prp-fp)
-        for (r <- maxC1; p <- onProp.get(r)) {
-          val typed = out.filter($"p" === RDF.ty.value && termKey($"o") === r.key)
-            .select(termKey($"s").as("_tk")).distinct()
-          val v1 = out.filter($"p" === p && $"o"("k") =!= 2)
-            .join(typed, termKey($"s") === $"_tk", "left_semi")
-            .select(termKey($"s").as("_k"), $"o").distinct()
-          val v2 = v1.select($"_k".as("_k2"), $"o".as("_o2"))
-          derived += v1.join(v2, $"_k" === $"_k2" && termKey($"o") < termKey($"_o2"))
-            .select($"o".as("s"), lit(O("sameAs")).as("p"), $"_o2".as("o"))
-        }
-        // cls-maxqc3/4: qualified cardinality 1 — values additionally
-        // filtered by onClass (owl:Thing or absent = unqualified, maxqc4)
-        for (r <- maxQC1; p <- onProp.get(r)) {
-          val typed = out.filter($"p" === RDF.ty.value && termKey($"o") === r.key)
-            .select(termKey($"s").as("_tk")).distinct()
-          var vals = out.filter($"p" === p && $"o"("k") =!= 2)
-            .join(typed, termKey($"s") === $"_tk", "left_semi")
-          onClass.get(r) match {
-            case Some(c) if c != Iri(O("Thing")) =>
-              val typedVal = out.filter($"p" === RDF.ty.value && termKey($"o") === c.key)
-                .select(termKey($"s").as("_vk")).distinct()
-              vals = vals.join(typedVal, termKey($"o") === $"_vk", "left_semi")
-            case _ =>
-          }
-          val v1 = vals.select(termKey($"s").as("_k"), $"o").distinct()
-          val v2 = v1.select($"_k".as("_k2"), $"o".as("_o2"))
-          derived += v1.join(v2, $"_k" === $"_k2" && termKey($"o") < termKey($"_o2"))
-            .select($"o".as("s"), lit(O("sameAs")).as("p"), $"_o2".as("o"))
-        }
-        for ((r, c) <- avf; p <- onProp.get(r)) {
-          val typed = out.filter($"p" === RDF.ty.value && termKey($"o") === r.key)
-            .select(termKey($"s").as("_tk")).distinct()
-          derived += out.filter($"p" === p && $"o"("k") =!= 2)
-            .join(typed, termKey($"s") === $"_tk", "left_semi")
-            .select($"o".as("s"), typeC, termLit(c).as("o"))
-        }
-        for ((r, v) <- hv; p <- onProp.get(r)) {
-          val typed = out.filter($"p" === RDF.ty.value && termKey($"o") === r.key)
-          derived += typed.select($"s", lit(p).as("p"), termLit(v).as("o")) // cls-hv1
-          derived += out.filter($"p" === p && termKey($"o") === v.key)
-            .select($"s", typeC, termLit(r).as("o")) // cls-hv2
-        }
-        for ((p, parts) <- chains) {
-          var acc = out.filter($"p" === parts.head).select($"s", $"o")
-          for (pi <- parts.tail) {
-            val step = out.filter($"p" === pi)
-              .select(termKey($"s").as("_jk"), $"o".as("_jo"))
-            acc = acc.join(step, termKey($"o") === $"_jk").select($"s", $"_jo".as("o"))
-          }
-          derived += acc.select($"s", lit(p).as("p"), $"o")
-        }
-        for (p <- fps) {
-          val tp = out.filter($"p" === p && $"o"("k") =!= 2)
-            .select(termKey($"s").as("_k"), $"o").distinct()
-          val tp2 = tp.select($"_k".as("_k2"), $"o".as("_o2"))
-          derived += tp.join(tp2, $"_k" === $"_k2" && termKey($"o") < termKey($"_o2"))
-            .select($"o".as("s"), lit(O("sameAs")).as("p"), $"_o2".as("o"))
-        }
-        for (p <- ifps) {
-          val tp = out.filter($"p" === p)
-            .select(termKey($"o").as("_k"), $"s").distinct()
-          val tp2 = tp.select($"_k".as("_k2"), $"s".as("_s2"))
-          derived += tp.join(tp2, $"_k" === $"_k2" && termKey($"s") < termKey($"_s2"))
-            .select($"s", lit(O("sameAs")).as("p"), $"_s2".as("o"))
-        }
-        if (derived.isEmpty) grew = false
+      val derived = scala.collection.mutable.ListBuffer.empty[DataFrame]
+      // cax-eqc / prp-eqp: equivalences are mutual subclassing / subproperty
+      // triples, which the RDFS rules of this round already read
+      val eqSchema = pairs(O("equivalentClass")).flatMap { case (a, b) =>
+          Seq(Triple(a, RDFS.subClassOf, b), Triple(b, RDFS.subClassOf, a)) } ++
+        iriPairs(O("equivalentProperty")).flatMap { case (a, b) =>
+          Seq(Triple(Iri(a), RDFS.subPropertyOf, Iri(b)), Triple(Iri(b), RDFS.subPropertyOf, Iri(a))) }
+      if (eqSchema.nonEmpty) derived += TriplesDF.fromTriples(spark, eqSchema)
+      derived ++= RdfsInference.derive(spark, out, schema ++ eqSchema)
+      // prp-inv: both directions of each inverse pair
+      val invPairs = (inv ++ inv.map(_.swap)).distinct
+      if (invPairs.nonEmpty)
+        derived += out.join(broadcast(invPairs.toDF("_ip", "_iq")), $"p" === $"_ip")
+          .select($"o".as("s"), $"_iq".as("p"), $"s".as("o"))
+      // prp-symp
+      if (sym.nonEmpty)
+        derived += out.filter($"p".isin(sym: _*)).select($"o".as("s"), $"p", $"s".as("o"))
+      // prp-trp: the edges joined with themselves, not with the base edges,
+      // so the reached distance doubles each round (a 60-link chain closes
+      // in 6 rounds)
+      for (tp <- trans) {
+        val edges = out.filter($"p" === tp)
+        derived += edges.select($"s", $"o".as("_m"))
+          .join(edges.select($"s".as("_m"), $"o"), "_m")
+          .select($"s", lit(tp).as("p"), $"o")
+      }
+      // cls-oo: enumeration classification
+      val ooTriples = oneOfHeads.flatMap { case (cls, h) =>
+        lists.getOrElse(h, Nil).map(n => Triple(n, RDF.ty, cls)) }
+      if (ooTriples.nonEmpty) derived += TriplesDF.fromTriples(spark, ooTriples)
+
+      // classification, chains and functional-property sameAs
+      val typeC = lit(RDF.ty.value).as("p")
+      for ((r, c) <- svf; p <- onProp.get(r)) {
+        if (c == Iri(O("Thing")))
+          // cls-svf2: someValuesFrom owl:Thing — ANY value qualifies
+          derived += out.filter($"p" === p).select($"s", typeC, termLit(r).as("o"))
         else {
-          val (grown, n) = Closure.absorb(out, derived.reduce(_ unionByName _))
-          out = grown
-          added += n
-          grew = n > 0
+          val typed = out.filter($"p" === RDF.ty.value && termKey($"o") === c.key)
+            .select(termKey($"s").as("_tk")).distinct()
+          derived += out.filter($"p" === p)
+            .join(typed, termKey($"o") === $"_tk", "left_semi")
+            .select($"s", typeC, termLit(r).as("o"))
         }
       }
-      if (grew) capExceeded("OWL-RL classification fixpoint", MaxRounds)
-      added
+      // cls-maxc2: maxCardinality 1 on typed subjects — all values of p
+      // collapse into one individual via sameAs (literal values excluded,
+      // like prp-fp)
+      for (r <- maxC1; p <- onProp.get(r)) {
+        val typed = out.filter($"p" === RDF.ty.value && termKey($"o") === r.key)
+          .select(termKey($"s").as("_tk")).distinct()
+        val v1 = out.filter($"p" === p && $"o"("k") =!= 2)
+          .join(typed, termKey($"s") === $"_tk", "left_semi")
+          .select(termKey($"s").as("_k"), $"o").distinct()
+        val v2 = v1.select($"_k".as("_k2"), $"o".as("_o2"))
+        derived += v1.join(v2, $"_k" === $"_k2" && termKey($"o") < termKey($"_o2"))
+          .select($"o".as("s"), lit(O("sameAs")).as("p"), $"_o2".as("o"))
+      }
+      // cls-maxqc3/4: qualified cardinality 1 — values additionally
+      // filtered by onClass (owl:Thing or absent = unqualified, maxqc4)
+      for (r <- maxQC1; p <- onProp.get(r)) {
+        val typed = out.filter($"p" === RDF.ty.value && termKey($"o") === r.key)
+          .select(termKey($"s").as("_tk")).distinct()
+        var vals = out.filter($"p" === p && $"o"("k") =!= 2)
+          .join(typed, termKey($"s") === $"_tk", "left_semi")
+        onClass.get(r) match {
+          case Some(c) if c != Iri(O("Thing")) =>
+            val typedVal = out.filter($"p" === RDF.ty.value && termKey($"o") === c.key)
+              .select(termKey($"s").as("_vk")).distinct()
+            vals = vals.join(typedVal, termKey($"o") === $"_vk", "left_semi")
+          case _ =>
+        }
+        val v1 = vals.select(termKey($"s").as("_k"), $"o").distinct()
+        val v2 = v1.select($"_k".as("_k2"), $"o".as("_o2"))
+        derived += v1.join(v2, $"_k" === $"_k2" && termKey($"o") < termKey($"_o2"))
+          .select($"o".as("s"), lit(O("sameAs")).as("p"), $"_o2".as("o"))
+      }
+      for ((r, c) <- avf; p <- onProp.get(r)) {
+        val typed = out.filter($"p" === RDF.ty.value && termKey($"o") === r.key)
+          .select(termKey($"s").as("_tk")).distinct()
+        derived += out.filter($"p" === p && $"o"("k") =!= 2)
+          .join(typed, termKey($"s") === $"_tk", "left_semi")
+          .select($"o".as("s"), typeC, termLit(c).as("o"))
+      }
+      for ((r, v) <- hv; p <- onProp.get(r)) {
+        val typed = out.filter($"p" === RDF.ty.value && termKey($"o") === r.key)
+        derived += typed.select($"s", lit(p).as("p"), termLit(v).as("o")) // cls-hv1
+        derived += out.filter($"p" === p && termKey($"o") === v.key)
+          .select($"s", typeC, termLit(r).as("o")) // cls-hv2
+      }
+      for ((p, parts) <- chains) {
+        var acc = out.filter($"p" === parts.head).select($"s", $"o")
+        for (pi <- parts.tail) {
+          val step = out.filter($"p" === pi)
+            .select(termKey($"s").as("_jk"), $"o".as("_jo"))
+          acc = acc.join(step, termKey($"o") === $"_jk").select($"s", $"_jo".as("o"))
+        }
+        derived += acc.select($"s", lit(p).as("p"), $"o")
+      }
+      for (p <- fps) {
+        val tp = out.filter($"p" === p && $"o"("k") =!= 2)
+          .select(termKey($"s").as("_k"), $"o").distinct()
+        val tp2 = tp.select($"_k".as("_k2"), $"o".as("_o2"))
+        derived += tp.join(tp2, $"_k" === $"_k2" && termKey($"o") < termKey($"_o2"))
+          .select($"o".as("s"), lit(O("sameAs")).as("p"), $"_o2".as("o"))
+      }
+      for (p <- ifps) {
+        val tp = out.filter($"p" === p)
+          .select(termKey($"o").as("_k"), $"s").distinct()
+        val tp2 = tp.select($"_k".as("_k2"), $"s".as("_s2"))
+        derived += tp.join(tp2, $"_k" === $"_k2" && termKey($"s") < termKey($"_s2"))
+          .select($"s", lit(O("sameAs")).as("p"), $"_s2".as("o"))
+      }
+      derived.toSeq
     }
 
     // eq-rep: owl:sameAs symmetric-transitive closure, then replicate every
@@ -414,72 +336,73 @@ object OwlRlInference {
     // past DriverSameAsLimit edges, components run distributed through the
     // ConnectedComponents operator and the pair table stays a join.
     def eqRep(): Long = {
-    val sameAsEdges = out.filter($"p" === O("sameAs"))
-      .select(termKey($"s").as("_src"), termKey($"o").as("_dst"))
-      .filter($"_src" =!= $"_dst").distinct()
-    val probe = sameAsEdges.limit(DriverSameAsLimit + 1).count()
-    if (probe == 0) 0L else {
-      val pairsDF: DataFrame =
-        if (probe <= DriverSameAsLimit) {
-          val sameAs = sameAsEdges.collect().map(r => (r.getString(0), r.getString(1))).toSeq
-          val undirected = (sameAs ++ sameAs.map(x => (x._2, x._1))).distinct
-          val adj = undirected.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
-          val comp = scala.collection.mutable.Map.empty[String, Set[String]]
-          for (start <- adj.keys if !comp.contains(start)) {
-            val cluster = Closure.reach(Seq(start), adj.getOrElse(_: String, Nil))
-            cluster.foreach(m => comp(m) = cluster)
+      val sameAsEdges = out.filter($"p" === O("sameAs"))
+        .select(termKey($"s").as("_src"), termKey($"o").as("_dst"))
+        .filter($"_src" =!= $"_dst").distinct()
+      val probe = sameAsEdges.limit(DriverSameAsLimit + 1).count()
+      if (probe == 0) 0L else {
+        val pairsDF: DataFrame =
+          if (probe <= DriverSameAsLimit) {
+            val sameAs = sameAsEdges.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+            val undirected = (sameAs ++ sameAs.map(x => (x._2, x._1))).distinct
+            val adj = undirected.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
+            val comp = scala.collection.mutable.Map.empty[String, Set[String]]
+            for (start <- adj.keys if !comp.contains(start)) {
+              val cluster = Closure.reach(Seq(start), adj.getOrElse(_: String, Nil))
+              cluster.foreach(m => comp(m) = cluster)
+            }
+            broadcast(comp.toSeq.flatMap { case (m, cl) => cl.map(a => (m, a)) }
+              .toDF("_from", "_to"))
+          } else {
+            // node ids via xxhash64 of the term key (collision odds negligible
+            // at any realistic identity-graph size); map back through the key
+            // table after the star-contraction converges
+            val nodes = sameAsEdges.select($"_src".as("_key"))
+              .unionByName(sameAsEdges.select($"_dst".as("_key"))).distinct()
+              .withColumn("id", xxhash64($"_key"))
+            val cc = graft.kg.ConnectedComponents.run(spark,
+              sameAsEdges.select(xxhash64($"_src").as("src"), xxhash64($"_dst").as("dst")))
+            val assign = nodes.join(cc, "id").select($"_key", $"component")
+            assign.join(assign.select($"_key".as("_to"), $"component"), "component")
+              .select($"_key".as("_from"), $"_to")
           }
-          broadcast(comp.toSeq.flatMap { case (m, cl) => cl.map(a => (m, a)) }
-            .toDF("_from", "_to"))
-        } else {
-          // node ids via xxhash64 of the term key (collision odds negligible
-          // at any realistic identity-graph size); map back through the key
-          // table after the star-contraction converges
-          val nodes = sameAsEdges.select($"_src".as("_key"))
-            .unionByName(sameAsEdges.select($"_dst".as("_key"))).distinct()
-            .withColumn("id", xxhash64($"_key"))
-          val cc = graft.kg.ConnectedComponents.run(spark,
-            sameAsEdges.select(xxhash64($"_src").as("src"), xxhash64($"_dst").as("dst")))
-          val assign = nodes.join(cc, "id").select($"_key", $"component")
-          assign.join(assign.select($"_key".as("_to"), $"component"), "component")
-            .select($"_key".as("_from"), $"_to")
-        }
-      val subDF = pairsDF.select($"_from".as("_sfrom"), $"_to".as("_sto"))
-      val objDF = pairsDF.select($"_from".as("_ofrom"), $"_to".as("_oto"))
-      // only rows with an aliased term can be new: a row with neither
-      // alias equals its original
-      val (grown, n) = Closure.absorb(out, out
-        .join(subDF, termKey($"s") === $"_sfrom", "left")
-        .join(objDF, termKey($"o") === $"_ofrom", "left")
-        .filter($"_sto".isNotNull || $"_oto".isNotNull)
-        .select(
-          when($"_sto".isNull, $"s")
-            .otherwise(RdfsInference.termKeyToTermCol(spark, $"_sto")).as("s"),
-          $"p",
-          when($"_oto".isNull, $"o")
-            .otherwise(RdfsInference.termKeyToTermCol(spark, $"_oto")).as("o")))
-      out = grown
-      n
-    }
+        val subDF = pairsDF.select($"_from".as("_sfrom"), $"_to".as("_sto"))
+        val objDF = pairsDF.select($"_from".as("_ofrom"), $"_to".as("_oto"))
+        // only rows with an aliased term can be new: a row with neither
+        // alias equals its original
+        val (grown, n) = Closure.absorb(out, out
+          .join(subDF, termKey($"s") === $"_sfrom", "left")
+          .join(objDF, termKey($"o") === $"_ofrom", "left")
+          .filter($"_sto".isNotNull || $"_oto".isNotNull)
+          .select(
+            when($"_sto".isNull, $"s").otherwise(keyTerm($"_sto")).as("s"),
+            $"p",
+            when($"_oto".isNull, $"o").otherwise(keyTerm($"_oto")).as("o")))
+        out = grown
+        n
+      }
     }
 
-    // {classify → eq-rep} to OUTER fixpoint: sameAs-replicated triples must
-    // re-fire chains/classification, and fp/ifp over replicated triples can
-    // mint new sameAs pairs (the reference's owlrl library materializes to
-    // the full fixpoint, run_type.py:21-85). Without rules one eq-rep pass
-    // is already complete.
-    var grew = classifyFixpoint() + eqRep() > 0
-    var outer = 0
-    while (hasRules && grew) {
-      outer += 1
-      grew = classifyFixpoint() + eqRep() > 0
+    var round = 0
+    var grew = true
+    while (grew) {
+      round += 1
+      val step = rules()
+      val n1 = if (step.isEmpty) 0L else {
+        val (grown, n) = Closure.absorb(out, step.reduce(_ unionByName _))
+        out = grown
+        n
+      }
+      // eq-rep's alias product is closed under eq-rep for the components it
+      // used, so it runs again only after the other rules added rows
+      val n2 = if (round == 1 || n1 > 0) eqRep() else 0L
+      grew = n1 + n2 > 0
       // the round after the cap only checks that nothing is left
-      if (grew && outer > MaxOuterRounds)
-        capExceeded("OWL-RL {classify → eq-rep} fixpoint", MaxOuterRounds)
+      if (grew && round > MaxRounds)
+        throw new ReportableError(s"OWL-RL fixpoint did not converge within $MaxRounds " +
+          "rounds; the closure would be incomplete.")
     }
-    // RDFS closure over the enriched graph (covers rdfs2/3/5/7/9/11 with
-    // the equivalence-derived schema in place)
-    RdfsInference.expand(spark, out)
+    out
   }
 
   /** OWL-RL INCONSISTENCY detection over a (closed) triples frame — the

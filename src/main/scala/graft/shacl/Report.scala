@@ -19,8 +19,7 @@ import scala.collection.mutable
 object ReportBuilder {
 
   def keyToNode(key: String, shapes: Map[Node, ShapeIR]): Node =
-    if (key.startsWith("_:")) BNode(key.drop(2))
-    else if (key.startsWith("<")) Iri(key.drop(1).dropRight(1))
+    if (key.startsWith("_:") || key.startsWith("<")) Node.fromKey(key)
     else shapes.keys.find(_.key == key).getOrElse(Iri(key))
 
   def build(
@@ -65,12 +64,12 @@ object ReportBuilder {
         v match { case b: BNode => g.addAll(dataCbd(b)); case _ => }
       }
       r.pathKey.foreach { pk =>
-        val pn = if (pk.startsWith("_:")) BNode(pk.drop(2)) else Iri(pk.drop(1).dropRight(1))
+        val pn = Node.fromKey(pk)
         g.add(rn, SH.resultPath, pn)
         pn match { case b: BNode => g.addAll(sg.cbd(b)); case _ => }
       }
       r.constraintKey.foreach { ck =>
-        val cn = if (ck.startsWith("_:")) BNode(ck.drop(2)) else Iri(ck.drop(1).dropRight(1))
+        val cn = Node.fromKey(ck)
         g.add(rn, SH.sourceConstraint, cn)
         cn match { case b: BNode => g.addAll(sg.cbd(b)); case _ => }
       }

@@ -116,11 +116,13 @@ final class SparqlFrame(
     // query per focus node, so a "global" aggregate is per-focus there)
     val g = aggregateStep(q, g0, keep, fillEmpty)
     val projVars = scala.collection.mutable.LinkedHashSet.empty[String]
+    // a projected variable the WHERE never binds is unbound in every row
+    val unbound = q.proj.collect { case PVar(x) if !g.vars.contains(x) => x }.toSet
     var df = g.df
     q.proj.foreach {
       case PStar => projVars ++= g.vars.filterNot(_.startsWith("__"))
       case PVar(x) =>
-        if (!g.vars.contains(x)) df = df.withColumn(x, nullT)
+        if (unbound.contains(x)) df = df.withColumn(x, nullT)
         projVars += x
       case PExpr(e, as) =>
         df = df.withColumn(as, compileT(rewriteAggs(e, g), Sol(df, g.vars, g.maybeNull)))
@@ -200,7 +202,7 @@ final class SparqlFrame(
       collectAggs(e, ags)
       Option.when(ags.exists(a => aggNames.get(a).exists(g.maybeNull.contains)))(as)
     }.flatten.toSet
-    Sol(df, all.toSet, (g.maybeNull ++ aggNullable).intersect(all.toSet))
+    Sol(df, all.toSet, (g.maybeNull ++ aggNullable ++ unbound).intersect(all.toSet))
   }
 
   // ------------------------------------------------------ aggregation

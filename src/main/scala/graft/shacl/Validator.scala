@@ -114,13 +114,7 @@ object Validator {
     val byComp = counts.groupBy(_._1).map { case (c, rows) => c -> rows.map(_._3).sum }
     val allowed = allowedSeverities(opts).map(_.value)
     val blocking = bySev.filterNot { case (sev, _) => allowed.contains(sev) }.values.sum
-    val sampleRows = viol.limit(sampleSize).collect().toSeq
-      .map(r => ResultRow(
-        focus = TriplesDF.nodeOf(r.getStruct(0)),
-        value = Option(r.getStruct(1)).map(TriplesDF.nodeOf),
-        pathKey = Option(r.getString(2)),
-        component = Iri(r.getString(3)),
-        shapeKey = r.getString(4)))
+    val sampleRows = viol.limit(sampleSize).collect().toSeq.map(ResultRow.of)
     val text = ReportBuilder.text(blocking == 0, sampleRows, shapes, shapesGraph.nsPrefixes) +
       (if (total > sampleRows.size)
          s"... (${total - sampleRows.size} more results not shown; see the violations frame)\n"
@@ -140,11 +134,6 @@ object Validator {
     import org.apache.spark.sql.functions._
     val termType = TriplesDF.termType
     def iriT(v: Column) = struct(v.as("v"), lit(0.toByte).as("k"), lit("").as("dt"), lit("").as("lang"))
-    def keyT(k: Column) = // term key -> term struct (IRI or bnode or literal key)
-      when(k.startsWith("_:"),
-        struct(k.substr(lit(3), length(k)).as("v"), lit(1.toByte).as("k"),
-          lit("").as("dt"), lit("").as("lang")))
-        .otherwise(iriT(regexp_replace(k, "^<|>$", "")))
     val sevMap = shapes.values.map(s => s.id.key -> s.severity.value).toMap
     val sevCol = sevMap.foldLeft(lit(SH.Violation.value)) { case (acc, (k, sev)) =>
       when(col("shape") === k, sev).otherwise(acc)
@@ -164,10 +153,10 @@ object Validator {
     def po(p: Iri, o: Column) = struct(lit(p.value).as("p"), o.as("o"))
     val pairs = concat(
       array(po(RDF.ty, iriT(lit(SH.ValidationResult.value))), po(SH.focusNode, col("f")),
-        po(SH.resultSeverity, iriT(sevCol)), po(SH.sourceShape, keyT(col("shape"))),
+        po(SH.resultSeverity, iriT(sevCol)), po(SH.sourceShape, TriplesDF.keyTerm(col("shape"))),
         po(SH.sourceConstraintComponent, iriT(col("comp"))),
         when(col("v").isNotNull, po(SH.value, col("v"))),
-        when(col("path").isNotNull, po(SH.resultPath, keyT(col("path"))))),
+        when(col("path").isNotNull, po(SH.resultPath, TriplesDF.keyTerm(col("path"))))),
       transform(coalesce(col("msgs"), array().cast(ArrayType(termType))),
         m => po(SH.resultMessage, m)))
     viol.filter(col("prid").isNull).select(rn.as("s"), explode(pairs).as("po"))

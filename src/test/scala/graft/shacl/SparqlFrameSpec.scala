@@ -170,6 +170,15 @@ class SparqlFrameSpec extends AnyFunSuite {
     assert(disjoint.size == 3)
   }
 
+  test("a sub-select projecting a variable its WHERE never binds joins as unbound") {
+    // ?o is unbound in every sub-select row, so it is compatible with the
+    // outer ?o and the join keeps the outer row (SPARQL 18.5 Join)
+    val rows = runOn(s"""@prefix ex: <$ex> .
+      |ex:a ex:p ex:b . ex:c ex:q "z" .""".stripMargin,
+      "SELECT ?s ?o ?z WHERE { ?s ex:p ?o . { SELECT ?o ?z WHERE { ?s2 ex:q ?z } } }")
+    assert(rows == Seq(Map("s" -> Iri(ex + "a"), "o" -> Iri(ex + "b"), "z" -> Lit("z"))))
+  }
+
   test("negated property sets: !ex:p, !(^ex:p), closure over !(...)") {
     val rows = runOn(peopleData,
       "SELECT ?o WHERE { ex:p1 !ex:age ?o . }")
