@@ -43,7 +43,9 @@ object RdfsInference {
 
   /** The rows the RDFS rules derive from `df` under the schema triples in
     * `schema` (other triples there are ignored), one frame per rule; they
-    * may repeat rows of `df` and of each other. */
+    * may repeat rows of `df` and of each other. The schema's own triples
+    * are taken to be in `df` or emitted by the caller: rdfs11 leaves them
+    * out. */
   def derive(spark: SparkSession, df: DataFrame, schema: Seq[Triple]): Seq[DataFrame] = {
     import spark.implicits._
     // classes and properties are IRIs or blank nodes, never literals
@@ -77,9 +79,14 @@ object RdfsInference {
       parts += all.filter($"p" === RDF.ty.value)
         .join(broadcast(scDF), termKey($"o") === $"_csub")
         .select($"s", lit(RDF.ty.value).as("p"), keyTerm($"_csup").as("o"))
-      // rdfs11: materialized transitive subClassOf triples
-      parts += TriplesDF.fromTriples(spark,
-        sc.map { case (a, b) => Triple(a, RDFS.subClassOf, b) })
+      // rdfs11: materialized transitive subClassOf triples, less those the
+      // schema already holds (a later fixpoint round collects the closure
+      // an earlier one materialized)
+      val held = pairs(RDFS.subClassOf).toSet
+      val closure = sc.filterNot(held)
+      if (closure.nonEmpty)
+        parts += TriplesDF.fromTriples(spark,
+          closure.map { case (a, b) => Triple(a, RDFS.subClassOf, b) })
     }
     parts.toSeq
   }
@@ -146,6 +153,7 @@ object OwlRlInference {
   def expand(spark: SparkSession, df: DataFrame): DataFrame = {
     import spark.implicits._
     var out = df.distinct().localCheckpoint()
+    val inputParts = out.rdd.getNumPartitions
 
     // resolve RDF lists level-wise: one job per list depth, not per cell
     def resolveLists(heads: Seq[Node]): Map[Node, List[Node]] = {
@@ -229,7 +237,7 @@ object OwlRlInference {
         derived += out.filter($"p".isin(sym: _*)).select($"o".as("s"), $"p", $"s".as("o"))
       // prp-trp: the edges joined with themselves, not with the base edges,
       // so the reached distance doubles each round (a 60-link chain closes
-      // in 6 rounds)
+      // in 6 growing rounds plus one confirming round)
       for (tp <- trans) {
         val edges = out.filter($"p" === tp)
         derived += edges.select($"s", $"o".as("_m"))
@@ -402,7 +410,10 @@ object OwlRlInference {
         throw new ReportableError(s"OWL-RL fixpoint did not converge within $MaxRounds " +
           "rounds; the closure would be incomplete.")
     }
-    out
+    // each growing round's absorb appends its new rows' partitions: merge
+    // them back to the deduplicated input's count before the validator's
+    // jobs scan the closure
+    if (out.rdd.getNumPartitions > inputParts) out.coalesce(inputParts) else out
   }
 
   /** OWL-RL INCONSISTENCY detection over a (closed) triples frame — the

@@ -148,6 +148,35 @@ class ScaleValidationSpec extends AnyFunSuite {
     atScale.release()
   }
 
+  test("at-scale sample text prints each sh:sparql result's own message") {
+    // the sample rows carry the per-row messages, as the collected path's
+    // rows do: a {$this} message prints substituted, and the text matches
+    // the collected path's report text
+    val ex = "http://ex.org/"
+    val g = TurtleParser.parseGraph(
+      s"""@prefix sh: <http://www.w3.org/ns/shacl#> .
+         |@prefix ex: <$ex> .
+         |ex:a a ex:Person ; ex:age 150 .
+         |ex:b a ex:Person ; ex:age 20 .
+         |ex:S a sh:NodeShape ; sh:targetClass ex:Person ;
+         |  sh:sparql [
+         |    sh:message "{$$this} is too old" ;
+         |    sh:select "SELECT $$this WHERE { $$this <${ex}age> ?a . FILTER (?a > 100) }" ;
+         |  ] ;
+         |  sh:sparql [
+         |    sh:select "SELECT $$this WHERE { $$this <${ex}age> ?a . FILTER (?a < 30) }" ;
+         |  ] .
+         |""".stripMargin, "http://test/")
+    val df = TriplesDF.fromMemGraph(spark, g)
+    val atScale = Validator.validateFrameAtScale(spark, df, g)
+    try {
+      assert(atScale.totalViolations == 2)
+      assert(atScale.sampleText.linesIterator.filter(_.startsWith("\tMessage:")).toList ==
+        List(s"\tMessage: ${ex}a is too old"))
+      assert(atScale.sampleText == Validator.validateFrame(spark, df, g, n => g.cbd(n)).reportText)
+    } finally atScale.release()
+  }
+
   test("at-scale outcome agrees with the collected path on a small graph") {
     val g = TurtleParser.parseGraph(
       """@prefix sh: <http://www.w3.org/ns/shacl#> .
