@@ -85,7 +85,7 @@ final class ValidationEngine(
       trackedCheckpoints.foreach(Closure.free)
       trackedCheckpoints.clear()
     }
-    vioCache.synchronized(vioCache.clear())
+    memo.synchronized(memo.clear())
   }
 
   /** Violation row: focus, value (nullable), result path key (nullable),
@@ -265,7 +265,7 @@ final class ValidationEngine(
   // reference cycle are cacheable — their violations are independent of
   // the recursion stack (an edge can repeat on the stack only on a cycle).
   // ---------------------------------------------------------------------
-  private lazy val cyclicShapeKeys: Set[String] = {
+  private[shacl] lazy val cyclicShapeKeys: Set[String] = {
     import ConstraintIR._
     def refs(s: ShapeIR): List[Node] = s.constraints.flatMap {
       case CNot(l) => l
@@ -283,42 +283,28 @@ final class ValidationEngine(
     }
     val adj: Map[String, List[String]] =
       shapes.values.map(s => s.id.key -> refs(s).map(_.key)).toMap
-    // iterative 3-color DFS; grey-hit => every node on the current stack
-    // segment from that hit is on a cycle
-    val color = scala.collection.mutable.Map.empty[String, Int] // 0 white 1 grey 2 black
-    val onCycle = scala.collection.mutable.Set.empty[String]
-    def dfs(start: String): Unit = {
-      val stack = scala.collection.mutable.Stack[(String, List[String])]()
-      val path = scala.collection.mutable.ArrayBuffer.empty[String]
-      stack.push((start, adj.getOrElse(start, Nil)))
-      color(start) = 1; path += start
-      while (stack.nonEmpty) {
-        val (node, rest) = stack.pop()
-        rest match {
-          case Nil =>
-            color(node) = 2
-            if (path.nonEmpty && path.last == node) path.remove(path.size - 1)
-          case next :: tail =>
-            stack.push((node, tail))
-            color.getOrElse(next, 0) match {
-              case 0 =>
-                color(next) = 1; path += next
-                stack.push((next, adj.getOrElse(next, Nil)))
-              case 1 =>
-                val i = path.indexOf(next)
-                if (i >= 0) onCycle ++= path.drop(i)
-              case _ =>
-            }
-        }
-      }
-    }
-    for (k <- adj.keys if color.getOrElse(k, 0) == 0) dfs(k)
-    onCycle.toSet
+    def succ(k: String): List[String] = adj.getOrElse(k, Nil)
+    // a shape is on a cycle iff it is reachable from its own successors
+    adj.keys.filter(k => Closure.reach(succ(k), succ).contains(k)).toSet
   }
 
-  private val vioCache =
-    scala.collection.mutable.Map.empty[String,
-      List[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]]
+  /** Checkpointed frames by (key, focus plan): sub-shape violations under
+    * ("violations", shape, depth) and value nodes under ("values", path). */
+  private val memo = scala.collection.mutable.Map.empty[Any,
+    List[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]]
+
+  /** The frame memoized under `key` for a focus with `focus`'s result, or
+    * `compute` checkpointed and memoized. */
+  private def memoized(key: Any, focus: DataFrame)(compute: => DataFrame): DataFrame = {
+    val plan = focus.queryExecution.analyzed
+    memo.synchronized(memo.getOrElse(key, Nil).find(_._1.sameResult(plan))) match {
+      case Some((_, cached)) => cached
+      case None =>
+        val computed = trackCp(compute.localCheckpoint())
+        memo.synchronized(memo(key) = (plan, computed) :: memo.getOrElse(key, Nil))
+        computed
+    }
+  }
 
   /** Full violations DF for one shape against a focus DF (col f). */
   def violations(shape: ShapeIR, focus: DataFrame,
@@ -329,30 +315,20 @@ final class ValidationEngine(
     // have fired mid-expansion (depth-limit errors would otherwise depend
     // on shape evaluation order). Entry count stays bounded by
     // shapes × depth buckets for an acyclic shapes graph.
-    val key = s"${shape.id.key}@${stack.length}"
     // memoize sub-shape evaluations only: top-level (stack-empty) plans
     // stay lazy so run() still collects everything in one job.
-    val cacheable = stack.nonEmpty && !cyclicShapeKeys.contains(shape.id.key)
-    if (cacheable) {
-      val plan = focus.queryExecution.analyzed
-      vioCache.synchronized {
-        vioCache.getOrElse(key, Nil).find(_._1.sameResult(plan))
-      } match {
-        case Some((_, cached)) => return cached
-        case None =>
-          val computed = trackCp(computeViolations(shape, focus, stack).localCheckpoint())
-          vioCache.synchronized {
-            vioCache(key) = (plan, computed) :: vioCache.getOrElse(key, Nil)
-          }
-          return computed
-      }
-    }
-    computeViolations(shape, focus, stack)
+    if (stack.nonEmpty && !cyclicShapeKeys.contains(shape.id.key))
+      memoized(("violations", shape.id.key, stack.length), focus)(
+        computeViolations(shape, focus, stack))
+    else computeViolations(shape, focus, stack)
   }
 
   private def computeViolations(shape: ShapeIR, focus: DataFrame,
                                 stack: List[(String, String)]): DataFrame = {
-    val V = trackCp(valueNodes(shape, focus).localCheckpoint()) // reused by most constraints
+    // reused by most constraints, and shared by every shape with the same
+    // path and focus: two parents of a shared sub-shape then hand it one
+    // focus plan, which the memo recognizes
+    val V = memoized(("values", shape.path), focus)(valueNodes(shape, focus))
     val parts = shape.constraints.map(evalConstraint(shape, focus, V, _, stack))
     if (parts.isEmpty) emptyViol else parts.reduce(_ unionByName _)
   }

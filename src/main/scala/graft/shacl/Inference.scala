@@ -1,8 +1,8 @@
 package graft.shacl
 
 import graft.rdf._
-import graft.rdf.TriplesDF.{keyTerm, termKey, termLit}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.rdf.TriplesDF.{TermRow, termKey, termLit}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** RDFS-subset closure over a triples DataFrame, mirroring the reference's
@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * Schema triples (subClassOf/subPropertyOf/domain/range) are collected to
   * the driver — ontology schemas stay small even when instance data is
-  * 100 TB — and pushed back in as broadcastable literal pair-tables, so the
-  * instance-scale work is three joins + a union, no fixpoint over big data:
+  * 100 TB — and pushed back in as broadcast pair tables (property IRIs and
+  * class term structs), so the instance-scale work is three joins + a
+  * union on the stored terms, no fixpoint over big data:
   *   rdfs7  (s,p,o) + p subPropertyOf* q       -> (s,q,o)
   *   rdfs2  (s,p,o) + domain(p,c)              -> (s,type,c)
   *   rdfs3  (s,p,o) + range(p,c), o not lit    -> (o,type,c)
@@ -54,7 +55,7 @@ object RdfsInference {
     val sc = transitive(pairs(RDFS.subClassOf))
     // only IRI properties can appear in predicate position
     val sp = transitive(pairs(RDFS.subPropertyOf)).collect { case (Iri(a), Iri(b)) => (a, b) }
-    def typing(pred: Iri) = pairs(pred).collect { case (Iri(p), c) => (p, c.key) }
+    def typing(pred: Iri) = pairs(pred).collect { case (Iri(p), c) => (p, TermRow.of(c)) }
     val dom = typing(RDFS.domain)
     val rng = typing(RDFS.range)
 
@@ -68,17 +69,17 @@ object RdfsInference {
     val withSuper = all
     if (dom.nonEmpty)
       parts += withSuper.join(broadcast(dom.toDF("_dp", "_dc")), $"p" === $"_dp")
-        .select($"s", lit(RDF.ty.value).as("p"), keyTerm($"_dc").as("o"))
+        .select($"s", lit(RDF.ty.value).as("p"), $"_dc".as("o"))
     if (rng.nonEmpty)
       parts += withSuper.join(broadcast(rng.toDF("_rp", "_rc")), $"p" === $"_rp")
         .filter($"o"("k") =!= 2)
-        .select($"o".as("s"), lit(RDF.ty.value).as("p"), keyTerm($"_rc").as("o"))
+        .select($"o".as("s"), lit(RDF.ty.value).as("p"), $"_rc".as("o"))
     if (sc.nonEmpty) {
       // rdfs9: type propagation up the class hierarchy
-      val scDF = sc.map { case (a, b) => (a.key, b.key) }.toDF("_csub", "_csup")
+      val scDF = sc.map { case (a, b) => (TermRow.of(a), TermRow.of(b)) }.toDF("_csub", "_csup")
       parts += all.filter($"p" === RDF.ty.value)
-        .join(broadcast(scDF), termKey($"o") === $"_csub")
-        .select($"s", lit(RDF.ty.value).as("p"), keyTerm($"_csup").as("o"))
+        .join(broadcast(scDF), $"o" === $"_csub")
+        .select($"s", lit(RDF.ty.value).as("p"), $"_csup".as("o"))
       // rdfs11: materialized transitive subClassOf triples, less those the
       // schema already holds (a later fixpoint round collects the closure
       // an earlier one materialized)
@@ -122,11 +123,13 @@ object RdfsInference {
   * the round's edges with themselves, so the reached distance doubles each
   * round. The loop ends at the first round that adds nothing, so a rule
   * whose input another rule derives fires in a later round, whatever the
-  * order; a round past the cap that still adds rows throws. The "false"
-  * rules that cannot materialize as triples surface through
-  * [[inconsistencies]] as a distributed diagnostics frame (the reference's
-  * owlrl library raises on them, including ill-typed literals via
-  * dt-not-type).
+  * order; a round past the cap that still adds rows throws. Every rule
+  * joins and replicates on the stored term structs; only cls-hv2's value
+  * and prp-ifp's object compare term keys, so a language tag matches in
+  * any case there, as in sh:hasValue. The "false" rules that cannot
+  * materialize as triples surface through [[inconsistencies]] as a
+  * distributed diagnostics frame (the reference's owlrl library raises on
+  * them, including ill-typed literals via dt-not-type).
   */
 object OwlRlInference {
   private val owlNs = "http://www.w3.org/2002/07/owl#"
@@ -153,7 +156,6 @@ object OwlRlInference {
   def expand(spark: SparkSession, df: DataFrame): DataFrame = {
     import spark.implicits._
     var out = df.distinct().localCheckpoint()
-    val inputParts = out.rdd.getNumPartitions
 
     // resolve RDF lists level-wise: one job per list depth, not per cell
     def resolveLists(heads: Seq[Node]): Map[Node, List[Node]] = {
@@ -251,141 +253,113 @@ object OwlRlInference {
 
       // classification, chains and functional-property sameAs
       val typeC = lit(RDF.ty.value).as("p")
+      // the subjects typed c, as column _i
+      def instances(c: Node) =
+        out.filter($"p" === RDF.ty.value && $"o" === termLit(c)).select($"s".as("_i"))
+      // one sameAs row per two distinct values sharing a key in d (the
+      // other direction comes from eq-sym in eq-rep)
+      def pairwiseSameAs(d: DataFrame, key: Column, value: Column) = {
+        val kv = d.select(key.as("_k"), value.as("_v")).distinct()
+        kv.join(kv.select($"_k".as("_k2"), $"_v".as("_v2")), $"_k" === $"_k2" && $"_v" < $"_v2")
+          .select($"_v".as("s"), lit(O("sameAs")).as("p"), $"_v2".as("o"))
+      }
       for ((r, c) <- svf; p <- onProp.get(r)) {
-        if (c == Iri(O("Thing")))
-          // cls-svf2: someValuesFrom owl:Thing — ANY value qualifies
-          derived += out.filter($"p" === p).select($"s", typeC, termLit(r).as("o"))
-        else {
-          val typed = out.filter($"p" === RDF.ty.value && termKey($"o") === c.key)
-            .select(termKey($"s").as("_tk")).distinct()
-          derived += out.filter($"p" === p)
-            .join(typed, termKey($"o") === $"_tk", "left_semi")
-            .select($"s", typeC, termLit(r).as("o"))
-        }
+        val withP = out.filter($"p" === p)
+        // cls-svf2: someValuesFrom owl:Thing — ANY value qualifies
+        val vals = if (c == Iri(O("Thing"))) withP
+          else withP.join(instances(c), $"o" === $"_i", "left_semi")
+        derived += vals.select($"s", typeC, termLit(r).as("o"))
       }
-      // cls-maxc2: maxCardinality 1 on typed subjects — all values of p
+      // cls-maxc2 / cls-maxqc3/4: all values of p on typed subjects
       // collapse into one individual via sameAs (literal values excluded,
-      // like prp-fp)
-      for (r <- maxC1; p <- onProp.get(r)) {
-        val typed = out.filter($"p" === RDF.ty.value && termKey($"o") === r.key)
-          .select(termKey($"s").as("_tk")).distinct()
-        val v1 = out.filter($"p" === p && $"o"("k") =!= 2)
-          .join(typed, termKey($"s") === $"_tk", "left_semi")
-          .select(termKey($"s").as("_k"), $"o").distinct()
-        val v2 = v1.select($"_k".as("_k2"), $"o".as("_o2"))
-        derived += v1.join(v2, $"_k" === $"_k2" && termKey($"o") < termKey($"_o2"))
-          .select($"o".as("s"), lit(O("sameAs")).as("p"), $"_o2".as("o"))
-      }
-      // cls-maxqc3/4: qualified cardinality 1 — values additionally
-      // filtered by onClass (owl:Thing or absent = unqualified, maxqc4)
-      for (r <- maxQC1; p <- onProp.get(r)) {
-        val typed = out.filter($"p" === RDF.ty.value && termKey($"o") === r.key)
-          .select(termKey($"s").as("_tk")).distinct()
-        var vals = out.filter($"p" === p && $"o"("k") =!= 2)
-          .join(typed, termKey($"s") === $"_tk", "left_semi")
-        onClass.get(r) match {
-          case Some(c) if c != Iri(O("Thing")) =>
-            val typedVal = out.filter($"p" === RDF.ty.value && termKey($"o") === c.key)
-              .select(termKey($"s").as("_vk")).distinct()
-            vals = vals.join(typedVal, termKey($"o") === $"_vk", "left_semi")
-          case _ =>
-        }
-        val v1 = vals.select(termKey($"s").as("_k"), $"o").distinct()
-        val v2 = v1.select($"_k".as("_k2"), $"o".as("_o2"))
-        derived += v1.join(v2, $"_k" === $"_k2" && termKey($"o") < termKey($"_o2"))
-          .select($"o".as("s"), lit(O("sameAs")).as("p"), $"_o2".as("o"))
+      // like prp-fp); a qualified restriction keeps only the values typed
+      // with its onClass (owl:Thing or absent = unqualified, maxqc4)
+      val maxC = maxC1.map(_ -> Option.empty[Node]) ++ maxQC1.map(r => r -> onClass.get(r))
+      for ((r, qual) <- maxC.distinct; p <- onProp.get(r)) {
+        val typed = out.filter($"p" === p && $"o"("k") =!= 2)
+          .join(instances(r), $"s" === $"_i", "left_semi")
+        val vals = qual.filter(_ != Iri(O("Thing")))
+          .fold(typed)(c => typed.join(instances(c), $"o" === $"_i", "left_semi"))
+        derived += pairwiseSameAs(vals, $"s", $"o")
       }
       for ((r, c) <- avf; p <- onProp.get(r)) {
-        val typed = out.filter($"p" === RDF.ty.value && termKey($"o") === r.key)
-          .select(termKey($"s").as("_tk")).distinct()
         derived += out.filter($"p" === p && $"o"("k") =!= 2)
-          .join(typed, termKey($"s") === $"_tk", "left_semi")
+          .join(instances(r), $"s" === $"_i", "left_semi")
           .select($"o".as("s"), typeC, termLit(c).as("o"))
       }
       for ((r, v) <- hv; p <- onProp.get(r)) {
-        val typed = out.filter($"p" === RDF.ty.value && termKey($"o") === r.key)
-        derived += typed.select($"s", lit(p).as("p"), termLit(v).as("o")) // cls-hv1
+        derived += instances(r).select($"_i".as("s"), lit(p).as("p"), termLit(v).as("o")) // cls-hv1
+        // cls-hv2 compares keys, so a language tag matches in any case
         derived += out.filter($"p" === p && termKey($"o") === v.key)
-          .select($"s", typeC, termLit(r).as("o")) // cls-hv2
+          .select($"s", typeC, termLit(r).as("o"))
       }
       for ((p, parts) <- chains) {
         var acc = out.filter($"p" === parts.head).select($"s", $"o")
         for (pi <- parts.tail) {
-          val step = out.filter($"p" === pi)
-            .select(termKey($"s").as("_jk"), $"o".as("_jo"))
-          acc = acc.join(step, termKey($"o") === $"_jk").select($"s", $"_jo".as("o"))
+          val step = out.filter($"p" === pi).select($"s".as("_js"), $"o".as("_jo"))
+          acc = acc.join(step, $"o" === $"_js").select($"s", $"_jo".as("o"))
         }
         derived += acc.select($"s", lit(p).as("p"), $"o")
       }
-      for (p <- fps) {
-        val tp = out.filter($"p" === p && $"o"("k") =!= 2)
-          .select(termKey($"s").as("_k"), $"o").distinct()
-        val tp2 = tp.select($"_k".as("_k2"), $"o".as("_o2"))
-        derived += tp.join(tp2, $"_k" === $"_k2" && termKey($"o") < termKey($"_o2"))
-          .select($"o".as("s"), lit(O("sameAs")).as("p"), $"_o2".as("o"))
-      }
-      for (p <- ifps) {
-        val tp = out.filter($"p" === p)
-          .select(termKey($"o").as("_k"), $"s").distinct()
-        val tp2 = tp.select($"_k".as("_k2"), $"s".as("_s2"))
-        derived += tp.join(tp2, $"_k" === $"_k2" && termKey($"s") < termKey($"_s2"))
-          .select($"s", lit(O("sameAs")).as("p"), $"_s2".as("o"))
-      }
+      for (p <- fps)
+        derived += pairwiseSameAs(out.filter($"p" === p && $"o"("k") =!= 2), $"s", $"o")
+      // prp-ifp keys on the object's key, so a language tag matches in any case
+      for (p <- ifps)
+        derived += pairwiseSameAs(out.filter($"p" === p), termKey($"o"), $"s")
       derived.toSeq
     }
 
     // eq-rep: owl:sameAs symmetric-transitive closure, then replicate every
     // statement onto ALL alias combinations in one pass — the (member,
-    // alias) pair table includes identity pairs, so joining it on BOTH the
+    // alias) term table includes identity pairs, so joining it on BOTH the
     // subject and the object yields the full fixpoint product (a triple
     // whose subject AND object are aliased gets every doubly-substituted
-    // variant; two single-pass derivations missed those).
+    // variant; two single-pass derivations missed those). An alias is a
+    // stored term, so a literal alias replicates as that literal.
     // Small alias sets (the corpora) come from a driver BFS + broadcast;
     // past DriverSameAsLimit edges, components run distributed through the
     // ConnectedComponents operator and the pair table stays a join.
     def eqRep(): Long = {
       val sameAsEdges = out.filter($"p" === O("sameAs"))
-        .select(termKey($"s").as("_src"), termKey($"o").as("_dst"))
+        .select($"s".as("_src"), $"o".as("_dst"))
         .filter($"_src" =!= $"_dst").distinct()
       val probe = sameAsEdges.limit(DriverSameAsLimit + 1).count()
       if (probe == 0) 0L else {
         val pairsDF: DataFrame =
           if (probe <= DriverSameAsLimit) {
-            val sameAs = sameAsEdges.collect().map(r => (r.getString(0), r.getString(1))).toSeq
-            val undirected = (sameAs ++ sameAs.map(x => (x._2, x._1))).distinct
+            val sameAs = sameAsEdges.collect().toSeq
+              .map(r => (TriplesDF.nodeOf(r.getStruct(0)), TriplesDF.nodeOf(r.getStruct(1))))
+            val undirected = (sameAs ++ sameAs.map(_.swap)).distinct
             val adj = undirected.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
-            val comp = scala.collection.mutable.Map.empty[String, Set[String]]
+            val comp = scala.collection.mutable.Map.empty[Node, Set[Node]]
             for (start <- adj.keys if !comp.contains(start)) {
-              val cluster = Closure.reach(Seq(start), adj.getOrElse(_: String, Nil))
+              val cluster = Closure.reach(Seq(start), adj.getOrElse(_: Node, Nil))
               cluster.foreach(m => comp(m) = cluster)
             }
-            broadcast(comp.toSeq.flatMap { case (m, cl) => cl.map(a => (m, a)) }
+            broadcast(comp.toSeq.flatMap { case (m, cl) => cl.map(a => (TermRow.of(m), TermRow.of(a))) }
               .toDF("_from", "_to"))
           } else {
-            // node ids via xxhash64 of the term key (collision odds negligible
-            // at any realistic identity-graph size); map back through the key
-            // table after the star-contraction converges
-            val nodes = sameAsEdges.select($"_src".as("_key"))
-              .unionByName(sameAsEdges.select($"_dst".as("_key"))).distinct()
-              .withColumn("id", xxhash64($"_key"))
+            // node ids via xxhash64 of the term (collision odds negligible
+            // at any realistic identity-graph size); map back through the
+            // term table after the star-contraction converges
+            val nodes = sameAsEdges.select($"_src".as("_term"))
+              .unionByName(sameAsEdges.select($"_dst".as("_term"))).distinct()
+              .withColumn("id", xxhash64($"_term"))
             val cc = graft.kg.ConnectedComponents.run(spark,
               sameAsEdges.select(xxhash64($"_src").as("src"), xxhash64($"_dst").as("dst")))
-            val assign = nodes.join(cc, "id").select($"_key", $"component")
-            assign.join(assign.select($"_key".as("_to"), $"component"), "component")
-              .select($"_key".as("_from"), $"_to")
+            val assign = nodes.join(cc, "id").select($"_term", $"component")
+            assign.join(assign.select($"_term".as("_to"), $"component"), "component")
+              .select($"_term".as("_from"), $"_to")
           }
         val subDF = pairsDF.select($"_from".as("_sfrom"), $"_to".as("_sto"))
         val objDF = pairsDF.select($"_from".as("_ofrom"), $"_to".as("_oto"))
         // only rows with an aliased term can be new: a row with neither
         // alias equals its original
         val (grown, n) = Closure.absorb(out, out
-          .join(subDF, termKey($"s") === $"_sfrom", "left")
-          .join(objDF, termKey($"o") === $"_ofrom", "left")
+          .join(subDF, $"s" === $"_sfrom", "left")
+          .join(objDF, $"o" === $"_ofrom", "left")
           .filter($"_sto".isNotNull || $"_oto".isNotNull)
-          .select(
-            when($"_sto".isNull, $"s").otherwise(keyTerm($"_sto")).as("s"),
-            $"p",
-            when($"_oto".isNull, $"o").otherwise(keyTerm($"_oto")).as("o")))
+          .select(coalesce($"_sto", $"s").as("s"), $"p", coalesce($"_oto", $"o").as("o")))
         out = grown
         n
       }
@@ -410,10 +384,7 @@ object OwlRlInference {
         throw new ReportableError(s"OWL-RL fixpoint did not converge within $MaxRounds " +
           "rounds; the closure would be incomplete.")
     }
-    // each growing round's absorb appends its new rows' partitions: merge
-    // them back to the deduplicated input's count before the validator's
-    // jobs scan the closure
-    if (out.rdd.getNumPartitions > inputParts) out.coalesce(inputParts) else out
+    out
   }
 
   /** OWL-RL INCONSISTENCY detection over a (closed) triples frame — the

@@ -1,9 +1,5 @@
 package graft.kg
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,36 +15,13 @@ class LineageSpec extends AnyFunSuite {
   private def tmpRoot(): String =
     java.nio.file.Files.createTempDirectory("lineage").toString
 
-  /** Jobs `body` starts on this thread (local properties tag them, so jobs
-    * of anything else running in the session are not counted). */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("lineage.spec.tag") == tag)) n.incrementAndGet()
-    }
-    ListenerDrain(sc)
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("lineage.spec.tag", tag)
-    try {
-      val out = body
-      ListenerDrain(sc)
-      (out, n.get())
-    } finally {
-      sc.setLocalProperty("lineage.spec.tag", null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   private def metricNames(root: String, stage: String): Seq[String] =
     spark.read.parquet(s"$root/_metrics").filter($"stage" === stage)
       .select($"metric").as[String].collect().toSeq.sorted
 
   test("a computed stage runs only its write, the lineage append and one metrics append") {
     val root = tmpRoot()
-    val (out, jobs) = jobsOf {
+    val (out, jobs) = TestSpark.countJobs {
       val lin = new Lineage(spark, root, "r")
       lin.stage("s", "ck", rows => Seq("extra" -> rows * 2.0))(spark.range(0, 1000, 1, 4).toDF())
     }
@@ -67,12 +40,12 @@ class LineageSpec extends AnyFunSuite {
     lin1.stage("s", "ck")(spark.range(0, 500, 1, 2).toDF())
     lin1.marker("m", "ck")(7L)
 
-    val (lin2, openJobs) = jobsOf(new Lineage(spark, root, "b"))
+    val (lin2, openJobs) = TestSpark.countJobs(new Lineage(spark, root, "b"))
     assert(openJobs == 1, s"opening a handle should read the lineage table in one job, got $openJobs")
     assert(lin2.rowsOf("s") == Some(500L) && lin2.rowsOf("m") == Some(7L))
     assert(lin2.isDone("s", "ck") && !lin2.isDone("s", "other"))
 
-    val (resumed, jobs) = jobsOf {
+    val (resumed, jobs) = TestSpark.countJobs {
       lin2.stage("s", "ck")(fail("a resumed stage must not evaluate its compute"))
     }
     // the parquet footer read that gives the output its schema, and the

@@ -185,25 +185,29 @@ class ClosureSpec extends AnyFunSuite {
     Closure.free(grown)
   }
 
+  test("absorb merges a grown graph back to its partition count, two at least") {
+    import spark.implicits._
+    val graph = (0 until 40).map(i => (s"a$i", "b")).toDF("s", "o").repartition(5).localCheckpoint()
+    val (grown, n) = Closure.absorb(graph, Seq(("c", "d"), ("e", "f")).toDF("s", "o"))
+    assert(n == 2 && grown.count() == 42)
+    assert(grown.rdd.getNumPartitions == 5)
+    Closure.free(grown)
+    // an empty graph has no partitions at all
+    val empty = Seq.empty[(String, String)].toDF("s", "o").localCheckpoint()
+    assert(empty.rdd.getNumPartitions == 0)
+    val (one, n1) = Closure.absorb(empty, Seq(("c", "d")).toDF("s", "o"))
+    assert(n1 == 1 && one.rdd.getNumPartitions <= 2)
+    assert(one.select("s", "o").as[(String, String)].collect().toSeq == Seq(("c", "d")))
+    Closure.free(one)
+    val single = Seq(("a", "b")).toDF("s", "o").coalesce(1).localCheckpoint()
+    val (two, _) = Closure.absorb(single, (0 until 20).map(i => (s"x$i", "y")).toDF("s", "o").repartition(3))
+    assert(two.rdd.getNumPartitions == 2)
+    Closure.free(two)
+  }
+
   test("under AQE a lazy localCheckpoint of a shuffling plan starts a job before any action") {
-    import org.apache.spark.ListenerDrain
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.functions.{col, count, lit}
-    val sc = spark.sparkContext
-    // jobs started on this thread while `body` runs
-    def jobsOf(body: => Unit): Int = {
-      val tag = java.util.UUID.randomUUID().toString
-      val n = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(_.getProperty("closure.spec.tag") == tag)) n.incrementAndGet()
-      }
-      ListenerDrain(sc)
-      sc.addSparkListener(listener)
-      sc.setLocalProperty("closure.spec.tag", tag)
-      try { body; ListenerDrain(sc); n.get() }
-      finally { sc.setLocalProperty("closure.spec.tag", null); sc.removeSparkListener(listener) }
-    }
+    def jobsOf(body: => Unit): Int = TestSpark.countJobs(body)._2
     def grouped() = spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).agg(count(lit(1)))
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     // AQE plans the query and runs its shuffle-map stages inside the call;

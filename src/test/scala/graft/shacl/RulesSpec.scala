@@ -69,6 +69,24 @@ class RulesSpec extends AnyFunSuite {
       Set(Iri("http://ex.org/b"), Iri("http://ex.org/c"), Iri("http://ex.org/d")))
   }
 
+  test("TripleRule: the iterated rule loop returns as many partitions as it was given") {
+    val ttl = prefixes + (0 until 7).map(i => s"ex:n$i ex:parent ex:n${i + 1} .").mkString("\n") +
+      """
+        |ex:S a sh:NodeShape ; sh:targetSubjectsOf ex:parent ;
+        |  sh:rule [ a sh:TripleRule ;
+        |    sh:subject sh:this ; sh:predicate ex:ancestor ; sh:object [ sh:path ex:parent ] ] ;
+        |  sh:rule [ a sh:TripleRule ;
+        |    sh:subject sh:this ; sh:predicate ex:ancestor ;
+        |    sh:object [ sh:path ( ex:parent ex:ancestor ) ] ] .
+        |""".stripMargin
+    val g = TurtleParser.parseGraph(ttl, "http://test/")
+    val in = TriplesDF.fromMemGraph(spark, g).repartition(8)
+    val out = RulesEngine.expand(spark, in, g, iterateRules = true)
+    // 8 nodes in a chain: 7 + 6 + ... + 1 ancestor pairs
+    assert(out.filter(org.apache.spark.sql.functions.col("p") === "http://ex.org/ancestor").count() == 28)
+    assert(out.rdd.getNumPartitions == 8)
+  }
+
   test("TripleRule: without iterateRules a higher sh:order rule reads a lower-order rule's output") {
     // listed first but ordered second: ex:r2 exists only if the second
     // rule sees the graph the first one grew in the same pass
